@@ -21,11 +21,12 @@ semantics are pytest-verified against hdstats_oracle instead.
 
 from __future__ import annotations
 
-import weakref
+import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import materialize
 from .schema import CHANNELS
 
 # ---------------------------------------------------------------- helpers
@@ -37,27 +38,25 @@ EVENT_CHANNELS = tuple(f"cnt_{t}" for t in EVENT_TYPES) + ("v_sum", "v_max", "n_
 STOPWORDS = ("the", "a", "of", "and", "key", "value")
 
 
-# lazy base-table readers memoized per live session: each
-# DataFrameReader.parquet() costs ~30 ms of driver-side listing + footer
-# schema inference, and a bench pass issues ~200 _t calls over the same
-# handful of immutable paths.  The memo holds only UNEXECUTED reader
-# plans — every action still scans the parquet files — and is keyed on
-# the session object itself (weakly, so a stopped session's entries die
-# with it rather than leaking plans across sessions).
-_t_memo: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    per_session = _t_memo.get(spark)
-    if per_session is None:
-        per_session = _t_memo[spark] = {}
-    df = per_session.get(path)
-    if df is None:
-        df = per_session[path] = spark.read.parquet(path)
-    return df
+    return materialize.table(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _events_cached(build):
+    """Decorator for a shared intermediate over the events table: calls of
+    ``build(spark, sf_dir, *args)`` return its DataFrame cached, built once
+    per session, arguments and events-file state by the registry."""
+
+    @functools.wraps(build)
+    def lookup(spark, sf_dir, *args):
+        return materialize.cached(
+            spark,
+            (build.__name__, sf_dir, *args),
+            [f"{sf_dir}/events.parquet"],
+            lambda: build(spark, sf_dir, *args),
+        )
+
+    return lookup
 
 
 def _r6(c):
@@ -66,7 +65,21 @@ def _r6(c):
 
 def _event_buckets(spark, sf_dir, unit="hour") -> DataFrame:
     """events → (user_id, bucket, channel vector) — the events-table analogue
-    of rollup_raw."""
+    of rollup_raw.  The hourly tier is the shared base of seven queries (the
+    dense tiers, mad_vs_centroid, dist_to_centroid, derived-measure and
+    fixed-grid mirrors): in the production engine it is a materialized
+    rollup tier; here the registry holds it cached."""
+    if unit == "hour":
+        return _event_buckets_1h(spark, sf_dir)
+    return _bucket_vectors(spark, sf_dir, unit)
+
+
+@_events_cached
+def _event_buckets_1h(spark, sf_dir):
+    return _bucket_vectors(spark, sf_dir, "hour")
+
+
+def _bucket_vectors(spark, sf_dir, unit):
     ev = _t(spark, sf_dir, "events")
     aggs = [
         F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(f"cnt_{t}")
@@ -77,15 +90,7 @@ def _event_buckets(spark, sf_dir, unit="hour") -> DataFrame:
         F.max("value").alias("v_max"),
         F.count(F.lit(1)).alias("n_events"),
     ]
-    out = ev.groupBy("user_id", F.date_trunc(unit, "ts").alias("bucket")).agg(*aggs)
-    if unit == "hour":
-        # the hourly bucket tier is the shared base of seven queries (the
-        # dense tiers, mad_vs_centroid, dist_to_centroid, derived-measure
-        # and fixed-grid mirrors): in the production engine it is a
-        # materialized rollup tier; .cache() plays that role and the
-        # CacheManager dedupes the identical plan across queries
-        out = out.cache()
-    return out
+    return ev.groupBy("user_id", F.date_trunc(unit, "ts").alias("bucket")).agg(*aggs)
 
 
 _EVENT_BUCKETS_SQL = """
@@ -133,24 +138,27 @@ def _rollup_sums(spark, sf_dir, unit):
     """Engine-style composable rollup (sums only) at the given unit — built by
     CASCADING from the minute tier, which is what the oracle's direct GROUP BY
     must equal (retention-tier invariant)."""
-    ev = _t(spark, sf_dir, "events")
-    t1m = ev.groupBy("user_id", F.date_trunc("minute", "ts").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("v_sum"),
-        F.min("value").alias("v_min"),
-        F.max("value").alias("v_max"),
-    )
-    # the minute tier IS the engine's materialized base rollup tier (the
-    # same rationale as _event_buckets' hourly cache): both cascade units
-    # fold from this identical plan, and the CacheManager dedupes it, so
-    # the 1h and 1d cascades share one materialization instead of each
-    # re-aggregating the raw events
-    t1m = t1m.cache()
+    t1m = _minute_sums(spark, sf_dir)
     return t1m.groupBy("user_id", F.date_trunc(unit, "bucket").alias("bucket")).agg(
         F.sum("n_events").alias("n_events"),
         _r6(F.sum("v_sum")).alias("v_sum"),
         _r6(F.min("v_min")).alias("v_min"),
         _r6(F.max("v_max")).alias("v_max"),
+    )
+
+
+@_events_cached
+def _minute_sums(spark, sf_dir):
+    """The minute tier IS the engine's materialized base rollup tier (the
+    same rationale as the hourly bucket tier): the registry holds it
+    cached, so the 1h and 1d cascades share one materialization instead
+    of each re-aggregating the raw events."""
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("user_id", F.date_trunc("minute", "ts").alias("bucket")).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("v_sum"),
+        F.min("value").alias("v_min"),
+        F.max("value").alias("v_max"),
     )
 
 
@@ -200,6 +208,7 @@ FROM b
 """
 
 
+@_events_cached
 def _gapfill_ff(spark, sf_dir):
     """Cached forward-filled series (completion phase 1, tsslow.py:11-17)
     — the shared sub-plan of gapfill_locf (which rounds it) and
@@ -216,7 +225,7 @@ def _gapfill_ff(spark, sf_dir):
     v = F.when(F.col("event_type") != "error", F.col("value"))
     return ev.select(
         "event_id", "user_id", F.last(v, ignorenulls=True).over(w).alias("_ff")
-    ).cache()
+    )
 
 
 def q_gapfill_locf(spark, sf_dir):
@@ -266,6 +275,7 @@ FROM ff
 
 # ---------------------------------------------------------------- change features
 
+@_events_cached
 def _hourly_mean(spark, sf_dir):
     """Cached per-user hourly MEAN series — the shared input of
     change_features and complexity (the same materialized-rollup
@@ -275,7 +285,6 @@ def _hourly_mean(spark, sf_dir):
         _t(spark, sf_dir, "events")
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket"))
         .agg(F.avg("value").alias("v"))
-        .cache()
     )
 
 
@@ -1056,11 +1065,12 @@ def _parquet_rows(path):
 
 def _parquet_col_max(path, col):
     """Exact column max of a parquet file-or-dir from FOOTER row-group
-    statistics — zero Spark jobs.  Parquet min/max stats are exact for
-    integer/float physical types (no truncation, unlike strings), so when
+    statistics — zero Spark jobs.  Only INT32/INT64 columns qualify:
+    their min/max stats are exact (strings may be truncated, and float
+    stats follow NaN/-0.0 rules that differ from Spark's max), so when
     every non-empty row group carries them the result equals
     ``agg(max(col))``.  Returns None (caller falls back to the Spark job)
-    if any row group lacks the statistic."""
+    for any other physical type or if any row group lacks the statistic."""
     import os
 
     import pyarrow.parquet as pq
@@ -1082,7 +1092,10 @@ def _parquet_col_max(path, col):
             rg = md.row_group(g)
             if rg.num_rows == 0:
                 continue
-            st = rg.column(ci).statistics
+            cc = rg.column(ci)
+            if cc.physical_type not in ("INT32", "INT64"):
+                return None
+            st = cc.statistics
             if st is None or not st.has_min_max:
                 return None
             best = st.max if best is None else max(best, st.max)
@@ -1468,10 +1481,10 @@ def q_symmetry(spark, sf_dir):
     series' time-mean channel vector and its geomedian composite (rows-only;
     the gm is non-SQL-expressible)."""
     from .operators.kernels import symmetry_agg
-    from .operators.series import geomedian_mads_flat
+    from .operators.series import geomedian_mads_prepared
 
     dense, chans = _dense_event_series(spark, sf_dir)
-    gm = geomedian_mads_flat(dense, chans, with_mads=False, cache_prepared=True)
+    gm = geomedian_mads_prepared(_gm_prepared(spark, sf_dir), chans, with_mads=False)
     return symmetry_agg(dense, gm.drop("n"), chans)
 
 
@@ -1481,6 +1494,16 @@ def q_symmetry(spark, sf_dir):
 # (tests/test_kernels_spark.py, tests/test_kernels_batched.py).
 
 def _dense_event_series(spark, sf_dir):
+    return _dense_tier(spark, sf_dir), list(EVENT_CHANNELS)
+
+
+@_events_cached
+def _dense_tier(spark, sf_dir):
+    """The dense gap-filled tier, the shared input of every series kernel —
+    in the production engine it is a materialized retention-tier table
+    (TierPipeline); here the registry holds it cached, so the kernel
+    queries materialize the densify+completion windows ONCE per session
+    and reuse one DataFrame instead of re-planning it per query."""
     from .operators.gapfill import completion, densify
 
     tier = (
@@ -1489,33 +1512,40 @@ def _dense_event_series(spark, sf_dir):
         .drop("user_id")
     )
     chans = list(EVENT_CHANNELS)
-    # The dense gap-filled tier is the shared input of every series kernel —
-    # in the production engine it is a materialized retention-tier table
-    # (TierPipeline); here .cache() plays that role: Spark's CacheManager
-    # dedupes by logical plan, so the six kernel queries materialize the
-    # densify+completion windows ONCE per session instead of once per query.
-    return completion(densify(tier, "1h", chans), chans).cache(), chans
+    return completion(densify(tier, "1h", chans), chans)
 
 
+@_events_cached
 def _series_events(spark, sf_dir):
     """Cached one-row-per-series table (value col ``n_events``) over the
     completion-filled dense tier — shared input of fourier_features,
     discordance, dtw_area, area_warp, dtw_path and number_peaks.  Each of
     those queries used to rebuild the identical groupBy+collect_list plan
-    (~0.5 s of shuffle+object churn apiece at sf0.1); .cache() dedupes it
-    through the CacheManager exactly like the dense tier itself."""
+    (~0.5 s of shuffle+object churn apiece at sf0.1); the registry holds
+    it once per session, like the dense tier itself."""
     from .operators.series import series_table
 
-    dense, _ = _dense_event_series(spark, sf_dir)
-    return series_table(dense, ["n_events"]).cache()
+    return series_table(_dense_tier(spark, sf_dir), ["n_events"])
 
 
+@_events_cached
 def _series0_events(spark, sf_dir):
     """Cached series table over the ZERO-filled tier (the dtw_diag /
     dtw_diag_path / discordance_lp_identity integer-exact grid)."""
     from .operators.series import series_table
 
-    return series_table(_dense0_event_series(spark, sf_dir), ["n_events"]).cache()
+    return series_table(_dense0_event_series(spark, sf_dir), ["n_events"])
+
+
+@_events_cached
+def _gm_prepared(spark, sf_dir):
+    """Cached flat composite input over the dense tier (hash-partitioned,
+    within-partition-sorted — the expensive prefix of geomedian_mads_flat,
+    ~1M-row exchange + Tungsten sort at sf0.1): the with-MADs composite
+    (q_geomedian_mads) and the gm-only pass symmetry needs share ONE sort."""
+    from .operators.series import prepare_flat
+
+    return prepare_flat(*_dense_event_series(spark, sf_dir))
 
 
 def q_geomedian_mads(spark, sf_dir):
@@ -1523,10 +1553,9 @@ def q_geomedian_mads(spark, sf_dir):
     aggregate (geomedian.pyx:472-517, geomad.pyx:200-350) — the flat
     zero-copy mapInArrow path (no collect_list; the composite-tier build
     path at 10^6+ series, bit-identical to the series_table variant)."""
-    from .operators.series import geomedian_mads_flat
+    from .operators.series import geomedian_mads_prepared
 
-    dense, chans = _dense_event_series(spark, sf_dir)
-    return geomedian_mads_flat(dense, chans, cache_prepared=True)
+    return geomedian_mads_prepared(_gm_prepared(spark, sf_dir), EVENT_CHANNELS)
 
 
 def q_fourier_features(spark, sf_dir):
@@ -1566,20 +1595,25 @@ def q_discordance(spark, sf_dir):
     return discordance_batched(st, "n_events", area_lp, n=n)
 
 
-def _area_median_curve(dense, value_col):
+@_events_cached
+def _area_median(spark, sf_dir, zero_filled):
+    """Per-t median of ``n_events`` over the completion-filled (or the
+    zero-filled) dense tier.  The O(max series length) aggregate is shared
+    by every area-referenced kernel query (dtw_area, area_warp, dtw_path on
+    the completion tier; dtw_diag/dtw_diag_path on the zero-filled tier)
+    and, through the CacheManager's plan match, by area_l1_to_median's join
+    side: the registry holds it cached once per tier."""
+    dense = _dense0_event_series(spark, sf_dir) if zero_filled else _dense_tier(spark, sf_dir)
+    return dense.groupBy("t").agg(
+        F.expr("percentile(cast(n_events as double), 0.5)").alias("mv")
+    )
+
+
+def _area_median_curve(spark, sf_dir, zero_filled=False):
+    """``_area_median`` as a float64 curve: a ~10³-row fetch off the cache."""
     import numpy as np
 
-    # the O(max series length) per-t median aggregate is shared by every
-    # area-referenced kernel query (dtw_area, area_warp, dtw_path on the
-    # completion tier; dtw_diag/dtw_diag_path on the zero-filled tier) and
-    # by area_l1_to_median's join side: .cache() dedupes the aggregation by
-    # logical plan through the CacheManager — same pattern as the dense
-    # tier itself — so each bench run computes it once per tier, and the
-    # per-query collect is a ~10³-row fetch off the cached table
-    agg = dense.groupBy("t").agg(
-        F.expr(f"percentile(cast({value_col} as double), 0.5)").alias("mv")
-    ).cache()
-    rows = agg.orderBy("t").collect()
+    rows = _area_median(spark, sf_dir, zero_filled).orderBy("t").collect()
     return np.asarray([r["mv"] for r in rows], dtype=np.float64)
 
 
@@ -1588,8 +1622,7 @@ def q_dtw_area(spark, sf_dir):
     curve (dtw.pyx:35-53), batched wavefront kernel."""
     from .operators.series import dtw_area_batched
 
-    dense, _ = _dense_event_series(spark, sf_dir)
-    ref = _area_median_curve(dense, "n_events")
+    ref = _area_median_curve(spark, sf_dir)
     st = _series_events(spark, sf_dir)
     return dtw_area_batched(st, "n_events", ref, window=8)
 
@@ -1645,14 +1678,15 @@ FROM comp JOIN med USING (t) GROUP BY comp.user_id
 """
 
 
+@_events_cached
 def _dense0_event_series(spark, sf_dir):
     """Zero-filled (not completion-filled) hourly tier — the integer grid
     the dtw_diag exactness argument needs.  r3 measured the cache both ways
     with TWO consumers (dtw_diag, dtw_diag_path) and left it uncached; r4
     added two more (discordance_lp_identity, fourier_const_bands — the
     latter reads it twice via the twin union), so the ~1.5 s prep now
-    repays materialization: .cache() here dedupes by logical plan through
-    Spark's CacheManager, exactly like the completion-filled dense tier."""
+    repays materialization: the registry holds it cached, exactly like the
+    completion-filled dense tier."""
     from .operators.gapfill import densify
 
     tier = (
@@ -1662,7 +1696,7 @@ def _dense0_event_series(spark, sf_dir):
     )
     return densify(tier, "1h", ["n_events"]).withColumn(
         "n_events", F.coalesce(F.col("n_events").cast("double"), F.lit(0.0))
-    ).cache()
+    )
 
 
 def q_dtw_diag(spark, sf_dir):
@@ -1679,8 +1713,7 @@ def q_dtw_diag(spark, sf_dir):
     one inexact f32 division."""
     from .operators.series import dtw_area_batched
 
-    dense0 = _dense0_event_series(spark, sf_dir)
-    ref = _area_median_curve(dense0, "n_events")
+    ref = _area_median_curve(spark, sf_dir, zero_filled=True)
     st = _series0_events(spark, sf_dir)
     d = dtw_area_batched(st, "n_events", ref, window=0)
     lens = st.select(F.col("conv_id"), F.col("n"))
@@ -1731,8 +1764,7 @@ def q_dtw_diag_path(spark, sf_dir):
     from .kernels_np import dtw_path_batch
     from .operators.series import _padded_stack
 
-    dense0 = _dense0_event_series(spark, sf_dir)
-    ref = _area_median_curve(dense0, "n_events")
+    ref = _area_median_curve(spark, sf_dir, zero_filled=True)
     st = _series0_events(spark, sf_dir)
     sc = spark.sparkContext
     bref = sc.broadcast(ref)
@@ -2397,8 +2429,7 @@ def q_area_warp(spark, sf_dir):
     series and area-median enter DTW as single n-dim points → L1/2."""
     from .operators.series import dtw_area_batched
 
-    dense, _ = _dense_event_series(spark, sf_dir)
-    ref = _area_median_curve(dense, "n_events")
+    ref = _area_median_curve(spark, sf_dir)
     st = _series_events(spark, sf_dir)
     return dtw_area_batched(st, "n_events", ref, l1_mode=True)
 
@@ -2681,8 +2712,7 @@ def q_dtw_path(spark, sf_dir):
     from .kernels_np import dtw_path_batch
     from .operators.series import _padded_stack
 
-    dense, _ = _dense_event_series(spark, sf_dir)
-    ref = _area_median_curve(dense, "n_events")
+    ref = _area_median_curve(spark, sf_dir)
     st = _series_events(spark, sf_dir)
     sc = spark.sparkContext
     bref = sc.broadcast(ref)

@@ -59,7 +59,11 @@ def _swap_cache(key: str, df: DataFrame) -> DataFrame:
             # table), keep the already-warm cache instead of dropping and
             # refilling it: unpersist-then-recache discards the
             # materialized blocks and pays the full recompute on the next
-            # action for zero correctness benefit
+            # action for zero correctness benefit.  ``_jdf`` and
+            # ``queryExecution().analyzed().sameResult`` are private
+            # PySpark/Catalyst API, checked against pyspark 4.1.x only;
+            # if they fail, the predecessor counts as different and is
+            # unpersisted and recached (slower, never wrong)
             try:
                 if (
                     prev.sparkSession is df.sparkSession

@@ -385,17 +385,10 @@ def geomedian_mads_flat(
     with_mads: bool = True,
     key_col: str = "conv_id",
     order_col: str = "bucket",
-    cache_prepared: bool = False,
 ) -> DataFrame:
     """Flagship composite over FLAT tier rows — the many-tiny-series fast
-    path (composite tier at 10^6-10^9 conversations).
-
-    ``cache_prepared=True`` caches the hash-partitioned, within-partition-
-    sorted flat input (the expensive prefix — ~1M-row exchange + Tungsten
-    sort at sf0.1) through the CacheManager, so the with-MADs composite
-    (q_geomedian_mads) and the gm-only pass symmetry needs share ONE
-    sort instead of re-running it per query — same plan-dedup pattern as
-    the dense tier itself.
+    path (composite tier at 10^6-10^9 conversations):
+    ``geomedian_mads_prepared(prepare_flat(tier_df, ...), ...)``.
 
     ``series_table`` (collect_list of structs) costs ~20 JVM core-seconds per
     million rows in object churn; this variant instead hash-partitions by the
@@ -408,17 +401,23 @@ def geomedian_mads_flat(
     mapInArrow iterator, and hash partitioning keeps each series in exactly
     one partition.
     """
-    import pyarrow as pa
+    prepared = prepare_flat(tier_df, channels, key_col, order_col)
+    return geomedian_mads_prepared(prepared, channels, eps, maxiters, with_mads, key_col)
 
+
+def prepare_flat(
+    tier_df: DataFrame,
+    channels: Sequence[str] = CHANNELS,
+    key_col: str = "conv_id",
+    order_col: str = "bucket",
+) -> DataFrame:
+    """The flat composite's input: ``key_col`` + float channels,
+    hash-partitioned by the series key and sorted within partitions by
+    (key, order) — the expensive prefix of ``geomedian_mads_flat``, which
+    a caller may cache to share between several composites."""
     chans = list(channels)
-    fields = [f"{key_col} string", "n int"] + [f"gm_{c} float" for c in chans]
-    if with_mads:
-        fields += ["emad float", "smad float", "bcmad float"]
-    schema = ", ".join(fields)
-
-    sc = tier_df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    prepared = (
+    par = tier_df.sparkSession.sparkContext.defaultParallelism
+    return (
         tier_df.select(
             key_col,
             order_col,
@@ -431,8 +430,25 @@ def geomedian_mads_flat(
         # 8 bytes/row through the Arrow boundary (~80 MB at 10M rows)
         .select(key_col, *chans)
     )
-    if cache_prepared:
-        prepared = prepared.cache()
+
+
+def geomedian_mads_prepared(
+    prepared: DataFrame,
+    channels: Sequence[str] = CHANNELS,
+    eps: float = 1e-7,
+    maxiters: int = 1000,
+    with_mads: bool = True,
+    key_col: str = "conv_id",
+) -> DataFrame:
+    """The flat composite's kernel over ``prepare_flat``'s output (see
+    ``geomedian_mads_flat``)."""
+    import pyarrow as pa
+
+    chans = list(channels)
+    fields = [f"{key_col} string", "n int"] + [f"gm_{c} float" for c in chans]
+    if with_mads:
+        fields += ["emad float", "smad float", "bcmad float"]
+    schema = ", ".join(fields)
 
     def gen(batches):
         carry = None  # trailing partial group: dict of arrays

@@ -50,7 +50,7 @@ def test_no_hash_proxy_in_flat_paths():
     from hdstats_spark.compression import tiercodec
     from hdstats_spark.operators import series
 
-    for fn in (series.geomedian_mads_flat, tiercodec.compress_tier_flat):
+    for fn in (series.geomedian_mads_prepared, tiercodec.compress_tier_flat):
         src = inspect.getsource(fn)
         assert "xxhash64" not in src, f"{fn.__name__} still hashes the key"
         assert "key_change_mask" in src
