@@ -1,15 +1,16 @@
-"""Tier-table block compression: long-format tier rows ⇄ per-series
+"""Tier-table block compression: long-format tier rows ⇄ multi-series
 compressed blocks.
 
-A block row is one conversation's series: delta-of-delta-encoded bucket
-timestamps + one Gorilla-XOR-encoded blob per channel.  Encode and decode are
-mapInPandas over series rows; inside each call the codec work is vectorized
-NumPy per series (gorilla.py) — the only Python loop is over series blocks,
-never over data points.
+A block row holds the series of one Arrow batch: their conv_ids and
+lengths, one delta-of-delta-encoded blob of bucket timestamps, and one
+Gorilla-XOR-encoded blob per channel.  Encode is one mapInArrow pass over
+key-partitioned, key-sorted rows; decode is one mapInPandas pass.  The codec
+work is vectorized NumPy (gorilla.py): no Python loop over series or data
+points on encode, one loop over blocks on decode.
 
-This is the storage format for cold retention tiers: the 1m tier of a
-10^12-turn corpus shrinks ~5-30× (timestamps ~30×, smooth channels ~2-10×)
-and decompression is a single XOR prefix scan per channel.
+The codec is on no write path: TierPipeline writes plain parquet, and only
+the ``compression_roundtrip`` query leaf runs it.  On the sf0.1 1m tier the
+blocks take 2.50 MB against 0.92 MB for parquet+zstd (ROADMAP.md).
 """
 
 from __future__ import annotations
@@ -50,43 +51,11 @@ def _ts_decode_us(blob: bytes) -> np.ndarray:
     if b[:2] != _TS_MAGIC:
         raise ValueError(
             "unversioned ts_blob (pre-µs epoch-seconds format): re-encode "
-            "with compress_tier/compress_tier_flat — refusing to decode as "
-            "microseconds"
+            "with compress_tier_flat — refusing to decode as microseconds"
         )
     if b[2] != _TS_VER_US:
         raise ValueError(f"unsupported ts_blob version {b[2]}")
     return decode_dod_timestamps(b[3:])
-
-
-def compress_tier(series_df: DataFrame, channels: Sequence[str] = CHANNELS) -> DataFrame:
-    """series_table output → block rows
-    (conv_id, n, ts_blob, <channel>_blob …)."""
-    chans = list(channels)
-    schema = "conv_id string, n int, ts_blob binary, " + ", ".join(
-        f"{c}_blob binary" for c in chans
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            out = {
-                "conv_id": pdf["conv_id"],
-                "n": pdf["n"].astype("int32"),
-                # microsecond epoch: lossless for sub-second timestamps (the
-                # old //1_000_000 silently truncated them)
-                "ts_blob": [
-                    _ts_encode_us(
-                        np.asarray(b, dtype="datetime64[us]").astype("int64")
-                    )
-                    for b in pdf["buckets"]
-                ],
-            }
-            for c in chans:
-                out[f"{c}_blob"] = [
-                    encode_xor_floats(np.asarray(v, dtype=np.float64)) for v in pdf[c]
-                ]
-            yield pd.DataFrame(out)
-
-    return series_df.mapInPandas(gen, schema)
 
 
 def compress_tier_flat(
@@ -97,10 +66,9 @@ def compress_tier_flat(
 ) -> DataFrame:
     """FLAT tier rows → multi-series block rows, with ZERO per-series Python.
 
-    The per-series variant (compress_tier) pays a collect_list shuffle plus
-    one encode call per channel per series (~10^4+ NumPy dispatches per
-    million series).  Here rows are hash-partitioned on the series key and
-    Tungsten-sorted by (key, bucket); each Arrow batch becomes ONE block:
+    No collect_list shuffle and no encode call per series: rows are
+    hash-partitioned on the series key and Tungsten-sorted by
+    (key, bucket); each Arrow batch becomes ONE block:
     the whole batch's values are encoded in a single vectorized pass per
     channel (the XOR / delta-of-delta chains simply run across series
     boundaries — the boundary element falls back to the wide descriptor,
@@ -179,34 +147,5 @@ def decompress_tier_flat(
                 for c in chans:
                     out[c] = decode_xor_floats(pdf[f"{c}_blob"].iloc[i])
                 yield pd.DataFrame(out)
-
-    return blocks_df.mapInPandas(gen, schema)
-
-
-def decompress_tier(blocks_df: DataFrame, channels: Sequence[str] = CHANNELS) -> DataFrame:
-    """Block rows → long-format tier rows (conv_id, bucket, channels…),
-    rebuilt with vectorized repeat/concat (no per-point Python)."""
-    chans = list(channels)
-    schema = "conv_id string, bucket timestamp, " + ", ".join(f"{c} double" for c in chans)
-
-    def gen(batches):
-        for pdf in batches:
-            ids, buckets = [], []
-            vals: dict[str, list] = {c: [] for c in chans}
-            for i in range(len(pdf)):
-                ts = _ts_decode_us(pdf["ts_blob"].iloc[i])
-                ids.append(np.repeat(pdf["conv_id"].iloc[i], len(ts)))
-                buckets.append(ts)
-                for c in chans:
-                    vals[c].append(decode_xor_floats(pdf[f"{c}_blob"].iloc[i]))
-            if not ids:
-                continue
-            out = {
-                "conv_id": np.concatenate(ids),
-                "bucket": pd.to_datetime(np.concatenate(buckets), unit="us", utc=True),
-            }
-            for c in chans:
-                out[c] = np.concatenate(vals[c])
-            yield pd.DataFrame(out)
 
     return blocks_df.mapInPandas(gen, schema)

@@ -184,8 +184,8 @@ FROM events GROUP BY 1, 2
 # ---------------------------------------------------------------- gap-fill
 
 def q_derived_measures(spark, sf_dir):
-    """Query-time derived measures recomputed from tier sums (rollup.py
-    with_derived semantics: means/rates are never stored, always derived):
+    """Query-time derived measures recomputed from tier sums (means/rates
+    are never stored, always derived):
     events-per-minute rate and value-per-event over the hourly tier."""
     b = _event_buckets(spark, sf_dir, "hour")
     return b.select(
@@ -1480,7 +1480,7 @@ def q_symmetry(spark, sf_dir):
     """Reference ``symmetry`` (ts.pyx:231-243): cosine distance between each
     series' time-mean channel vector and its geomedian composite (rows-only;
     the gm is non-SQL-expressible)."""
-    from .operators.kernels import symmetry_agg
+    from .operators.features import symmetry_agg
     from .operators.series import geomedian_mads_prepared
 
     dense, chans = _dense_event_series(spark, sf_dir)
@@ -1490,8 +1490,8 @@ def q_symmetry(spark, sf_dir):
 
 # ------------------------------------------------- kernel aggregates (rows-only)
 # Non-SQL-expressible reference kernels: the driver records rows-only checks;
-# exact semantics are pytest-verified against hdstats_oracle
-# (tests/test_kernels_spark.py, tests/test_kernels_batched.py).
+# exact semantics are pytest-verified against hdstats_oracle at Spark level
+# (tests/test_kernels_spark.py) and per batch (tests/test_kernels_batched.py).
 
 def _dense_event_series(spark, sf_dir):
     return _dense_tier(spark, sf_dir), list(EVENT_CHANNELS)
@@ -1552,7 +1552,8 @@ def q_geomedian_mads(spark, sf_dir):
     """Flagship: nangeomedian_pcm + MAD trio as one batched continuous
     aggregate (geomedian.pyx:472-517, geomad.pyx:200-350) — the flat
     zero-copy mapInArrow path (no collect_list; the composite-tier build
-    path at 10^6+ series, bit-identical to the series_table variant)."""
+    path at 10^6+ series; it and the series_table variant are each
+    pytest-checked against hdstats_oracle)."""
     from .operators.series import geomedian_mads_prepared
 
     return geomedian_mads_prepared(_gm_prepared(spark, sf_dir), EVENT_CHANNELS)
@@ -1560,9 +1561,9 @@ def q_geomedian_mads(spark, sf_dir):
 
 def q_fourier_features(spark, sf_dir):
     """fourier_mean/std/median bands (ts.pyx:159-192) of the hourly event
-    rate per user — batched length-class FFT over the series table (the
-    per-group applyInPandas variant survives in operators/kernels for
-    reference parity; this is the plan you'd run at 10^6+ series)."""
+    rate per user — batched length-class FFT over the series table, the
+    engine's only Spark path for these bands (pytest-pinned to
+    hdstats_oracle)."""
     from .operators.series import fourier_features_batched
 
     st = _series_events(spark, sf_dir)

@@ -10,13 +10,19 @@ run JVM-side inside whole-stage codegen — no Python in the hot path:
   * complexity        = Σ z'² of the z-normalized series (population σ,
                         ts.pyx:212-219)
 
-All share one window spec → one shuffle on the series key.
+All share one window spec → one shuffle on the series key.  ``symmetry``
+(ts.pyx:231-243) is the same kind of kernel: per-channel means, an
+equi-join onto the geomedian composite and cosine arithmetic.
 """
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..schema import CHANNELS
 
 
 def change_features(
@@ -74,4 +80,35 @@ def complexity(
         df.select(key_col, d.alias("_d"))
         .groupBy(key_col)
         .agg(F.sum(F.col("_d") * F.col("_d")).alias("complexity"))
+    )
+
+
+def symmetry_agg(
+    tier_df: DataFrame,
+    gm_df: DataFrame,
+    channels: Sequence[str] = CHANNELS,
+) -> DataFrame:
+    """Reference ``symmetry`` (ts.pyx:231-243): cosine distance between each
+    conversation's time-mean channel vector and its geomedian composite.
+    Pure built-in expressions: per-channel avg, equi-join, arithmetic.
+
+    The gm join is UNHINTED: the composite has one row per conversation, so
+    a forced broadcast grows linearly with the corpus; both sides are keyed
+    on conv_id, so a shuffled join co-partitions, and AQE still broadcasts
+    when small."""
+    means = tier_df.groupBy("conv_id").agg(
+        *[F.avg(F.col(c).cast("float")).alias(f"mm_{c}") for c in channels]
+    )
+    j = means.join(gm_df, "conv_id")
+    numer = sum((F.col(f"mm_{c}") * F.col(f"gm_{c}") for c in channels[1:]),
+                F.col(f"mm_{channels[0]}") * F.col(f"gm_{channels[0]}"))
+    norma = sum((F.col(f"mm_{c}") * F.col(f"mm_{c}") for c in channels[1:]),
+                F.col(f"mm_{channels[0]}") * F.col(f"mm_{channels[0]}"))
+    normb = sum((F.col(f"gm_{c}") * F.col(f"gm_{c}") for c in channels[1:]),
+                F.col(f"gm_{channels[0]}") * F.col(f"gm_{channels[0]}"))
+    return j.select(
+        "conv_id",
+        (F.lit(1.0) - F.try_divide(numer, F.sqrt(norma) * F.sqrt(normb)))
+        .cast("float")
+        .alias("symmetry"),
     )

@@ -52,17 +52,3 @@ def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
     return finer.groupBy(
         "conv_id", F.date_trunc(unit, F.col("bucket")).alias("bucket")
     ).agg(*aggs)
-
-
-def with_derived(tier_df: DataFrame) -> DataFrame:
-    """Query-time derived measures (means/rates recomputed from sums)."""
-    return tier_df.withColumn(
-        "tokens_total",
-        F.col("tokens_user") + F.col("tokens_assistant") + F.col("tokens_tool"),
-    ).withColumn(
-        "tokens_per_turn",
-        F.try_divide(
-            F.col("tokens_user") + F.col("tokens_assistant") + F.col("tokens_tool"),
-            F.col("turn_rate"),
-        ),
-    )

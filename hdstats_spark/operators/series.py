@@ -94,24 +94,6 @@ def _chunks_by_cells(lens: np.ndarray, p: int, budget: int = _CELL_BUDGET):
         start = end
 
 
-def _stack_chunk(pdf: pd.DataFrame, idx: np.ndarray, channels) -> tuple[np.ndarray, np.ndarray]:
-    """Ragged series → padded (G, p, nmax) tensor via one concat + one
-    fancy-index scatter per channel (no per-row/element Python — millions of
-    tiny series per batch are the common case for the composite tier)."""
-    lens = pdf["n"].to_numpy()[idx].astype(np.int64)
-    G = len(idx)
-    nmax = int(lens.max())
-    starts = np.cumsum(lens) - lens
-    row_idx = np.repeat(np.arange(G), lens)
-    pos_idx = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(starts, lens)
-    X = np.full((G, len(channels), nmax), np.nan, dtype=np.float32)
-    for j, c in enumerate(channels):
-        col = pdf[c].to_numpy()[idx]
-        flat = np.concatenate([np.asarray(v, dtype=np.float32) for v in col])
-        X[:, j, :][row_idx, pos_idx] = flat
-    return X, lens
-
-
 def geomedian_axis0(
     series_df: DataFrame,
     channels: Sequence[str] = CHANNELS,

@@ -48,14 +48,3 @@ TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 #: which finer tier each tier re-aggregates from (raw for 1m)
 TIER_PARENT = {"1m": "raw", "1h": "1m", "1d": "1h"}
-
-
-def tier_schema() -> T.StructType:
-    """One row per (conv_id, bucket) with the 8 channel sums — all LongType
-    so re-aggregation composes exactly (counts/sums of counts)."""
-    fields = [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("bucket", T.TimestampType(), False),
-    ]
-    fields += [T.StructField(c, T.LongType(), True) for c in CHANNELS]
-    return T.StructType(fields)

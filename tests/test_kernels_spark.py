@@ -1,24 +1,26 @@
 """Spark kernels vs the NumPy oracle at the reference's own tolerances
-(rtol=1e-4, atol=1e-4 — /root/reference/tests/test_pcm.py:22)."""
+(rtol=1e-4, atol=1e-4 — the reference's tests/test_pcm.py:22).  Every
+kernel test runs the engine's production Spark path and compares it with
+hdstats_oracle; none compares two Spark paths with each other."""
 
 import numpy as np
 import numpy.testing as npt
-import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import hdstats_oracle as hdo
 from hdstats_spark.operators.channels import channelize
-from hdstats_spark.operators.features import change_features, complexity
+from hdstats_spark.operators.features import change_features, complexity, symmetry_agg
 from hdstats_spark.operators.gapfill import completion, densify
-from hdstats_spark.operators.kernels import (
-    discordance_agg,
-    dtw_to_area_median,
-    fourier_features,
-    geomedian_agg,
-    mad_agg,
-    symmetry_agg,
-)
 from hdstats_spark.operators.rollup import rollup_raw
+from hdstats_spark.operators.series import (
+    discordance_batched,
+    dtw_area_batched,
+    fourier_features_batched,
+    geomedian_mads_batched,
+    geomedian_mads_flat,
+    series_table,
+)
 from hdstats_spark.schema import CHANNELS
 
 
@@ -37,6 +39,11 @@ def _series_matrices(dense_pdf, channels=CHANNELS):
         g = g.sort_values("bucket")
         out[cid] = g[list(channels)].to_numpy(dtype=np.float32, na_value=np.nan).T
     return out
+
+
+def _gm_only(tier_df):
+    """The gm composite as symmetry_agg reads it (q_symmetry's pass)."""
+    return geomedian_mads_flat(tier_df, CHANNELS, with_mads=False).drop("n")
 
 
 def test_completion_leaves_no_nulls(dense):
@@ -61,34 +68,40 @@ def test_completion_matches_oracle(spark, transcripts, dense):
 
 
 def test_geomedian_matches_oracle(dense):
-    gm = geomedian_agg(dense, CHANNELS).toPandas().set_index("conv_id")
+    """geomedian_mads_flat (the tier_batch / q_geomedian_mads path) ≡ oracle
+    nangeomedian; the completed series are NaN-free, so also ≡ the plain
+    Weiszfeld geomedian."""
+    gm = geomedian_mads_flat(dense, CHANNELS).toPandas().set_index("conv_id")
     mats = _series_matrices(dense.toPandas())
     for cid, X in list(mats.items())[:25]:
-        expect = hdo.nangeomedian(X) if X.shape[1] >= 3 else None
-        if expect is None:
+        if X.shape[1] < 3:
             continue
+        assert not np.isnan(X).any()
         got = gm.loc[cid, [f"gm_{c}" for c in CHANNELS]].to_numpy(dtype=np.float32)
-        npt.assert_allclose(got, expect, rtol=1e-4, atol=1e-4)
+        npt.assert_allclose(got, hdo.nangeomedian(X), rtol=1e-4, atol=1e-4)
+        npt.assert_allclose(got, hdo.geomedian(X), rtol=1e-4, atol=1e-4)
+
+
+def _assert_gm_mads_match_oracle(out, mats, cids):
+    """One composite output row per series (n, gm_*, emad/smad/bcmad) ≡ the
+    oracle nangeomedian and the oracle MADs against the emitted gm."""
+    for cid in cids:
+        X = mats[cid]
+        g = out.loc[cid, [f"gm_{c}" for c in CHANNELS]].to_numpy(dtype=np.float32)
+        assert out.loc[cid, "n"] == X.shape[1]
+        npt.assert_allclose(g, hdo.nangeomedian(X), rtol=1e-4, atol=1e-4)
+        X4 = X[None, None, :, :]
+        g3 = g[None, None, :]
+        for k, mad in (("emad", hdo.emad_pcm), ("smad", hdo.smad_pcm), ("bcmad", hdo.bcmad_pcm)):
+            npt.assert_allclose(out.loc[cid, k], mad(X4, g3)[0, 0], rtol=1e-4, atol=1e-4)
 
 
 def test_mads_match_oracle(dense):
-    gm_df = geomedian_agg(dense, CHANNELS)
-    mads = mad_agg(dense, gm_df, CHANNELS).toPandas().set_index("conv_id")
-    gm = gm_df.toPandas().set_index("conv_id")
+    """MAD trio of geomedian_mads_flat vs the oracle MADs against the gm the
+    same pass emitted."""
+    out = geomedian_mads_flat(dense, CHANNELS).toPandas().set_index("conv_id")
     mats = _series_matrices(dense.toPandas())
-    for cid, X in list(mats.items())[:15]:
-        g = gm.loc[cid].to_numpy(dtype=np.float32)
-        X4 = X[None, None, :, :]
-        g3 = g[None, None, :]
-        npt.assert_allclose(
-            mads.loc[cid, "emad"], hdo.emad_pcm(X4, g3)[0, 0], rtol=1e-4, atol=1e-4
-        )
-        npt.assert_allclose(
-            mads.loc[cid, "smad"], hdo.smad_pcm(X4, g3)[0, 0], rtol=1e-4, atol=1e-4
-        )
-        npt.assert_allclose(
-            mads.loc[cid, "bcmad"], hdo.bcmad_pcm(X4, g3)[0, 0], rtol=1e-4, atol=1e-4
-        )
+    _assert_gm_mads_match_oracle(out, mats, list(mats)[:15])
 
 
 def test_change_features_match_oracle(dense):
@@ -126,7 +139,12 @@ def test_change_features_match_oracle(dense):
 
 
 def test_fourier_matches_oracle(dense):
-    ff = fourier_features(dense, "turn_rate", n=2, step=3).toPandas().set_index("conv_id")
+    st = series_table(dense, ["turn_rate"])
+    ff = (
+        fourier_features_batched(st, "turn_rate", n=2, step=3)
+        .toPandas()
+        .set_index("conv_id")
+    )
     mats = _series_matrices(dense.toPandas(), ["turn_rate"])
     for cid, X in list(mats.items())[:15]:
         x = X[0][None, None, :]
@@ -141,6 +159,12 @@ def test_fourier_matches_oracle(dense):
         npt.assert_allclose(
             ff.loc[cid, ["fstd_0", "fstd_1"]].to_numpy(np.float32),
             hdo.fourier_std(x, n=2, step=3)[0, 0],
+            rtol=1e-4,
+            atol=1e-3,
+        )
+        npt.assert_allclose(
+            ff.loc[cid, ["fmedian_0", "fmedian_1"]].to_numpy(np.float32),
+            hdo.fourier_median(x, n=2, step=3)[0, 0],
             rtol=1e-4,
             atol=1e-3,
         )
@@ -177,43 +201,16 @@ def test_symmetry_zero_for_constant(spark):
         ("a", i, 2.0, 4.0, 6.0, 8.0, 1.0, 1.0, 1.0, 1.0) for i in range(6)
     ]
     df = spark.createDataFrame(rows, ["conv_id", "bucket", *CHANNELS])
-    gm = geomedian_agg(df, CHANNELS, order_col="bucket")
-    s = symmetry_agg(df, gm, CHANNELS).collect()[0]["symmetry"]
+    s = symmetry_agg(df, _gm_only(df), CHANNELS).collect()[0]["symmetry"]
     assert abs(s) < 1e-5
-
-
-def test_mads_cogrouped_equals_broadcast(dense):
-    """cogroup() stack × gm alignment ≡ the broadcast-join mad_agg (the
-    big-composite variant for 10^9-conversation tables), bit-for-bit; the
-    unhinted-join variant too."""
-    from hdstats_spark.operators.kernels import mads_cogrouped
-
-    gm = geomedian_agg(dense, CHANNELS, order_col="bucket")
-    a = mad_agg(dense, gm, CHANNELS).toPandas().set_index("conv_id").sort_index()
-    b = (
-        mads_cogrouped(dense, gm, CHANNELS)
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    c = (
-        mad_agg(dense, gm, CHANNELS, broadcast_gm=False)
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    cols = ["emad", "smad", "bcmad"]
-    npt.assert_array_equal(a[cols].to_numpy(np.float32), b[cols].to_numpy(np.float32))
-    npt.assert_array_equal(a[cols].to_numpy(np.float32), c[cols].to_numpy(np.float32))
 
 
 def test_symmetry_matches_oracle(dense):
     """Full engine≡oracle parity for symmetry (ts.pyx:231-243): Spark's
     avg+gm-join expression vs hdstats_oracle.ts.symmetry per series, at the
     reference tolerances."""
-    gm = geomedian_agg(dense, CHANNELS, order_col="bucket")
     got = (
-        symmetry_agg(dense, gm, CHANNELS)
+        symmetry_agg(dense, _gm_only(dense), CHANNELS)
         .toPandas()
         .set_index("conv_id")["symmetry"]
     )
@@ -226,7 +223,7 @@ def test_symmetry_matches_oracle(dense):
 def test_number_peaks_spark_matches_oracle(dense):
     """Spark wrapper (number_peaks_agg over series_table) ≡ the oracle CWT
     ridge-line count per series — exact integer equality."""
-    from hdstats_spark.operators.series import number_peaks_agg, series_table
+    from hdstats_spark.operators.series import number_peaks_agg
 
     st = series_table(dense, ["turn_rate"])
     got = (
@@ -243,32 +240,22 @@ def test_number_peaks_spark_matches_oracle(dense):
 
 def test_geomedian_flat_equals_series_table(dense):
     """Flat mapInArrow path (sort-within-partitions + cross-batch group
-    stitching) ≡ the series_table path for the full gm+MAD output."""
-    from hdstats_spark.operators.series import (
-        geomedian_mads_batched,
-        geomedian_mads_flat,
-        series_table,
-    )
-
-    a = (
-        geomedian_mads_batched(series_table(dense, CHANNELS), CHANNELS)
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    b = geomedian_mads_flat(dense, CHANNELS).toPandas().set_index("conv_id").sort_index()
-    cols = ["n"] + [f"gm_{c}" for c in CHANNELS] + ["emad", "smad", "bcmad"]
-    npt.assert_array_equal(
-        a[cols].to_numpy(np.float64), b[cols].to_numpy(np.float64)
-    )
+    stitching) and the series_table path both ≡ the oracle for the full
+    gm+MAD output of every series, so they agree at oracle tolerance."""
+    mats = _series_matrices(dense.toPandas())
+    for out in (
+        geomedian_mads_batched(series_table(dense, CHANNELS), CHANNELS),
+        geomedian_mads_flat(dense, CHANNELS),
+    ):
+        out = out.toPandas().set_index("conv_id")
+        assert sorted(out.index) == sorted(mats)
+        _assert_gm_mads_match_oracle(out, mats, mats)
 
 
 def test_geomedian_axis0_matches_oracle(dense):
     """Engine axis-0 surface (geomedian.pyx:379-395): per-series length-n gm
     vector ≡ oracle nangeomedian(M, axis=0) — the axis0 ≡ axis1-of-transpose
     identity at the Spark level."""
-    from hdstats_spark.operators.series import geomedian_mads_batched, series_table
-
     st = series_table(dense, CHANNELS)
     out = (
         geomedian_mads_batched(st, CHANNELS, with_mads=False, axis=0)
@@ -288,58 +275,9 @@ def test_geomedian_axis0_matches_oracle(dense):
         )
 
 
-def test_fourier_batched_equals_per_group(dense):
-    """Series-table batched FFT path ≡ the per-group applyInPandas path
-    (which test_fourier_matches_oracle pins to the oracle)."""
-    from hdstats_spark.operators.series import fourier_features_batched, series_table
-
-    per_group = (
-        fourier_features(dense, "turn_rate", n=2, step=3).toPandas().set_index("conv_id")
-    )
-    st = series_table(dense, ["turn_rate"])
-    batched = (
-        fourier_features_batched(st, "turn_rate", n=2, step=3)
-        .toPandas()
-        .set_index("conv_id")
-    )
-    cids = sorted(per_group.index)
-    cols = [f"{s}_{k}" for s in ("fmean", "fstd", "fmedian") for k in range(2)]
-    a = per_group.loc[cids, cols].to_numpy(np.float32)
-    b = batched.loc[cids, cols].to_numpy(np.float32)
-    npt.assert_allclose(b, a, rtol=1e-5, atol=1e-5, equal_nan=True)
-
-
-def test_discordance_batched_equals_per_group(dense):
-    import pandas as _pd
-
-    from hdstats_spark.operators.series import discordance_batched, series_table
-
-    area = (
-        dense.groupby("t")
-        .agg({"turn_rate": "avg"})
-        .withColumnRenamed("avg(turn_rate)", "mv")
-        .orderBy("t")
-        .toPandas()
-    )
-    curve = area["mv"].to_numpy(dtype=np.float32)
-    Y = np.fft.fft(curve)
-    Y[3:] = 0.0
-    area_lp = np.abs(np.fft.ifft(Y)).astype(np.float32)
-    per_group = discordance_agg(dense, "turn_rate", n=3).toPandas().set_index("conv_id")
-    st = series_table(dense, ["turn_rate"])
-    batched = (
-        discordance_batched(st, "turn_rate", area_lp, n=3).toPandas().set_index("conv_id")
-    )
-    cids = sorted(per_group.index)
-    npt.assert_allclose(
-        batched.loc[cids, "discordance"].to_numpy(np.float32),
-        per_group.loc[cids, "discordance"].to_numpy(np.float32),
-        rtol=1e-4,
-        atol=1e-5,
-    )
-
-
 def test_discordance_and_dtw(dense):
+    """discordance_batched and dtw_area_batched (area-warp L1 mode and the
+    banded-DTW mode q_dtw_area runs) vs the oracle per series."""
     # align on the bucket index; restrict to equal-length series for an exact
     # oracle comparison (the reference's stacks share one time axis)
     pdf = dense.toPandas()
@@ -347,8 +285,19 @@ def test_discordance_and_dtw(dense):
     nmode = lens.mode()[0]
     keep = lens[lens == nmode].index
     sub = dense.filter(dense.conv_id.isin([str(k) for k in keep]))
-    disc = discordance_agg(sub, "turn_rate", n=3).toPandas().set_index("conv_id")
-    dtwd = dtw_to_area_median(sub, "turn_rate", true_dtw=False).toPandas().set_index("conv_id")
+    area = sub.groupBy("t").agg(
+        F.avg(F.col("turn_rate").cast("float")).alias("mean"),
+        F.expr("percentile(cast(turn_rate as double), 0.5)").alias("median"),
+    ).orderBy("t").toPandas()
+    # phase 1 of discordance: |ifft| low-pass of the area-mean curve
+    Y = np.fft.fft(area["mean"].to_numpy(dtype=np.float32))
+    Y[3:] = 0.0
+    area_lp = np.abs(np.fft.ifft(Y)).astype(np.float32)
+    ref = area["median"].to_numpy(dtype=np.float64)
+
+    st = series_table(sub, ["turn_rate"])
+    disc = discordance_batched(st, "turn_rate", area_lp, n=3).toPandas().set_index("conv_id")
+    warp = dtw_area_batched(st, "turn_rate", ref, l1_mode=True).toPandas().set_index("conv_id")
 
     sp = pdf[pdf.conv_id.isin(keep)]
     mats = _series_matrices(sp, ["turn_rate"])
@@ -357,6 +306,17 @@ def test_discordance_and_dtw(dense):
     o_disc = hdo.discordance(stack.astype(np.float32), n=3)[:, 0]
     o_warp = hdo.area_warp_similarity(stack.astype(np.float32))[:, 0]
     got_disc = disc.loc[cids, "discordance"].to_numpy(np.float32)
-    got_warp = dtwd.loc[cids, "dtw_dist"].to_numpy(np.float32)
+    got_warp = warp.loc[cids, "dtw_dist"].to_numpy(np.float32)
     npt.assert_allclose(got_disc, o_disc, rtol=1e-3, atol=1e-3)
     npt.assert_allclose(got_warp, o_warp, rtol=1e-3, atol=1e-3)
+    # window=8 is q_dtw_area's band; the fixture's equal-length series are
+    # shorter than that, so window=0 (q_dtw_diag's diagonal band) is the case
+    # where the band binds
+    for window in (8, 0):
+        band = dtw_area_batched(st, "turn_rate", ref, window=window).toPandas()
+        got_band = band.set_index("conv_id").loc[cids, "dtw_dist"].to_numpy(np.float32)
+        o_band = [
+            hdo.local_dtw(ref.reshape(-1, 1), stack[i, 0].reshape(-1, 1), window)[0]
+            for i in range(len(cids))
+        ]
+        npt.assert_allclose(got_band, np.float32(o_band), rtol=1e-4, atol=1e-4)
