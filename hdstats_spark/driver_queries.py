@@ -1440,7 +1440,7 @@ def q_geomedian_1d(spark, sf_dir):
     converges onto — so the batched kernel's output equals SQL median() after
     2-dp rounding.  Series = each user's hourly event count, truncated to odd
     length (drop the last bucket when even)."""
-    from .operators.series import geomedian_mads_batched, series_table
+    from .operators.series import geomedian_mads_flat
 
     ev = _t(spark, sf_dir, "events")
     hourly = ev.groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket")).agg(
@@ -1454,7 +1454,7 @@ def q_geomedian_1d(spark, sf_dir):
         .filter(F.col("_rn") <= F.col("_n") - (F.lit(1) - F.col("_n") % 2))
         .select(F.col("user_id").cast("string").alias("conv_id"), "bucket", "v")
     )
-    gm = geomedian_mads_batched(series_table(odd, ["v"]), ["v"], with_mads=False)
+    gm = geomedian_mads_flat(odd, ["v"], with_mads=False)
     return gm.select(
         F.col("conv_id").alias("user_id"),
         F.round(F.col("gm_v").cast("double"), 2).alias("gm_v"),
@@ -1542,7 +1542,9 @@ def _gm_prepared(spark, sf_dir):
     """Cached flat composite input over the dense tier (hash-partitioned,
     within-partition-sorted — the expensive prefix of geomedian_mads_flat,
     ~1M-row exchange + Tungsten sort at sf0.1): the with-MADs composite
-    (q_geomedian_mads) and the gm-only pass symmetry needs share ONE sort."""
+    (q_geomedian_mads) and the gm-only pass symmetry needs share ONE sort.
+    The other composites (q_geomedian_1d, q_mads_fixed_p1) run the same
+    flat path over their own inputs through geomedian_mads_flat."""
     from .operators.series import prepare_flat
 
     return prepare_flat(*_dense_event_series(spark, sf_dir))
@@ -1552,7 +1554,7 @@ def q_geomedian_mads(spark, sf_dir):
     """Flagship: nangeomedian_pcm + MAD trio as one batched continuous
     aggregate (geomedian.pyx:472-517, geomad.pyx:200-350) — the flat
     zero-copy mapInArrow path (no collect_list; the composite-tier build
-    path at 10^6+ series; it and the series_table variant are each
+    path at 10^6+ series, and the engine's only composite path —
     pytest-checked against hdstats_oracle)."""
     from .operators.series import geomedian_mads_prepared
 
@@ -1753,53 +1755,27 @@ FROM d JOIN med USING (t) GROUP BY d.user_id
 
 def q_dtw_diag_path(spark, sf_dir):
     """The FULL batched DTW artifact (fill + lockstep backtrack,
-    kernels_np.dtw_path_batch) run end-to-end with window=0: the band pins
+    series.dtw_path_batched) run end-to-end with window=0: the band pins
     the optimal path to the main diagonal (i=j=step, length n) and the
     distance to Σ|xᵢ−refᵢ|/(2n) — both fully SQL-expressible, so the
     backtrack kernel itself gets a DuckDB-hash-green row (dtw.pyx:35-53 +
     :109-121 degenerate).  Same zero-filled integer grid + snap-to-halves
     exactness as q_dtw_diag."""
-    import numpy as np
-    import pandas as pd
-
-    from .kernels_np import dtw_path_batch
-    from .operators.series import _padded_stack
+    from .operators.series import dtw_path_batched
 
     ref = _area_median_curve(spark, sf_dir, zero_filled=True)
-    st = _series0_events(spark, sf_dir)
-    sc = spark.sparkContext
-    bref = sc.broadcast(ref)
-    st = st.repartition(sc.defaultParallelism)
-
-    def gen(batches):
-        rv = bref.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # one padded fill+backtrack per batch; per-series corner capture
-            ids, X, lens = _padded_stack(pdf, "n_events", "conv_id")
-            n_max = X.shape[1]
-            dist, plens, ii, jj = dtw_path_batch(
-                X, rv[:n_max].astype(np.float32), window=0, lengths=lens
-            )
-            pos = np.arange(int(plens.sum()), dtype=np.int64)
-            starts = np.cumsum(plens) - plens
-            step = (pos - np.repeat(starts, plens)).astype(np.int32)
-            # dist·2n is an exact multiple of 0.5 (integer grid, median
-            # of integers) — un-normalize and snap away the f32 division
-            snapped = np.round(dist.astype(np.float64) * 2 * lens * 2) / 2
-            yield pd.DataFrame(
-                {
-                    "user_id": np.repeat(ids, plens),
-                    "step": step,
-                    "i": ii,
-                    "j": jj,
-                    "dtw_diag": np.repeat(snapped, plens),
-                }
-            )
-
-    return st.mapInPandas(
-        gen, "user_id string, step int, i int, j int, dtw_diag double"
+    path = dtw_path_batched(_series0_events(spark, sf_dir), "n_events", ref, window=0)
+    return path.select(
+        F.col("conv_id").alias("user_id"),
+        "step",
+        "i",
+        "j",
+        # dist·2n is an exact multiple of 0.5 (integer grid, median of
+        # integers) — un-normalize and snap away the f32 division.  rint,
+        # not round: one value per path row (~10^6 at sf0.1), and Spark's
+        # round goes through a BigDecimal per row (~8× rint's cost there)
+        (F.rint(F.col("dtw_dist").cast("double") * 2 * F.col("n") * 2) / 2)
+        .alias("dtw_diag"),
     )
 
 
@@ -2261,7 +2237,7 @@ def q_mads_fixed_p1(spark, sf_dir):
     spacing), so the δ-perturbed median ORDER cannot swap to a different
     value either.  Verified: 300k/300k simulated cohorts round-identical,
     plus mismatch-free on all sf dirs."""
-    from .operators.series import geomedian_mads_batched, series_table
+    from .operators.series import geomedian_mads_flat
 
     L = _MADS_P1_L
     b = _event_buckets(spark, sf_dir, "day").select(
@@ -2281,7 +2257,7 @@ def q_mads_fixed_p1(spark, sf_dir):
             .alias("v"),
         )
     )
-    out = geomedian_mads_batched(series_table(grid, ["v"]), ["v"], with_mads=True)
+    out = geomedian_mads_flat(grid, ["v"], with_mads=True)
     return out.select(
         F.col("conv_id").alias("user_id"),
         F.round(F.col("gm_v").cast("double"), 2).alias("gm_v"),
@@ -2704,50 +2680,15 @@ def q_dtw_path(spark, sf_dir):
     (conv_id, step, i, j) rows plus the normalized distance — the
     reference's third output, exposed relationally (rows-only; the batched
     DP + lockstep backtrack is pytest-verified bit-equal to the serial
-    optimalpath goldens).  All series of one length-class are filled AND
-    backtracked in one vectorized pass (kernels_np.dtw_path_batch) — no
-    per-series Python DP."""
-    import numpy as np
-    import pandas as pd
-
-    from .kernels_np import dtw_path_batch
-    from .operators.series import _padded_stack
+    optimalpath goldens and, through series.dtw_path_batched, to the
+    oracle's local_dtw).  Series of every length in an Arrow batch share one
+    padded fill + backtrack, each read at its own corner — no per-series
+    Python DP."""
+    from .operators.series import dtw_path_batched
 
     ref = _area_median_curve(spark, sf_dir)
-    st = _series_events(spark, sf_dir)
-    sc = spark.sparkContext
-    bref = sc.broadcast(ref)
-    st = st.repartition(sc.defaultParallelism)
-
-    def gen(batches):
-        rv = bref.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # ONE padded fill+backtrack per Arrow batch: every conversation
-            # has its own length on real data, so per-length-class batching
-            # degenerated to G=1-2 kernel calls; corner capture at each
-            # series' own (L, L) keeps results bit-equal (kernels_np)
-            ids, X, lens = _padded_stack(pdf, "n_events", "conv_id")
-            n_max = X.shape[1]
-            dist, plens, ii, jj = dtw_path_batch(
-                X, rv[:n_max].astype(np.float32), window=8, lengths=lens
-            )
-            pos = np.arange(int(plens.sum()), dtype=np.int64)
-            starts = np.cumsum(plens) - plens
-            yield pd.DataFrame(
-                {
-                    "conv_id": np.repeat(ids, plens),
-                    "step": (pos - np.repeat(starts, plens)).astype(np.int32),
-                    "i": ii,
-                    "j": jj,
-                    "dtw_dist": np.repeat(dist, plens),
-                }
-            )
-
-    return st.mapInPandas(
-        gen, "conv_id string, step int, i int, j int, dtw_dist float"
-    )
+    path = dtw_path_batched(_series_events(spark, sf_dir), "n_events", ref, window=8)
+    return path.drop("n")
 
 
 def q_winnow_overlap(spark, sf_dir):

@@ -1,18 +1,23 @@
-"""Series-table primitive + batched kernel aggregates.
+"""Series-table primitive + batched kernel aggregates, one Spark path per
+hdstats kernel.
 
-``series_table`` compacts a tier table to ONE row per conversation — the
-stable-ordered channel matrix as arrays — with a single JVM-side shuffle
-(groupBy + sort_array(collect_list)).  Every downstream kernel then runs as
-``mapInPandas`` over these compact rows, stacking all series of an Arrow
-batch into one padded (G, p, n) tensor and reducing them simultaneously
-(kernels_np).  Compared to per-group applyInPandas this amortizes both the
-Python-dispatch and the Weiszfeld iteration overhead across series
-(~50×+ on many-small-series workloads) while keeping results identical.
+The geomedian+MAD composite (``geomedian_mads_flat``) streams FLAT tier rows,
+hash-partitioned by the series key and sorted within partitions, through
+``mapInArrow``.  The length-semantic kernels (Fourier, discordance, DTW
+distance and warp path, CWT peaks, axis-0 gm) run as ``mapInPandas`` over
+``series_table`` rows: ONE row per conversation, the stable-ordered channel
+matrix as arrays, built with a single JVM-side shuffle (groupBy +
+sort_array(collect_list)).  Either way all series of an Arrow batch are
+stacked into one padded tensor and reduced simultaneously (kernels_np),
+which amortizes the Python-dispatch and iteration overhead across series
+(~50×+ over per-group applyInPandas on many-small-series workloads) while
+keeping results identical.
 
 Skew note: one row per series bounds group size at the hot-conversation
 length (10^4 buckets ≈ 320 KB — far under Arrow limits); padded-tensor blowup
 from mixing one hot series with many short ones in a batch is bounded by
-length-sorted chunking (_chunks_by_cells).
+length-sorted chunking (_chunks_by_cells) and, for DTW, by row chunks under
+_DTW_BUDGET_BYTES.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 from ..kernels_np import (
     discordance_batch,
     dtw_dist_batch,
+    dtw_path_batch,
     fourier_batch,
     mads_batch,
     nangeomedian_batch,
@@ -34,6 +40,7 @@ from ..kernels_np import (
 from ..schema import CHANNELS
 
 _CELL_BUDGET = 16_000_000  # f32 cells per padded tensor chunk (~64 MB)
+_DTW_BUDGET_BYTES = 64_000_000  # working set per DTW kernel call
 
 
 def key_change_mask(ids) -> np.ndarray:
@@ -144,94 +151,6 @@ def geomedian_axis0(
     return series_df.mapInPandas(gen, f"{key_col} string, n int, gm array<float>")
 
 
-def geomedian_mads_batched(
-    series_df: DataFrame,
-    channels: Sequence[str] = CHANNELS,
-    eps: float = 1e-7,
-    maxiters: int = 1000,
-    with_mads: bool = True,
-    key_col: str = "conv_id",
-    axis: int = 1,
-) -> DataFrame:
-    """Geometric-median composite (+ optional MAD trio) for every series in
-    one mapInArrow pass — the engine's flagship continuous aggregate
-    (nangeomedian_pcm + emad/smad/bcmad fused: SURVEY.md §3.1-3.2).
-
-    ``axis=1`` (default) reduces along time — the reference's per-pixel
-    composite.  ``axis=0`` (geomedian.pyx:379-395) reduces across channels
-    instead, yielding a length-n gm vector per series (schema differs:
-    see geomedian_axis0); MADs are only defined for the composite, so
-    axis=0 requires with_mads=False.
-
-    mapInArrow, not mapInPandas: each channel arrives as an Arrow ListArray
-    whose flat values buffer is borrowed zero-copy into NumPy and scattered
-    into the padded (G, p, n) tensor with one fancy-index per channel — the
-    pandas path materialized 4M+ per-row ndarray objects and cost ~4× the
-    kernel itself on many-tiny-series workloads (the composite tier)."""
-    if axis == 0:
-        if with_mads:
-            raise ValueError("axis=0 gm has no MAD trio; pass with_mads=False")
-        return geomedian_axis0(series_df, channels, eps, maxiters, key_col)
-    if axis != 1:
-        raise IndexError(f"axis {axis} out of bounds")
-    chans = list(channels)
-    fields = [f"{key_col} string", "n int"] + [f"gm_{c} float" for c in chans]
-    if with_mads:
-        fields += ["emad float", "smad float", "bcmad float"]
-    schema = ", ".join(fields)
-
-    # CPU-heavy Python stage: AQE's size-based coalescing fuses the
-    # small-byte series rows into one task, and a hash repartition on the
-    # series key is elided as redundant (the upstream agg already hashes it).
-    # Round-robin repartition survives optimization and balances series count
-    # per task regardless of key skew.
-    sc = series_df.sparkSession.sparkContext
-    series_df = series_df.repartition(sc.defaultParallelism)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            keys = rb.column(names.index(key_col))
-            lens_all = rb.column(names.index("n")).to_numpy().astype(np.int64)
-            flats, bases = {}, {}
-            for c in chans:
-                col = rb.column(names.index(c))
-                # flatten() honours any slice offset; row starts are the
-                # offsets rebased to the slice
-                offs = col.offsets.to_numpy().astype(np.int64)
-                flats[c] = col.flatten().to_numpy(zero_copy_only=False)
-                bases[c] = offs[:-1] - offs[0]
-            for idx in _chunks_by_cells(lens_all, len(chans)):
-                lens = lens_all[idx]
-                G = len(idx)
-                nmax = int(lens.max())
-                total = int(lens.sum())
-                starts_pad = np.cumsum(lens) - lens
-                row_idx = np.repeat(np.arange(G), lens)
-                pos_idx = np.arange(total, dtype=np.int64) - np.repeat(starts_pad, lens)
-                X = np.full((G, len(chans), nmax), np.nan, dtype=np.float32)
-                for j, c in enumerate(chans):
-                    src = np.repeat(bases[c][idx], lens) + pos_idx
-                    X[:, j, :][row_idx, pos_idx] = flats[c][src]
-                gm = nangeomedian_batch(X, eps, maxiters, lengths=lens)
-                out = {
-                    key_col: keys.take(pa.array(idx)),
-                    "n": pa.array(lens.astype(np.int32)),
-                }
-                for j, c in enumerate(chans):
-                    out[f"gm_{c}"] = pa.array(gm[:, j])
-                if with_mads:
-                    for k, v in mads_batch(X, gm).items():
-                        out[k] = pa.array(v)
-                yield pa.RecordBatch.from_pydict(out)
-
-    return series_df.mapInArrow(gen, schema)
-
-
 def number_peaks_agg(
     series_df: DataFrame,
     value_col: str,
@@ -270,11 +189,11 @@ def number_peaks_agg(
 def _padded_stack(pdf: pd.DataFrame, value_col: str, key_col: str, dtype=np.float32):
     """(ids, X (G, n_max) zero-padded, lens) — the batch shape for kernels
     whose semantics depend only on each series' true prefix (DTW corner
-    capture): one kernel call per Arrow batch regardless of how many
+    capture): one padded grid per Arrow batch regardless of how many
     distinct lengths the batch holds.  Contrast _equal_length_stacks, needed
     where the transform length is semantic (FFT).  ``dtype`` preserves each
-    caller's float discipline (the path query feeds float32, the area query
-    raw float64)."""
+    caller's float discipline (dtw_path_batched feeds float32,
+    dtw_area_batched raw float64)."""
     lens = pdf["n"].to_numpy(dtype=np.int64)
     vals = pdf[value_col].to_numpy()
     ids = pdf[key_col].to_numpy()
@@ -508,7 +427,6 @@ def dtw_area_batched(
     window: int | None = None,
     key_col: str = "conv_id",
     l1_mode: bool = False,
-    cell_budget_bytes: int = 64_000_000,
 ) -> DataFrame:
     """DTW distance of every series to a broadcast reference curve, batched
     by exact series length so the wavefront kernel runs padding-free.
@@ -550,7 +468,7 @@ def dtw_area_batched(
             # 3 f32 diagonals + the f64 cast ≈ 20 bytes per cell per series.
             ids, X, lens = _padded_stack(pdf, value_col, key_col, dtype=np.float64)
             n_max = X.shape[1]
-            step = max(1, cell_budget_bytes // (20 * (n_max + 1)))
+            step = max(1, _DTW_BUDGET_BYTES // (20 * (n_max + 1)))
             parts = [
                 dtw_dist_batch(
                     X[s : s + step], rv[:n_max], window, lengths=lens[s : s + step]
@@ -560,3 +478,59 @@ def dtw_area_batched(
             yield pd.DataFrame({key_col: ids, "dtw_dist": np.concatenate(parts)})
 
     return series_df.mapInPandas(gen, f"{key_col} string, dtw_dist float")
+
+
+def dtw_path_batched(
+    series_df: DataFrame,
+    value_col: str,
+    ref: np.ndarray,
+    window: int | None = None,
+    key_col: str = "conv_id",
+) -> DataFrame:
+    """Banded DTW of every series to a broadcast reference curve WITH its
+    optimal warp path (dtw.pyx:89-121), one output row per path cell:
+    (key, n, step, i, j, dtw_dist) — step 0 first, 0-based inner
+    coordinates, the series' normalized distance on each of its rows.
+
+    Series and reference enter the kernel as float32.  Mixed lengths share
+    one zero-padded grid and each series is read at its own (L, L) corner
+    (kernels_np.dtw_path_batch), so distances and paths are bit-equal to
+    per-length fills — and to any split of the batch into row chunks, which
+    keep each call's working set under _DTW_BUDGET_BYTES."""
+    sc = series_df.sparkSession.sparkContext
+    bref = sc.broadcast(np.asarray(ref, dtype=np.float32))
+    series_df = series_df.repartition(sc.defaultParallelism)
+
+    def gen(batches):
+        rv = bref.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids, X, lens = _padded_stack(pdf, value_col, key_col)
+            n_max = X.shape[1]
+            # per series: the f32 DP band (or the full grid when the band is
+            # as wide), the f64 copy of the series and the I/J path buffers
+            width = n_max + 1 if window is None else min(2 * window + 3, n_max + 1)
+            per_series = 4 * (n_max + 1) * width + 8 * n_max + 8 * (2 * n_max - 1)
+            chunk = max(1, _DTW_BUDGET_BYTES // per_series)
+            for lo in range(0, len(ids), chunk):
+                part = slice(lo, lo + chunk)
+                dist, plens, ii, jj = dtw_path_batch(
+                    X[part], rv[:n_max], window, lengths=lens[part]
+                )
+                pos = np.arange(int(plens.sum()), dtype=np.int64)
+                starts = np.cumsum(plens) - plens
+                yield pd.DataFrame(
+                    {
+                        key_col: np.repeat(ids[part], plens),
+                        "n": np.repeat(lens[part], plens).astype(np.int32),
+                        "step": (pos - np.repeat(starts, plens)).astype(np.int32),
+                        "i": ii,
+                        "j": jj,
+                        "dtw_dist": np.repeat(dist, plens),
+                    }
+                )
+
+    return series_df.mapInPandas(
+        gen, f"{key_col} string, n int, step int, i int, j int, dtw_dist float"
+    )

@@ -16,8 +16,9 @@ from hdstats_spark.operators.rollup import rollup_raw
 from hdstats_spark.operators.series import (
     discordance_batched,
     dtw_area_batched,
+    dtw_path_batched,
     fourier_features_batched,
-    geomedian_mads_batched,
+    geomedian_axis0,
     geomedian_mads_flat,
     series_table,
 )
@@ -82,12 +83,12 @@ def test_geomedian_matches_oracle(dense):
         npt.assert_allclose(got, hdo.geomedian(X), rtol=1e-4, atol=1e-4)
 
 
-def _assert_gm_mads_match_oracle(out, mats, cids):
+def _assert_gm_mads_match_oracle(out, mats, channels=CHANNELS):
     """One composite output row per series (n, gm_*, emad/smad/bcmad) ≡ the
     oracle nangeomedian and the oracle MADs against the emitted gm."""
-    for cid in cids:
-        X = mats[cid]
-        g = out.loc[cid, [f"gm_{c}" for c in CHANNELS]].to_numpy(dtype=np.float32)
+    assert sorted(out.index) == sorted(mats)
+    for cid, X in mats.items():
+        g = out.loc[cid, [f"gm_{c}" for c in channels]].to_numpy(dtype=np.float32)
         assert out.loc[cid, "n"] == X.shape[1]
         npt.assert_allclose(g, hdo.nangeomedian(X), rtol=1e-4, atol=1e-4)
         X4 = X[None, None, :, :]
@@ -97,11 +98,14 @@ def _assert_gm_mads_match_oracle(out, mats, cids):
 
 
 def test_mads_match_oracle(dense):
-    """MAD trio of geomedian_mads_flat vs the oracle MADs against the gm the
-    same pass emitted."""
-    out = geomedian_mads_flat(dense, CHANNELS).toPandas().set_index("conv_id")
-    mats = _series_matrices(dense.toPandas())
-    _assert_gm_mads_match_oracle(out, mats, list(mats)[:15])
+    """geomedian_mads_flat — the engine's only composite path — vs the oracle
+    gm and MAD trio for every series: over all channels (the tier_batch /
+    q_geomedian_mads shape, including series split across Arrow batches) and
+    over one channel (p=1, the q_geomedian_1d / q_mads_fixed_p1 shape)."""
+    pdf = dense.toPandas()
+    for channels in (CHANNELS, ["turn_rate"]):
+        out = geomedian_mads_flat(dense, channels).toPandas().set_index("conv_id")
+        _assert_gm_mads_match_oracle(out, _series_matrices(pdf, channels), channels)
 
 
 def test_change_features_match_oracle(dense):
@@ -238,27 +242,13 @@ def test_number_peaks_spark_matches_oracle(dense):
         assert got[cid] == expect, cid
 
 
-def test_geomedian_flat_equals_series_table(dense):
-    """Flat mapInArrow path (sort-within-partitions + cross-batch group
-    stitching) and the series_table path both ≡ the oracle for the full
-    gm+MAD output of every series, so they agree at oracle tolerance."""
-    mats = _series_matrices(dense.toPandas())
-    for out in (
-        geomedian_mads_batched(series_table(dense, CHANNELS), CHANNELS),
-        geomedian_mads_flat(dense, CHANNELS),
-    ):
-        out = out.toPandas().set_index("conv_id")
-        assert sorted(out.index) == sorted(mats)
-        _assert_gm_mads_match_oracle(out, mats, mats)
-
-
 def test_geomedian_axis0_matches_oracle(dense):
     """Engine axis-0 surface (geomedian.pyx:379-395): per-series length-n gm
     vector ≡ oracle nangeomedian(M, axis=0) — the axis0 ≡ axis1-of-transpose
     identity at the Spark level."""
     st = series_table(dense, CHANNELS)
     out = (
-        geomedian_mads_batched(st, CHANNELS, with_mads=False, axis=0)
+        geomedian_axis0(st, CHANNELS)
         .toPandas()
         .set_index("conv_id")
     )
@@ -320,3 +310,43 @@ def test_discordance_and_dtw(dense):
             for i in range(len(cids))
         ]
         npt.assert_allclose(got_band, np.float32(o_band), rtol=1e-4, atol=1e-4)
+
+
+def test_dtw_path_matches_oracle(dense):
+    """dtw_path_batched (q_dtw_path / q_dtw_diag_path's operator) vs the
+    oracle's banded DTW per series: distance at 1e-4, warp path (i, j) rows
+    exactly.  Equal-length series first, then every series of the fixture
+    (short conversations and the hot one, so Arrow batches mix lengths on
+    one padded grid).  window=8 is q_dtw_path's band, window=0
+    q_dtw_diag_path's."""
+    pdf = dense.toPandas()
+    lens = pdf.groupby("conv_id").size()
+    keep = lens[lens == lens.mode()[0]].index
+    sub = dense.filter(dense.conv_id.isin([str(k) for k in keep]))
+    for frame in (sub, dense):
+        ref = (
+            frame.groupBy("t")
+            .agg(F.expr("percentile(cast(turn_rate as double), 0.5)").alias("median"))
+            .orderBy("t")
+            .toPandas()["median"]
+            .to_numpy(dtype=np.float64)
+        )
+        # the operator runs the reference curve in float32
+        ref32 = ref.astype(np.float32).astype(np.float64)
+        mats = _series_matrices(frame.toPandas(), ["turn_rate"])
+        st = series_table(frame, ["turn_rate"])
+        for window in (8, 0):
+            got = dtw_path_batched(st, "turn_rate", ref, window=window).toPandas()
+            assert sorted(got["conv_id"].unique()) == sorted(mats)
+            for cid, g in got.groupby("conv_id"):
+                g = g.sort_values("step")
+                x = mats[cid][0].astype(np.float64)
+                L = len(x)
+                dist, _D, path = hdo.local_dtw(
+                    ref32[:L].reshape(-1, 1), x.reshape(-1, 1), window
+                )
+                assert (g["n"] == L).all()
+                npt.assert_array_equal(g["step"], np.arange(path.shape[1]))
+                npt.assert_allclose(g["dtw_dist"], np.float32(dist), rtol=1e-4, atol=1e-4)
+                npt.assert_array_equal(g["i"], path[0])
+                npt.assert_array_equal(g["j"], path[1])

@@ -1,5 +1,7 @@
-"""Guard: every public top-level ``def``/``class`` under ``hdstats_spark/``
-has a caller outside the tests.
+"""Guards: every public top-level ``def``/``class`` under ``hdstats_spark/``
+has a caller outside the tests, and the batched NumPy kernels
+(``hdstats_spark.kernels_np``) are reached only through their Spark
+operators in ``hdstats_spark/operators/series.py``.
 
 A name counts as used when some non-test ``.py`` file of the repo refers to
 it in code: as a name, an attribute, an imported name, or a string constant
@@ -15,6 +17,7 @@ ROOT = Path(__file__).resolve().parents[1]
 
 ALLOWED = {
     "pad_stack": "NaN-padded stack builder the batched-kernel unit tests use to feed kernels_np",
+    "geomedian_axis0": "the only Spark implementation of the reference's axis-0 geomedian; no query asks for it",
     "locf": "sparse-series forward-fill; the batch reference streaming_gapfill is tested against",
     "gen_assets": "synthetic binary-asset table for the multimodal operator tests",
     "sample_frames": "video frame-sampling stub of the multimodal asset plumbing, test-driven only",
@@ -64,6 +67,31 @@ def _names_used_outside_tests() -> set[str]:
             elif isinstance(node, ast.Constant) and isinstance(node.value, str):
                 used.add(node.value)
     return used
+
+
+def _imported_modules(path: Path, tree: ast.Module):
+    """Absolute names of the modules ``tree`` imports (relative imports
+    resolved against ``path``'s package); ``from pkg import mod`` yields
+    both ``pkg`` and ``pkg.mod``."""
+    package = path.relative_to(ROOT).with_suffix("").parts[:-1]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = package[: len(package) - node.level + 1] if node.level else ()
+            module = ".".join(base + ((node.module,) if node.module else ()))
+            yield module
+            yield from (f"{module}.{alias.name}" for alias in node.names)
+
+
+def test_kernels_np_imported_only_by_series_operators():
+    importers = sorted(
+        str(path.relative_to(ROOT))
+        for path, tree in _sources()
+        if not _is_test(path)
+        and any(m == "hdstats_spark.kernels_np" for m in _imported_modules(path, tree))
+    )
+    assert importers == ["hdstats_spark/operators/series.py"], importers
 
 
 def test_no_public_name_is_test_only():
