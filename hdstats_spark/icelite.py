@@ -11,7 +11,11 @@ deployment swaps `IceliteTable` for ``spark.read.format("iceberg")`` /
 Layout:
     <root>/data/<partition>=<value>/part-*.parquet
     <root>/metadata/snapshot-<id>.json     (one per commit)
-    <root>/metadata/current                 (id of the live snapshot)
+    <root>/metadata/gen-<seq>               (put-if-absent commit CAS)
+    <root>/metadata/current                 (hint: id + seq of the head)
+
+The table is one linear commit chain.  Maintenance is
+``compact_partition`` plus ``expire_snapshots``.
 
 Metadata scales like Iceberg's manifest lists, not like a naive full-map
 log: a DELTA snapshot stores only the partitions its commit touched
@@ -501,18 +505,16 @@ class IceliteTable:
     def _snapshot_path(self, sid: str) -> str:
         return os.path.join(self.meta_dir, f"snapshot-{sid}.json")
 
-    def _gen_path(self, seq: int, branch: str = "main") -> str:
-        # branch gen namespaces are disjoint from main's, so each branch
-        # head has its own put-if-absent CAS chain
-        tag = "" if branch == "main" else f"{branch}-"
-        return os.path.join(self.meta_dir, f"gen-{tag}{seq:012d}")
+    def _gen_path(self, seq: int) -> str:
+        return os.path.join(self.meta_dir, f"gen-{seq:012d}")
 
-    def _hint_path(self, branch: str = "main") -> str:
-        return os.path.join(
-            self.meta_dir, "current" if branch == "main" else f"current-{branch}"
-        )
+    def _hint_path(self) -> str:
+        return os.path.join(self.meta_dir, "current")
 
-    def current_snapshot_id(self, branch: str = "main") -> str | None:
+    def _abs(self, p: str) -> str:
+        return p if os.path.isabs(p) else os.path.join(self.root, p)
+
+    def current_snapshot_id(self) -> str | None:
         """Resolve the live snapshot: read the `current` HINT, then probe
         generation files FORWARD until the first missing one.
 
@@ -522,7 +524,7 @@ class IceliteTable:
         rewrite, so readers must probe past it.  Probing is O(1) amortized:
         the hint is rewritten on every successful commit, so the forward
         walk is almost always zero or one step."""
-        cur = self._hint_path(branch)
+        cur = self._hint_path()
         sid: str | None = None
         seq = 0
         try:
@@ -533,12 +535,11 @@ class IceliteTable:
                 # hint format "sid seq"; pre-CAS hints carried only the sid
                 seq = int(parts[1]) if len(parts) > 1 else self._load_raw(sid).seq
         except FileNotFoundError:
-            if branch != "main":
-                raise KeyError(f"no branch {branch!r}") from None
+            pass
         probe = seq + 1 if sid else 1
         while True:
             try:
-                with open(self._gen_path(probe, branch)) as f:
+                with open(self._gen_path(probe)) as f:
                     nxt = f.read().strip()
             except FileNotFoundError:
                 return sid
@@ -615,8 +616,8 @@ class IceliteTable:
             self._mcache = (orig.snapshot_id, base)
             return orig
 
-    def snapshot(self, sid: str | None = None, branch: str = "main") -> Snapshot | None:
-        sid = sid or self.current_snapshot_id(branch)
+    def snapshot(self, sid: str | None = None) -> Snapshot | None:
+        sid = sid or self.current_snapshot_id()
         if sid is None:
             return None
         return self._resolve(self._load_raw(sid))
@@ -653,205 +654,6 @@ class IceliteTable:
         for s in out:
             self._resolve(s)
         return out
-
-    # ---------------------------------------------------------- refs (tags)
-
-    def _tag_path(self, name: str) -> str:
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
-            raise ValueError(
-                f"tag name {name!r} must match [A-Za-z0-9._-]+ (it names a file)"
-            )
-        return os.path.join(self.meta_dir, f"tag-{name}.json")
-
-    def create_tag(self, name: str, snapshot_id: str | None = None) -> str:
-        """Create an immutable named ref to a snapshot (Iceberg's tags —
-        the release-pinning surface: tag the exact corpus snapshot a model
-        trained on and it stays readable verbatim, because
-        ``expire_snapshots`` never GCs a tagged snapshot or its files).
-        Defaults to the current head.  Put-if-absent (O_EXCL): a name can
-        never be silently repointed — remove and re-create to move it."""
-        sid = snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        self._load_raw(sid)  # must exist and be readable
-        path = self._tag_path(name)
-        tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"name": name, "snapshot_id": sid, "created_at": time.time()}, f
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)  # atomic-with-content put-if-absent
-        except FileExistsError:
-            raise FileExistsError(
-                f"tag {name!r} already exists (tags are immutable; "
-                "remove_tag first to repoint)"
-            ) from None
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-        return sid
-
-    def remove_tag(self, name: str) -> None:
-        try:
-            os.unlink(self._tag_path(name))
-        except FileNotFoundError:
-            raise KeyError(f"no tag {name!r}") from None
-
-    def tags(self) -> dict:
-        """{name: {"snapshot_id", "created_at"}} for every tag."""
-        out = {}
-        if not os.path.isdir(self.meta_dir):
-            return out
-        for fn in sorted(os.listdir(self.meta_dir)):
-            if fn.startswith("tag-") and fn.endswith(".json") and ".tmp." not in fn:
-                try:
-                    with open(os.path.join(self.meta_dir, fn)) as f:
-                        d = json.load(f)
-                    out[d["name"]] = {
-                        "snapshot_id": d["snapshot_id"],
-                        "created_at": d["created_at"],
-                    }
-                except (OSError, json.JSONDecodeError, KeyError):
-                    continue  # torn legacy tmp or concurrent removal
-        return out
-
-    def resolve_ref(self, name: str) -> str:
-        """Resolve a named ref — a tag first, then a branch head (one
-        namespace, like Iceberg's refs)."""
-        try:
-            with open(self._tag_path(name)) as f:
-                return json.load(f)["snapshot_id"]
-        except FileNotFoundError:
-            pass
-        try:
-            sid = self.current_snapshot_id(name)
-        except KeyError:
-            raise KeyError(f"no tag or branch {name!r}") from None
-        if sid is None:
-            raise KeyError(f"branch {name!r} has no head")
-        return sid
-
-    # ------------------------------------------------------------ branches
-
-    def create_branch(self, name: str, from_snapshot_id: str | None = None) -> str:
-        """Create a writable BRANCH (Iceberg's branches) forked from a
-        snapshot (default: current main head).  Branch commits go through
-        the same optimistic gen-file CAS as main, in a branch-scoped
-        generation namespace, so main is completely unaffected until
-        ``fast_forward`` publishes — the write-audit-publish pattern:
-        stage a corpus drop on a branch, run QC against ``read(branch=)``,
-        publish atomically (or ``drop_branch`` to discard)."""
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", name) or name == "main":
-            raise ValueError(f"invalid branch name {name!r}")
-        sid = from_snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        fork = self._load_raw(sid)
-        path = self._hint_path(name)
-        tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(f"{fork.snapshot_id} {fork.seq}")
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)  # put-if-absent: no silent re-fork
-        except FileExistsError:
-            raise FileExistsError(f"branch {name!r} already exists") from None
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-        return fork.snapshot_id
-
-    def branches(self) -> dict:
-        """{name: head snapshot_id} for every branch (main excluded)."""
-        out = {}
-        if not os.path.isdir(self.meta_dir):
-            return out
-        for fn in sorted(os.listdir(self.meta_dir)):
-            if fn.startswith("current-") and ".tmp." not in fn:
-                name = fn[len("current-"):]
-                try:
-                    out[name] = self.current_snapshot_id(name)
-                except (KeyError, OSError):
-                    continue
-        return out
-
-    def drop_branch(self, name: str) -> None:
-        """Discard a branch: its head hint and branch-scoped generation
-        files go away; its snapshots' files become unreferenced and are
-        reaped by the next ``expire_snapshots``."""
-        try:
-            os.unlink(self._hint_path(name))
-        except FileNotFoundError:
-            raise KeyError(f"no branch {name!r}") from None
-        prefix = f"gen-{name}-"
-        for fn in os.listdir(self.meta_dir):
-            if fn.startswith(prefix):
-                try:
-                    os.unlink(os.path.join(self.meta_dir, fn))
-                except FileNotFoundError:
-                    pass
-
-    def fast_forward(self, name: str) -> Snapshot:
-        """PUBLISH a branch: advance main to the branch head, valid only
-        when main is an ancestor of it (i.e. main has not moved since the
-        fork) — Iceberg's fast-forward.  Publication is the branch's
-        commits' generation files hard-linked into MAIN's namespace oldest
-        first: the first link is the same put-if-absent CAS every commit
-        uses, so a concurrent main commit makes it fail (CommitConflict)
-        and NOTHING is published out of order; a crash mid-publish leaves
-        main at a prefix of the branch — every published state is a real
-        branch state — and re-running fast_forward resumes idempotently
-        (gens already carrying our sid are skipped)."""
-        head_sid = self.current_snapshot_id(name)
-        main_sid = self.current_snapshot_id()
-        if head_sid == main_sid:
-            return self.snapshot()
-        # main must be an ancestor of the branch head
-        chain = []
-        s = self._load_raw(head_sid)
-        while s.snapshot_id != main_sid:
-            chain.append(s)
-            if s.parent_id is None:
-                raise CommitConflict(
-                    f"cannot fast-forward {name!r}: main ({main_sid}) moved "
-                    "since the fork (not an ancestor of the branch head)"
-                )
-            s = self._load_raw(s.parent_id)
-        for snap in reversed(chain):
-            gtmp = os.path.join(self.meta_dir, f".ffgen.{snap.snapshot_id}")
-            with open(gtmp, "w") as f:
-                f.write(snap.snapshot_id)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(gtmp, self._gen_path(snap.seq))
-            except FileExistsError:
-                with open(self._gen_path(snap.seq)) as f:
-                    existing = f.read().strip()
-                if existing != snap.snapshot_id:
-                    raise CommitConflict(
-                        f"cannot fast-forward {name!r}: a concurrent main "
-                        f"commit took generation {snap.seq}"
-                    )
-                # already published (resumed fast-forward) — continue
-            finally:
-                try:
-                    os.unlink(gtmp)
-                except FileNotFoundError:
-                    pass
-            tmp = os.path.join(self.meta_dir, f".current.{snap.snapshot_id}")
-            with open(tmp, "w") as f:
-                f.write(f"{snap.snapshot_id} {snap.seq}")
-            os.replace(tmp, self._hint_path())
-        return self.snapshot()
 
     # ------------------------------------------------------------- rollback
 
@@ -899,196 +701,6 @@ class IceliteTable:
             {"rollback_to": target.snapshot_id, "rollback_from": cur},
             partition_col=target.partition_col,
         )
-
-    # ------------------------------------------------------- metadata tables
-
-    _META_KINDS = ("snapshots", "files", "partitions", "tags")
-
-    def _meta_schema(self, kind: str):
-        """Spark schema of one metadata table (shared by the DataFrame
-        methods below and the data source's ``metadata`` option)."""
-        from pyspark.sql import types as T
-
-        if kind == "snapshots":
-            return T.StructType(
-                [
-                    T.StructField("seq", T.LongType(), False),
-                    T.StructField("snapshot_id", T.StringType(), False),
-                    T.StructField("parent_id", T.StringType(), True),
-                    T.StructField("operation", T.StringType(), False),
-                    T.StructField("kind", T.StringType(), False),
-                    T.StructField("fmt", T.LongType(), False),
-                    T.StructField("committed_at", T.DoubleType(), False),
-                    T.StructField("is_current", T.BooleanType(), False),
-                    T.StructField("partitions", T.LongType(), False),
-                    T.StructField("data_files", T.LongType(), False),
-                    T.StructField("delete_files", T.LongType(), False),
-                    T.StructField("rows", T.LongType(), False),
-                    T.StructField("lineage", T.StringType(), True),
-                ]
-            )
-        if kind == "files":
-            return T.StructType(
-                [
-                    T.StructField("partition", T.StringType(), False),
-                    T.StructField("path", T.StringType(), False),
-                    T.StructField("content", T.StringType(), False),
-                    T.StructField("birth_seq", T.LongType(), False),
-                    T.StructField("size_bytes", T.LongType(), True),
-                    T.StructField("row_count", T.LongType(), True),
-                    T.StructField("stats", T.StringType(), True),
-                ]
-            )
-        if kind == "tags":
-            return T.StructType(
-                [
-                    T.StructField("name", T.StringType(), False),
-                    T.StructField("snapshot_id", T.StringType(), False),
-                    T.StructField("created_at", T.DoubleType(), False),
-                ]
-            )
-        if kind == "partitions":
-            return T.StructType(
-                [
-                    T.StructField("partition", T.StringType(), False),
-                    T.StructField("data_files", T.LongType(), False),
-                    T.StructField("delete_files", T.LongType(), False),
-                    T.StructField("rows", T.LongType(), False),
-                    T.StructField("size_bytes", T.LongType(), True),
-                ]
-            )
-        raise ValueError(f"unknown metadata table {kind!r}; one of {self._META_KINDS}")
-
-    def _abs(self, p: str) -> str:
-        return p if os.path.isabs(p) else os.path.join(self.root, p)
-
-    def _meta_rows(self, kind: str, snapshot_id: str | None = None) -> list[tuple]:
-        """Rows of one metadata table — plain tuples matching
-        ``_meta_schema(kind)``.  All three are driver-side walks of the tiny
-        JSON metadata (Iceberg's metadata tables likewise read manifests,
-        not data); ``files`` additionally stats each file and reads parquet
-        footers for row counts — metadata-only I/O, threadpooled like the
-        writer's stats pass."""
-        if kind == "snapshots":
-            cur = self.current_snapshot_id()
-            out = []
-            for s in self.snapshots():
-                files = sum(len(m["files"]) for m in s.partitions.values())
-                dels = sum(len(m.get("deletes") or ()) for m in s.partitions.values())
-                rows = sum(int(m["rows"]) for m in s.partitions.values())
-                out.append(
-                    (
-                        int(s.seq),
-                        s.snapshot_id,
-                        s.parent_id,
-                        s.operation,
-                        s.kind,
-                        int(s.fmt),
-                        float(s.committed_at),
-                        s.snapshot_id == cur,
-                        len(s.partitions),
-                        files,
-                        dels,
-                        rows,
-                        json.dumps(s.lineage, sort_keys=True, default=str)
-                        if s.lineage
-                        else None,
-                    )
-                )
-            return out
-
-        if kind == "tags":
-            return [
-                (name, t["snapshot_id"], float(t["created_at"]))
-                for name, t in self.tags().items()
-            ]
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            return []
-        if kind == "partitions":
-            out = []
-            for value in sorted(snap.partitions):
-                m = snap.partitions[value]
-                size = 0
-                for f in m["files"]:
-                    try:
-                        size += os.stat(self._abs(f)).st_size
-                    except OSError:
-                        size = None
-                        break
-                out.append(
-                    (
-                        value,
-                        len(m["files"]),
-                        len(m.get("deletes") or ()),
-                        int(m["rows"]),
-                        size,
-                    )
-                )
-            return out
-
-        if kind == "files":
-            from concurrent.futures import ThreadPoolExecutor
-
-            entries = []  # (partition, path, content, birth_seq, stats)
-            for value in sorted(snap.partitions):
-                m = snap.partitions[value]
-                fseq = m.get("fseq") or [0] * len(m["files"])
-                stats = m.get("stats") or [None] * len(m["files"])
-                for f, bs, st in zip(m["files"], fseq, stats):
-                    entries.append((value, f, "data", int(bs), st))
-                for d in m.get("deletes") or ():
-                    entries.append((value, d["file"], "eq_delete", int(d.get("seq") or 0), None))
-
-            def probe(path):
-                try:
-                    import pyarrow.parquet as pq
-
-                    ap = self._abs(path)
-                    return os.stat(ap).st_size, pq.ParquetFile(ap).metadata.num_rows
-                except OSError:
-                    return None, None
-
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                probed = list(ex.map(probe, [e[1] for e in entries]))
-            return [
-                (
-                    value,
-                    f,
-                    content,
-                    bs,
-                    size,
-                    rows,
-                    json.dumps(st, sort_keys=True, default=str) if st else None,
-                )
-                for (value, f, content, bs, st), (size, rows) in zip(entries, probed)
-            ]
-        raise ValueError(f"unknown metadata table {kind!r}; one of {self._META_KINDS}")
-
-    def _meta_df(self, spark: SparkSession, kind: str, snapshot_id: str | None = None):
-        return spark.createDataFrame(
-            self._meta_rows(kind, snapshot_id), self._meta_schema(kind)
-        )
-
-    def snapshots_df(self, spark: SparkSession) -> DataFrame:
-        """The ``snapshots`` metadata table (Iceberg's ``tbl.snapshots`` /
-        ``tbl.history``): one row per retained commit, oldest first, with
-        per-snapshot resolved totals and the current-head flag."""
-        return self._meta_df(spark, "snapshots")
-
-    def files_df(self, spark: SparkSession, snapshot_id: str | None = None) -> DataFrame:
-        """The ``files`` metadata table (Iceberg's ``tbl.files``): one row
-        per live data/equality-delete file of a snapshot, with its
-        partition value, birth commit seq, size, footer row count, and the
-        recorded min/max column stats as JSON."""
-        return self._meta_df(spark, "files", snapshot_id)
-
-    def partitions_df(
-        self, spark: SparkSession, snapshot_id: str | None = None
-    ) -> DataFrame:
-        """The ``partitions`` metadata table (Iceberg's ``tbl.partitions``):
-        per-partition file/row/byte totals of a snapshot."""
-        return self._meta_df(spark, "partitions", snapshot_id)
 
     # --------------------------------------------------------------- locking
 
@@ -1314,12 +926,12 @@ class IceliteTable:
 
     TORN_GEN_STALENESS = 5.0  # seconds before an empty gen file is reclaimable
 
-    def _reclaim_torn_gen(self, seq: int, branch: str = "main") -> bool:
+    def _reclaim_torn_gen(self, seq: int) -> bool:
         """True if gen-<seq> was a torn publish (EMPTY — possible only from
         a pre-link-protocol crash between create and write) older than the
         staleness bound, now unlinked so the caller may retry its CAS.
         A non-empty gen file is a real committed generation: never touched."""
-        path = self._gen_path(seq, branch)
+        path = self._gen_path(seq)
         try:
             st = os.stat(path)
             if st.st_size > 0 or (time.time() - st.st_mtime) < self.TORN_GEN_STALENESS:
@@ -1338,9 +950,7 @@ class IceliteTable:
             except FileNotFoundError:
                 pass
 
-    def _commit(
-        self, snap: Snapshot, expected_parent: str | None, branch: str = "main"
-    ) -> Snapshot:
+    def _commit(self, snap: Snapshot, expected_parent: str | None) -> Snapshot:
         """Optimistic-concurrency commit.  What DECIDES the commit is a
         PUT-IF-ABSENT of the generation file `gen-<seq>` (atomic hard-link
         publish: link(2) fails EEXIST exactly like O_EXCL, but the visible
@@ -1363,10 +973,10 @@ class IceliteTable:
         os.makedirs(self.meta_dir, exist_ok=True)  # lock="none" has no acquire-side mkdir
         fd = self._acquire_lock()
         try:
-            if self.current_snapshot_id(branch) != expected_parent:
+            if self.current_snapshot_id() != expected_parent:
                 raise CommitConflict(
                     f"expected parent {expected_parent!r}, found "
-                    f"{self.current_snapshot_id(branch)!r}"
+                    f"{self.current_snapshot_id()!r}"
                 )
             snap.committed_at = time.time()
             with open(self._snapshot_path(snap.snapshot_id), "w") as f:
@@ -1386,15 +996,15 @@ class IceliteTable:
                 f.flush()
                 os.fsync(f.fileno())
             try:
-                os.link(gtmp, self._gen_path(snap.seq, branch))
+                os.link(gtmp, self._gen_path(snap.seq))
             except FileExistsError:
                 # lost the generation race — UNLESS the existing file is a
                 # legacy torn/empty publish (pre-link-era crash): those are
                 # unreadable garbage nobody references, so reclaim after a
                 # staleness bound instead of wedging the table forever.
-                if self._reclaim_torn_gen(snap.seq, branch):
+                if self._reclaim_torn_gen(snap.seq):
                     try:
-                        os.link(gtmp, self._gen_path(snap.seq, branch))
+                        os.link(gtmp, self._gen_path(snap.seq))
                     except (FileExistsError, OSError):
                         self._drop_commit_tmp(gtmp, snap)
                         raise CommitConflict(
@@ -1413,7 +1023,7 @@ class IceliteTable:
             tmp = os.path.join(self.meta_dir, f".current.{snap.snapshot_id}")
             with open(tmp, "w") as f:
                 f.write(f"{snap.snapshot_id} {snap.seq}")
-            os.replace(tmp, self._hint_path(branch))  # hint flip
+            os.replace(tmp, self._hint_path())  # hint flip
             self._mcache = (snap.snapshot_id, snap.partitions)
             return snap
         finally:
@@ -1427,7 +1037,6 @@ class IceliteTable:
         lineage: dict | None,
         data_fields: list[dict] | None = None,
         partition_col: str | None = None,
-        branch: str = "main",
     ) -> Snapshot:
         """Shared optimistic-retry loop for append/overwrite: derive a child
         of the current head, CAS-commit, re-derive on a lost race.  Lost
@@ -1440,7 +1049,7 @@ class IceliteTable:
         retry loop against each freshly-read head, so a concurrent writer's
         add-column is honored rather than clobbered."""
         for attempt in range(50):
-            prev = self.snapshot(branch=branch)
+            prev = self.snapshot()
             schema = (
                 _evolve_schema(prev.schema if prev else None, data_fields, operation)
                 if data_fields is not None
@@ -1452,7 +1061,6 @@ class IceliteTable:
                         prev, operation, mode, parts, lineage, schema, partition_col
                     ),
                     expected_parent=prev.snapshot_id if prev else None,
-                    branch=branch,
                 )
             except CommitConflict:
                 time.sleep(min(0.002 * attempt, 0.05) + (os.getpid() % 16) * 0.0004)
@@ -1718,13 +1326,10 @@ class IceliteTable:
         partition_col: str | None = None,
         lineage: dict | None = None,
         cluster: str = "roundrobin",
-        branch: str = "main",
     ) -> Snapshot:
         fields = self._precheck_schema(df, partition_col, "append")
         new = self._write_partition_files(df, partition_col, cluster)
-        return self._commit_delta(
-            "append", "append", new, lineage, fields, partition_col, branch
-        )
+        return self._commit_delta("append", "append", new, lineage, fields, partition_col)
 
     def overwrite_partitions(
         self,
@@ -1732,15 +1337,12 @@ class IceliteTable:
         partition_col: str,
         lineage: dict | None = None,
         cluster: str = "roundrobin",
-        branch: str = "main",
     ) -> Snapshot:
         """Idempotent re-roll: replace exactly the partitions present in df
         (late-data handling — SURVEY.md §2 streaming notes)."""
         fields = self._precheck_schema(df, partition_col, "overwrite")
         new = self._write_partition_files(df, partition_col, cluster)
-        return self._commit_delta(
-            "overwrite", "replace", new, lineage, fields, partition_col, branch
-        )
+        return self._commit_delta("overwrite", "replace", new, lineage, fields, partition_col)
 
     def _write_delete_key_files(
         self, keys_df: DataFrame, key_cols: list[str], partition_col: str | None
@@ -1965,7 +1567,6 @@ class IceliteTable:
         partitions: list[str] | None = None,
         where: dict | None = None,
         as_of: float | None = None,
-        ref: str | None = None,
     ) -> DataFrame:
         """Read a snapshot (default: current), optionally pruned to given
         partition values — manifest-level partition pruning, so Spark never
@@ -1982,12 +1583,7 @@ class IceliteTable:
         point lookup (one conv_id, one hour) touches the few files whose
         range covers it instead of every file of the matching day.
         ``self.last_scan`` records (files_considered, files_read) for plan
-        assertions and the bench harness.  ``ref`` reads a named tag
-        (mutually exclusive with snapshot_id/as_of)."""
-        if ref is not None:
-            if snapshot_id is not None or as_of is not None:
-                raise ValueError("pass ref OR snapshot_id/as_of, not both")
-            snapshot_id = self.resolve_ref(ref)
+        assertions and the bench harness."""
         had_where = bool(where)
         snap, classes, dentries, where = self._plan_scan(
             snapshot_id, partitions, where, as_of
@@ -2856,78 +2452,6 @@ class IceliteTable:
 
     # ------------------------------------------------------- maintenance
 
-    def maintain(
-        self,
-        spark: SparkSession,
-        partition_col: str | None = None,
-        max_files: int = 8,
-        max_delete_files: int = 2,
-        target_files: int = 1,
-        cluster_col: str | list[str] | None = None,
-        keep_last: int | None = None,
-        older_than_s: float | None = None,
-        orphans_older_than_s: float | None = None,
-    ) -> dict:
-        """One idempotent MAINTENANCE pass — the policy wrapper a scheduler
-        (cron, the streaming sink's ``compact_every`` hook, an Airflow
-        task) calls instead of hand-sequencing Iceberg-style actions:
-
-        1. compact every partition whose data-file count exceeds
-           ``max_files`` OR whose pending equality-delete backlog exceeds
-           ``max_delete_files`` delete files (compaction also materializes
-           the backlog, restoring the anti-join-free read plan), rewriting
-           to ``target_files`` files, optionally ``cluster_col``-clustered
-           (Z-order when a list is given);
-        2. if ``keep_last``/``older_than_s`` is given, ``expire_snapshots``
-           afterwards (tagged snapshots stay pinned);
-        3. if ``orphans_older_than_s`` is given, ``remove_orphan_files``
-           last (crash-abandoned writes past the safety bound).
-
-        Conflict-skipped compactions (a concurrent writer touched the
-        partition) are counted, not raised — the next pass retries, so
-        running this from multiple schedules is safe.  Partition order is
-        deterministic (sorted) and each compaction is its own commit, so a
-        crash mid-pass loses nothing.  Returns
-        ``{"compacted": [...], "skipped": [...], "expired": {...}|None}``."""
-        snap = self.snapshot()
-        if snap is None:
-            # same key set as every other return path (callers index
-            # result["orphans"] unconditionally)
-            return {"compacted": [], "skipped": [], "expired": None, "orphans": None}
-        pcol = partition_col or snap.partition_col
-        if pcol is None:
-            raise ValueError("maintain needs partition_col (unversioned table)")
-        backlog = self.pending_deletes()
-        compacted, skipped = [], []
-        for value in sorted(snap.partitions):
-            m = snap.partitions[value]
-            if (
-                len(m["files"]) <= max_files
-                and backlog.get(value, {}).get("files", 0) <= max_delete_files
-            ):
-                continue
-            res = self.compact_partition(
-                spark, pcol, value, target_files, cluster_col=cluster_col
-            )
-            (compacted if res is not None else skipped).append(value)
-        expired = None
-        if keep_last is not None or older_than_s is not None:
-            expired = self.expire_snapshots(
-                keep_last=keep_last if keep_last is not None else 1,
-                older_than_s=older_than_s,
-            )
-        orphans = (
-            self.remove_orphan_files(orphans_older_than_s)
-            if orphans_older_than_s is not None
-            else None
-        )
-        return {
-            "compacted": compacted,
-            "skipped": skipped,
-            "expired": expired,
-            "orphans": orphans,
-        }
-
     def compact_partition(
         self,
         spark: SparkSession,
@@ -3218,75 +2742,6 @@ class IceliteTable:
                 raise
         raise CommitConflict(f"delete_where lost {retries} planning rounds")
 
-    def remove_orphan_files(self, older_than_s: float = 86400.0) -> dict:
-        """Delete data/delete-key files referenced by NO retained snapshot —
-        Iceberg's ``remove_orphan_files``.  Orphans come from crashed or
-        conflict-abandoned writes (a commit dir written but never
-        referenced; ``expire_snapshots`` only reaps files that once
-        belonged to a now-expired snapshot, so true never-committed
-        leftovers accumulate forever without this).
-
-        ``older_than_s`` is the safety bound (Iceberg's default is 3
-        days; ours is 24 h): a file younger than it is NEVER touched,
-        because it may belong to an in-flight commit whose manifest hasn't
-        landed yet — the commit protocol writes files first, references
-        them last, so the bound MUST exceed the longest possible
-        write-to-commit window (a multi-hour Spark write would have been
-        reaped under the old 1 h default).
-        Runs under the commit lock so the referenced-set can't grow
-        mid-scan.  Returns {"files_removed": n, "dirs_removed": n}."""
-        import shutil
-
-        fd = self._acquire_lock()
-        try:
-            referenced: set[str] = set()
-            for s in self.snapshots():
-                for m in s.partitions.values():
-                    referenced.update(
-                        os.path.abspath(self._abs(f)) for f in m["files"]
-                    )
-                    referenced.update(
-                        os.path.abspath(self._abs(d["file"]))
-                        for d in m.get("deletes") or ()
-                    )
-            cutoff = time.time() - older_than_s
-            removed = 0
-            if os.path.isdir(self.data_dir):
-                for dirpath, _, files in os.walk(self.data_dir):
-                    for fn in files:
-                        # Spark write-protocol markers live beside LIVE
-                        # files without being referenced; husk-dir cleanup
-                        # below (and in expire_snapshots) owns them
-                        if fn == "_SUCCESS" or fn.endswith(".crc") or fn.startswith("._"):
-                            continue
-                        p = os.path.abspath(os.path.join(dirpath, fn))
-                        if p in referenced:
-                            continue
-                        try:
-                            if os.stat(p).st_mtime >= cutoff:
-                                continue
-                            os.unlink(p)
-                            removed += 1
-                        except OSError:
-                            continue
-            # drop commit dirs that are now empty (or marker-only husks)
-            dirs_removed = 0
-            if os.path.isdir(self.data_dir):
-                for entry in os.listdir(self.data_dir):
-                    d = os.path.join(self.data_dir, entry)
-                    if not os.path.isdir(d):
-                        continue
-                    leftover = [
-                        f for _, _, fs in os.walk(d) for f in fs
-                        if not (f == "_SUCCESS" or f.endswith(".crc") or f.startswith("._"))
-                    ]
-                    if not leftover:
-                        shutil.rmtree(d, ignore_errors=True)
-                        dirs_removed += 1
-            return {"files_removed": removed, "dirs_removed": dirs_removed}
-        finally:
-            self._release_lock(fd)
-
     def expire_snapshots(
         self, keep_last: int = 1, older_than_s: float | None = None
     ) -> dict:
@@ -3311,52 +2766,28 @@ class IceliteTable:
             current = self.current_snapshot_id()
             cutoff = time.time() - older_than_s if older_than_s is not None else None
             by_id = {s.snapshot_id: s for s in snaps}
-            # the retention suffix counts MAIN-chain snapshots only; branch
-            # commits interleave in `snaps` (they share seq numbers) and are
-            # pinned separately below
-            main_chain: set[str] = set()
+            # the retention suffix counts the chain behind the head only:
+            # a crash-orphaned snapshot JSON (written, never won its gen
+            # CAS) shares a seq with a committed one and must not take its
+            # place in the suffix
+            head_chain: set[str] = set()
             sid = current
             while sid is not None and sid in by_id:
-                main_chain.add(sid)
+                head_chain.add(sid)
                 sid = by_id[sid].parent_id
-            mains = [s for s in snaps if s.snapshot_id in main_chain]
-            keep: set[str] = set(s.snapshot_id for s in mains[-keep_last:]) if keep_last else set()
+            chain = [s for s in snaps if s.snapshot_id in head_chain]
+            keep: set[str] = set(s.snapshot_id for s in chain[-keep_last:]) if keep_last else set()
             if current:
                 keep.add(current)
             if cutoff is not None:
                 keep.update(s.snapshot_id for s in snaps if s.committed_at >= cutoff)
-            # TAGGED snapshots are pinned (Iceberg's tag-retention rule):
-            # a tag whose snapshot predates the kept suffix survives as an
-            # ISLAND — checkpointed below so it resolves without ancestors
-            present = {s.snapshot_id for s in snaps}
-            keep.update(
-                t["snapshot_id"]
-                for t in self.tags().values()
-                if t["snapshot_id"] in present
-            )
-            # BRANCHES pin their own commits (walk from each head until the
-            # MAIN chain or an already-kept snapshot): the island-checkpoint
-            # rule below keeps the oldest one resolvable if its fork-side
-            # ancestors expire, and fast_forward only ever walks down to
-            # the CURRENT main head, which is always kept.  drop_branch
-            # releases the pin.
-            for bhead in self.branches().values():
-                sid = bhead
-                while (
-                    sid is not None
-                    and sid in by_id
-                    and sid not in keep
-                    and sid not in main_chain
-                ):
-                    keep.add(sid)
-                    sid = by_id[sid].parent_id
             expired = [s for s in snaps if s.snapshot_id not in keep]
             if not expired:
                 return {"snapshots_removed": 0, "files_removed": 0}
             # keep the survivors resolvable: any retained snapshot whose
-            # parent is expiring (the suffix's oldest, and every tagged
-            # island) is rewritten as a checkpoint before its ancestors
-            # disappear
+            # parent is expiring (the suffix's oldest, and any orphan kept
+            # by the age bound) is rewritten as a checkpoint before its
+            # ancestors disappear
             kept = [s for s in snaps if s.snapshot_id in keep]
             expired_ids = {s.snapshot_id for s in expired}
             for s in kept:
@@ -3413,17 +2844,17 @@ class IceliteTable:
                 try:
                     # every expired generation is below the hint's seq (the
                     # head always survives), and the reader probe only walks
-                    # FORWARD from the hint — holes below it (incl. around
-                    # tagged islands) are never visited.  Content check:
-                    # an expired snapshot from a DROPPED BRANCH shares seq
-                    # numbers with live main commits but never owns the
-                    # main-namespace gen file — unlink only our own.
+                    # FORWARD from the hint — holes below it are never
+                    # visited.  Content check: a CAS loser or torn commit
+                    # shares its seq with the commit that won that
+                    # generation but never owns the gen file — unlink only
+                    # our own.
                     gp = self._gen_path(s.seq)
                     with open(gp) as f:
                         if f.read().strip() == s.snapshot_id:
                             os.unlink(gp)
                 except (FileNotFoundError, OSError):
-                    pass  # pre-CAS table / branch-only generation
+                    pass  # pre-CAS table / generation won by another commit
             # drop now-empty commit dirs so the data tree stays listable.
             # Spark/Hadoop leave _SUCCESS and .crc sidecars behind in every
             # commit dir — they are write-protocol artifacts, never

@@ -39,8 +39,7 @@ Iceberg's streaming-read contract; ``option("on_replace", "skip")``
 ignores replace commits (content-preserving for compaction), and a start
 offset older than the retained chain fails loudly (``expire_snapshots``
 GC'd it).  ``option("starting", "latest")`` begins at the current head
-instead of the table's first commit; ``option("branch", name)`` tails a
-branch head instead of main (works for the CDC stream too).
+instead of the table's first commit.
 
 Streaming CDC::
 
@@ -238,36 +237,6 @@ def _filter_spec(f) -> tuple[str, tuple] | None:
     return None
 
 
-@dataclass
-class _MetaSlice(InputPartition):
-    """One metadata table, rows precomputed on the driver (metadata tables
-    are tiny JSON walks — shipping the rows beats re-walking per executor)."""
-
-    rows: tuple
-
-
-class IceliteMetadataReader(DataSourceReader):
-    """Reader for ``option("metadata", "snapshots"|"files"|"partitions")`` —
-    the data-source face of Iceberg's metadata tables::
-
-        spark.read.format("icelite").option("metadata", "files").load(root)
-    """
-
-    def __init__(self, root: str, options: dict):
-        self._root = root
-        self._options = options
-
-    def partitions(self):
-        t = IceliteTable(self._root)
-        rows = t._meta_rows(
-            self._options["metadata"], self._options.get("snapshot_id")
-        )
-        return [_MetaSlice(tuple(rows))]
-
-    def read(self, partition: _MetaSlice):
-        yield from partition.rows
-
-
 class IceliteBatchReader(DataSourceReader):
     def __init__(self, root: str, options: dict, schema: StructType):
         self._root = root
@@ -294,8 +263,6 @@ class IceliteBatchReader(DataSourceReader):
         pj = self._options.get("partitions")
         as_of = self._options.get("as_of")
         sid = self._options.get("snapshot_id")
-        if self._options.get("ref"):
-            sid = t.resolve_ref(self._options["ref"])
         snap, classes, dentries, _ = t._plan_scan(
             snapshot_id=sid,
             partitions=json.loads(pj) if pj else None,
@@ -371,14 +338,9 @@ _CDC_COLS = (
 
 
 class IceliteStreamReader(DataSourceStreamReader):
-    """``option("branch", name)`` streams a BRANCH head instead of main —
-    offsets advance with the branch's own commits (write-audit pipelines
-    can tail their staging branch)."""
-
     def __init__(self, root: str, options: dict, schema: StructType):
         self._root = root
         self._schema = schema
-        self._branch = options.get("branch", "main")
         self._on_replace = options.get("on_replace", "error")
         self._starting = options.get("starting", "earliest")
         if self._starting not in ("earliest", "latest"):
@@ -386,7 +348,7 @@ class IceliteStreamReader(DataSourceStreamReader):
 
     def _head(self) -> dict:
         t = IceliteTable(self._root)
-        sid = t.current_snapshot_id(self._branch)
+        sid = t.current_snapshot_id()
         if sid is None:
             return {"seq": 0, "sid": None}
         s = t._load_raw(sid)
@@ -738,9 +700,6 @@ class IceliteDataSource(DataSource):
 
     def schema(self) -> StructType:
         t = IceliteTable(self._root())
-        meta = self.options.get("metadata")
-        if meta:
-            return t._meta_schema(meta)
         if self._cdc():
             from pyspark.sql.types import (
                 DoubleType,
@@ -765,9 +724,6 @@ class IceliteDataSource(DataSource):
             )
         as_of = self.options.get("as_of")
         sid = self.options.get("snapshot_id")
-        ref = self.options.get("ref")
-        if ref:
-            sid = t.resolve_ref(ref)
         snap = t.snapshot_as_of(float(as_of)) if as_of else t.snapshot(sid)
         if snap is None:
             raise FileNotFoundError(f"no snapshot in {t.root}")
@@ -796,8 +752,6 @@ class IceliteDataSource(DataSource):
         return from_arrow_schema(pq.ParquetFile(probe).schema_arrow)
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        if self.options.get("metadata"):
-            return IceliteMetadataReader(self._root(), dict(self.options))
         return IceliteBatchReader(self._root(), dict(self.options), schema)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:

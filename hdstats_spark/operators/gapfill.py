@@ -66,16 +66,3 @@ def completion(dense_df: DataFrame, channels=CHANNELS) -> DataFrame:
         *[F.coalesce(F.col(c), F.avg(c).over(w_all)).alias(c) for c in channels],
     )
 
-
-def locf(df: DataFrame, order_col: str, value_cols, partition_col: str = "conv_id") -> DataFrame:
-    """Plain forward-fill (last observation carried forward) without
-    densification — the sparse-series variant."""
-    w = (
-        Window.partitionBy(partition_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = df
-    for c in value_cols:
-        out = out.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
-    return out

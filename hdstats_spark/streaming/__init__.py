@@ -1,2 +1,3 @@
 """Structured Streaming surface: continuous 1m tier with watermarked late
-data (optional engine surface, SURVEY.md §2.10)."""
+data, committed to icelite per micro-batch (optional engine surface,
+SURVEY.md §2.10)."""

@@ -1,12 +1,14 @@
 """Streaming 1m tier: transcripts stream → watermarked tumbling-window
-continuous aggregate.
+continuous aggregate, committed to icelite per micro-batch.
 
 The batch engine treats late turns by re-rolling day partitions
 (TierPipeline.reroll_days); this surface handles them online instead:
 `withWatermark(ts, …)` bounds state, a 1-minute tumbling `window()` produces
 the same channel sums as rollup_raw, and the sink is append-mode so each
-bucket is emitted exactly once when its watermark passes — an Iceberg/parquet
-append per micro-batch commit.
+bucket is emitted exactly once when its watermark passes.
+``run_stream_to_icelite`` drives it into a foreachBatch sink
+(``icelite_sink``) that makes each micro-batch an icelite append commit and
+can keep the 1h/1d tiers and the geomedian composite current.
 
 The aggregation expressions are shared with the batch path (same semantics,
 one definition — rollup channels), so streamed buckets equal batch buckets
@@ -20,10 +22,6 @@ from pyspark.sql import functions as F
 
 from ..operators.channels import channelize
 from ..schema import TRANSCRIPT_SCHEMA
-
-# streaming_decontaminate dirty-set broadcasts, keyed per stream identity
-# (lifecycle: swapped out per same-key call, see that function)
-_dirty_broadcasts: dict[tuple, object] = {}
 
 
 def stream_transcripts_from_dir(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
@@ -54,708 +52,6 @@ def streaming_rollup_1m(transcripts_stream: DataFrame, watermark: str = "10 minu
         )
     )
     return agg.select("conv_id", F.col("w.start").alias("bucket"), *[c for c in agg.columns if c not in ("conv_id", "w")])
-
-
-def streaming_gapfill(
-    tier_stream: DataFrame,
-    channels,
-    step_seconds: int = 60,
-    key_col: str = "conv_id",
-    order_col: str = "bucket",
-) -> DataFrame:
-    """Stateful ONLINE gap-fill (SURVEY §2.10): the causal half of the
-    reference's ``completion`` (tsslow.py:11-17 forward-fill) as an
-    ``applyInPandasWithState`` operator.
-
-    Per conversation the state carries (last bucket, last channel vector);
-    each arriving tier row first emits LOCF rows for every missing bucket
-    since the last observation (is_gap=1), then the observation itself
-    (is_gap=0).  The non-causal half of completion (leading-hole backfill
-    with the series mean) needs the whole series and stays batch-only —
-    streamed output therefore equals batch densify+locf exactly, which is
-    what tests/test_streaming.py asserts.
-
-    Ordering contract: the per-group Arrow iterator may split one
-    micro-batch's rows across chunks, so the group is materialized and sorted
-    ONCE before the gap expansion; rows at or before the state clock (late
-    arrivals older than what LOCF already emitted) are DROPPED here — late
-    data is the batch reroll path's job (TierPipeline.reroll_days), and
-    emitting them online would duplicate already-emitted buckets.
-
-    Scale: state per series is one float vector (p≈8 doubles) + a long —
-    10^9 live conversations ≈ 100 GB of state across the cluster, well within
-    RocksDB state-store territory; the grouping key partitions state exactly
-    like every batch kernel (same conv_id hash)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    chans = list(channels)
-    out_schema = (
-        f"{key_col} string, {order_col} timestamp, is_gap int, "
-        + ", ".join(f"{c} double" for c in chans)
-    )
-    state_schema = "last_sec long, " + ", ".join(f"s_{c} double" for c in chans)
-
-    step = step_seconds
-
-    def fn(key, pdf_iter, state: GroupState):
-        conv = key[0]
-        if state.exists:
-            st = state.get
-            last_sec = st[0]
-            last_vals = np.asarray(st[1:], dtype=np.float64)
-        else:
-            last_sec, last_vals = None, None
-        # one group's micro-batch may arrive in several Arrow chunks, and
-        # chunks are not globally ordered — materialize + sort the WHOLE
-        # group before expanding gaps (per-chunk sorting moved state
-        # backwards on out-of-order chunks and emitted duplicate buckets)
-        pdfs = [p for p in pdf_iter if len(p)]
-        if not pdfs:
-            return
-        pdf = (pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)).sort_values(order_col)
-        secs = pdf[order_col].to_numpy("datetime64[us]").astype("int64") // 1_000_000
-        vals = pdf[chans].to_numpy(dtype=np.float64)
-        if last_sec is not None:
-            # drop late rows at/before the state clock: their buckets were
-            # already emitted (as LOCF or observations) — replaying them
-            # online would duplicate output; late data goes to reroll_days
-            keep = secs > last_sec
-            secs, vals = secs[keep], vals[keep]
-        if secs.size == 0:
-            return
-        if last_sec is None:
-            prev_secs = np.concatenate((secs[:1], secs[:-1]))
-            prev_vals = np.vstack((vals[:1], vals[:-1]))
-        else:
-            prev_secs = np.concatenate(([last_sec], secs[:-1]))
-            prev_vals = np.vstack((last_vals[None, :], vals[:-1]))
-        # vectorized LOCF gap expansion: row i owes (Δ/step − 1) gap rows
-        # carrying the PREVIOUS observation's values
-        out = []
-        n_gaps = np.maximum((secs - prev_secs) // step - 1, 0)
-        total = int(n_gaps.sum())
-        if total:
-            reps = np.repeat(np.arange(len(secs)), n_gaps)
-            starts = np.cumsum(n_gaps) - n_gaps
-            k = np.arange(total, dtype=np.int64) - np.repeat(starts, n_gaps) + 1
-            gap = {
-                key_col: np.repeat(conv, total),
-                order_col: pd.to_datetime(prev_secs[reps] + k * step, unit="s", utc=True),
-                "is_gap": np.ones(total, dtype=np.int32),
-            }
-            gv = prev_vals[reps]
-            gap.update({c: gv[:, j] for j, c in enumerate(chans)})
-            out.append(pd.DataFrame(gap))
-        obs = {
-            key_col: np.repeat(conv, len(secs)),
-            order_col: pd.to_datetime(secs, unit="s", utc=True),
-            "is_gap": np.zeros(len(secs), dtype=np.int32),
-        }
-        obs.update({c: vals[:, j] for j, c in enumerate(chans)})
-        out.append(pd.DataFrame(obs))
-        state.update((int(secs[-1]), *[float(v) for v in vals[-1]]))
-        yield pd.concat(out, ignore_index=True)
-
-    return tier_stream.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_exact_dedup(
-    doc_stream: DataFrame,
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming exact deduplication for document ingest: content digest
-    (md5 of the whitespace/case-normalized text) + Spark's
-    ``dropDuplicatesWithinWatermark`` — each distinct digest is emitted
-    exactly once, and digest state is reclaimed once the watermark passes
-    (bounded state, unlike a plain dropDuplicates which would pin every
-    digest forever).  The batch twin is the `exact_dedup` driver query; a
-    duplicate arriving LATER than the watermark is the batch reroll path's
-    job, the same contract as streaming_gapfill's late rows.
-
-    Scale: state is one (digest, max-ts) entry per distinct document inside
-    the watermark window — RocksDB-state-store territory at 10^9 docs/day;
-    the digest hash-partitions the stream exactly like a batch
-    groupBy(digest)."""
-    digest = F.md5(F.lower(F.trim(F.col(text_col))))
-    return (
-        doc_stream.withColumn("digest", digest)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["digest"])
-    )
-
-
-def streaming_neardup_simhash(
-    doc_stream: DataFrame,
-    max_hamming: int = 3,
-    watermark: str = "10 minutes",
-    state_ttl_seconds: int = 3600,
-    max_state_docs: int = 256,
-    ts_col: str = "ts",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming NEAR-duplicate detection — the online counterpart of the
-    batch ``simhash_pairs`` operator, same blocking algebra:
-
-      1. stateless fingerprinting: the batch SimHash mapInPandas kernel runs
-         unchanged on the stream (simhash_fingerprints with the event-time
-         column carried through);
-      2. each doc explodes into its 4 16-bit band keys (a pair within
-         Hamming ≤ 3 must agree on ≥1 band — the batch operator's guarantee,
-         reused verbatim);
-      3. an ``applyInPandasWithState`` index keyed by (band, key): state is
-         the (doc_id, fingerprint) list seen in that bucket; each arriving
-         doc is verified with a vectorized XOR-popcount against the bucket's
-         fingerprints, emitting (id_a, id_b, hamming, ts) for every match,
-         then appended to the bucket.
-
-    Exactly-once pairs WITHOUT a second stateful operator (Spark's
-    correctness checker rejects chaining another watermark-stateful op after
-    applyInPandasWithState): a pair agreeing on several bands is discovered
-    in every agreeing band's bucket, but since both fingerprints are in hand
-    the operator computes the pair's full agreement set locally and only the
-    MINIMAL agreeing band's bucket emits it.  The one caveat: if the
-    hot-bucket cap evicted the stored doc from that minimal band's bucket
-    (but not another's), the pair is suppressed with it — the cap trades
-    bounded state for recall on pathological buckets, documented below.
-    Eviction does NOT weaken replay idempotence: evicted ids stay in a
-    bounded FIFO set the replay guard also checks, so an at-least-once
-    replay of an evicted doc is ignored rather than re-inserted.
-
-    Scale: state per (band, key) bucket is ≤ max_state_docs (id, fp) longs —
-    hot buckets degrade to most-recent-docs recall rather than unbounded
-    state — and EventTimeTimeout reclaims buckets idle past
-    ``state_ttl_seconds`` beyond the watermark, so total state is bounded by
-    the live-bucket count, hash-partitioned on the band key exactly like the
-    batch self-join.  A dup arriving later than the TTL is the batch
-    reroll/backfill path's job, the same late-data contract as
-    streaming_gapfill and streaming_exact_dedup."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.dedup import simhash_band_layout, simhash_fingerprints
-
-    fp = simhash_fingerprints(doc_stream, id_col, text_col, keep_cols=[ts_col])
-    # the blocking guarantee needs n_bands > max_hamming (a pair within
-    # Hamming d of n_bands bands must agree exactly on ≥1 band only when
-    # d ≤ n_bands−1) — derive the band count instead of assuming 4
-    layout = simhash_band_layout(64, n_bands=max_hamming + 1)
-    banded = fp.select(
-        id_col,
-        ts_col,
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    F.shiftrightunsigned("simhash", shift)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for band, (shift, mask) in enumerate(layout)
-            ])
-        ).alias("b"),
-    ).select(id_col, ts_col, "simhash", "b.band", "b.key")
-
-    out_schema = f"id_a long, id_b long, hamming long, {ts_col} timestamp"
-    state_schema = "ids array<long>, fps array<long>, evicted array<long>, last_ms long"
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdfs = [p for p in pdf_iter if len(p)]
-        if not pdfs:
-            return
-        band = int(key[0])
-        pdf = (pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)).sort_values(
-            [ts_col, id_col]
-        )
-        if state.exists:
-            ids, fps, evicted, last_ms = state.get
-            ids = list(ids)
-            fps = list(fps)
-            evicted = list(evicted)
-        else:
-            ids, fps, evicted, last_ms = [], [], [], 0
-        new_ids = pdf[id_col].to_numpy(dtype=np.int64)
-        new_fps = pdf["simhash"].to_numpy(dtype=np.int64)
-        new_ts = pdf[ts_col].to_numpy("datetime64[us]")
-        # replay guard covers live members AND recently-evicted ids: a doc
-        # the hot-bucket cap evicted would otherwise be re-inserted by an
-        # at-least-once replay and re-emit its pairs (duplicate rows beyond
-        # the documented suppression-only caveat)
-        seen = set(ids)
-        seen_evicted = set(evicted)
-        out_a, out_b, out_h, out_t = [], [], [], []
-        # per-document Python loop — inherent to sequential bucket-state
-        # semantics (doc i must see docs <i of the same micro-batch), and
-        # budget-bounded: ≤ max_state_docs (256) XOR-popcount rows per doc,
-        # so a worst-case micro-batch costs O(batch · 256) numpy ops per
-        # bucket, never O(batch²) across the stream
-        for i in range(len(new_ids)):
-            # at-least-once sources replay documents: a doc_id already in
-            # this bucket's state must neither self-pair nor re-emit its
-            # earlier pairs reversed — skip it entirely (idempotent replay)
-            if int(new_ids[i]) in seen or int(new_ids[i]) in seen_evicted:
-                continue
-            if fps:
-                x = np.asarray(fps, dtype=np.int64).view(np.uint64) ^ np.int64(
-                    new_fps[i]
-                ).view(np.uint64)
-                # XOR-popcount Hamming (numpy<2 has no bitwise_count):
-                # unpack each uint64's 8 bytes to bits and sum per word
-                ham = (
-                    np.unpackbits(x.view(np.uint8)).reshape(len(x), 64).sum(axis=1).astype(np.int64)
-                )
-                hit = np.nonzero(ham <= max_hamming)[0]
-                for j in hit:
-                    # emit only from the pair's MINIMAL agreeing band: every
-                    # agreeing band's bucket discovers the pair, and each can
-                    # compute the full agreement set from the two
-                    # fingerprints — exactly-once with no downstream dedup
-                    fa = int(np.int64(fps[j]).view(np.uint64))
-                    fb = int(np.int64(new_fps[i]).view(np.uint64))
-                    first_band = next(
-                        b
-                        for b, (shift, mask) in enumerate(layout)
-                        if (fa >> shift) & mask == (fb >> shift) & mask
-                    )
-                    if first_band != band:
-                        continue
-                    out_a.append(ids[j])
-                    out_b.append(int(new_ids[i]))
-                    out_h.append(int(ham[j]))
-                    out_t.append(new_ts[i])
-            ids.append(int(new_ids[i]))
-            fps.append(int(new_fps[i]))
-            seen.add(int(new_ids[i]))
-        if len(ids) > max_state_docs:  # hot bucket: keep the most recent
-            # trimmed ids move to the bounded evicted set so the replay
-            # guard above still recognizes them (4× the live cap: old
-            # evictions age out in FIFO order — a replay arriving after
-            # 4·max_state_docs newer evictions is the batch reroll's job,
-            # like any post-TTL late data)
-            evicted = (evicted + ids[:-max_state_docs])[-4 * max_state_docs:]
-            ids = ids[-max_state_docs:]
-            fps = fps[-max_state_docs:]
-        last_ms = max(int(last_ms), int(new_ts.max().astype("int64") // 1000))
-        state.update((ids, fps, evicted, last_ms))
-        state.setTimeoutTimestamp(last_ms + state_ttl_seconds * 1000)
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "hamming": out_h, ts_col: out_t}
-            )
-
-    return (
-        banded.withWatermark(ts_col, watermark)
-        .groupBy("band", "key")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def streaming_neardup_minhash(
-    doc_stream: DataFrame,
-    k: int = 8,
-    bands: int = 4,
-    threshold: float = 0.25,
-    n: int = 2,
-    seed: int = 7,
-    watermark: str = "10 minutes",
-    state_ttl_seconds: int = 3600,
-    max_state_docs: int = 256,
-    ts_col: str = "ts",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming MinHash+LSH near-duplicate detection — the online
-    counterpart of the batch ``minhash_lsh_pairs`` operator, dropped into
-    the same band-bucket ``applyInPandasWithState`` machinery as
-    ``streaming_neardup_simhash``:
-
-      1. stateless signatures: the batch path's explode→groupBy(doc)→min
-        aggregation is a *streaming aggregation* (Spark's checker rejects
-        chaining stateful ops after it), so the stream computes the SAME
-        signature map-only — ``array_min`` over the per-shingle affine
-        permutations (identical hash, identical constants via
-        ``minhash_perm_constants``, so streamed minhashes equal batch
-        minhashes exactly; min over a multiset ignores the batch path's
-        array_distinct);
-      2. each doc explodes into its ``bands`` band keys
-        (xxhash64 of the band's r minhashes — the batch bucket key);
-      3. the (band, key) state op stores (doc_id, full k-wide signature)
-        per bucket; each arriving doc's agreement fractions against the
-        bucket are one vectorized compare, pairs with
-        est = round(agree/k, 6) ≥ threshold emit from their MINIMAL
-        agreeing band only (exactly-once, same rule and replay/eviction
-        guards as the simhash op, including the bounded evicted-id set).
-
-    NB state-schema compatibility: like any applyInPandasWithState
-    operator, a state-schema change (e.g. the evicted-id field added to
-    the near-dup family in r4) is NOT resumable from an older checkpoint —
-    restart with a fresh checkpoint and let the batch reroll path
-    reconcile the gap."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.dedup import _MERSENNE, minhash_perm_constants, shingles_col
-
-    assert k % bands == 0
-    r = k // bands
-    a, b = minhash_perm_constants(k, seed)
-    hashed = F.transform(
-        shingles_col(n, text_col), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))
-    )
-    def _mh(j):  # closure (a 2-arg lambda would be read as (element, index))
-        return F.array_min(
-            F.transform(
-                F.col("_sh"),
-                lambda h: F.pmod(h * F.lit(a[j]) + F.lit(b[j]), F.lit(_MERSENNE)),
-            )
-        ).alias(f"mh_{j}")
-
-    sig_cols = [_mh(j) for j in range(k)]
-    fp = (
-        doc_stream.select(id_col, ts_col, hashed.alias("_sh"))
-        .filter(F.size("_sh") > 0)  # shingle-less docs have no signature (batch drops them too)
-        .select(id_col, ts_col, *sig_cols)
-    )
-    banded = fp.select(
-        id_col,
-        ts_col,
-        F.array(*[F.col(f"mh_{j}") for j in range(k)]).alias("sig"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    F.xxhash64(*[F.col(f"mh_{band * r + j}") for j in range(r)]).alias("key"),
-                )
-                for band in range(bands)
-            ])
-        ).alias("b"),
-    ).select(id_col, ts_col, "sig", "b.band", "b.key")
-
-    out_schema = f"id_a long, id_b long, est_jaccard double, {ts_col} timestamp"
-    state_schema = "ids array<long>, sigs array<long>, evicted array<long>, last_ms long"
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdfs = [p for p in pdf_iter if len(p)]
-        if not pdfs:
-            return
-        band = int(key[0])
-        pdf = (pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)).sort_values(
-            [ts_col, id_col]
-        )
-        if state.exists:
-            ids, sigs, evicted, last_ms = state.get
-            ids = list(ids)
-            sigs = list(sigs)
-            evicted = list(evicted)
-        else:
-            ids, sigs, evicted, last_ms = [], [], [], 0
-        new_ids = pdf[id_col].to_numpy(dtype=np.int64)
-        new_sigs = [np.asarray(s, dtype=np.int64) for s in pdf["sig"]]
-        new_ts = pdf[ts_col].to_numpy("datetime64[us]")
-        seen = set(ids)
-        seen_evicted = set(evicted)
-        out_a, out_b, out_e, out_t = [], [], [], []
-        for i in range(len(new_ids)):
-            if int(new_ids[i]) in seen or int(new_ids[i]) in seen_evicted:
-                continue  # at-least-once replay: idempotent skip
-            if ids:
-                S = np.asarray(sigs, dtype=np.int64).reshape(len(ids), k)
-                eq = S == new_sigs[i][None, :]  # (m, k)
-                est = np.round(eq.sum(axis=1) / k, 6)
-                # per-band full agreement (all r minhashes equal) for the
-                # minimal-agreeing-band exactly-once rule
-                band_eq = eq.reshape(len(ids), bands, r).all(axis=2)  # (m, bands)
-                hit = np.nonzero(est >= threshold)[0]
-                for j in hit:
-                    agreeing = np.nonzero(band_eq[j])[0]
-                    if len(agreeing) == 0 or agreeing[0] != band:
-                        continue  # discovered here, emitted by the minimal band
-                    out_a.append(ids[j])
-                    out_b.append(int(new_ids[i]))
-                    out_e.append(float(est[j]))
-                    out_t.append(new_ts[i])
-            ids.append(int(new_ids[i]))
-            sigs.extend(int(x) for x in new_sigs[i])
-            seen.add(int(new_ids[i]))
-        if len(ids) > max_state_docs:  # hot bucket: keep the most recent
-            cut = len(ids) - max_state_docs
-            evicted = (evicted + ids[:cut])[-4 * max_state_docs:]
-            ids = ids[cut:]
-            sigs = sigs[cut * k:]
-        last_ms = max(int(last_ms), int(new_ts.max().astype("int64") // 1000))
-        state.update((ids, sigs, evicted, last_ms))
-        state.setTimeoutTimestamp(last_ms + state_ttl_seconds * 1000)
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "est_jaccard": out_e, ts_col: out_t}
-            )
-
-    return (
-        banded.withWatermark(ts_col, watermark)
-        .groupBy("band", "key")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def streaming_neardup_embedding(
-    emb_stream: DataFrame,
-    dim: int,
-    threshold: float = 0.4,
-    k: int = 4,
-    tables: int = 8,
-    seed: int = 11,
-    watermark: str = "10 minutes",
-    state_ttl_seconds: int = 3600,
-    max_state_docs: int = 256,
-    ts_col: str = "ts",
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Streaming embedding near-duplicate detection — the online counterpart
-    of the batch ``dedup_embedding_lsh`` operator, completing the streaming
-    near-dup family (exact / SimHash / MinHash / embedding): the stateless
-    random-hyperplane signature kernel (``operators.simsearch.lsh_signatures``
-    — mapInPandas, one GEMM per Arrow batch) runs unchanged on the stream,
-    each vector lands in its ``tables`` (table, sig) buckets, and the same
-    ``applyInPandasWithState`` bucket index verifies arrivals with an exact
-    cosine GEMM against the bucket's stored vectors.
-
-    Exactly-once via the minimal-agreeing-TABLE rule: each vector carries
-    its full cross-table signature array from the signature kernel
-    (``lsh_signatures(with_full_sig=True)`` — sliced from the SAME batched
-    GEMM outputs the bucket keys come from), so every discovering bucket
-    reads the pair's agreement set from state and only the first agreeing
-    table's bucket emits — the simhash/minhash ops' minimal-band rule with
-    hyperplane tables as bands.  The signatures are stored rather than
-    recomputed because BLAS may round a per-vector (1,dim)@(dim,k) product
-    differently from the batched (n,dim)@(dim,k) one — a projection within
-    fp noise of zero could flip sign between key and recompute, emitting a
-    qualifying pair twice or never; carried signatures are bit-identical to
-    the keys by construction.  Same bounded evicted-id replay guard and
-    TTL'd state; candidate generation is identical to the batch operator's
-    bucket self-join, so streamed pairs equal batch pairs for on-time data
-    (tested).
-
-    NB state-schema compatibility (same contract as the minhash op): the
-    ``asigs`` field added in r5 makes checkpoints written by the previous
-    state schema non-resumable — restart such a stream with a FRESH
-    checkpoint and let the batch reroll path reconcile the gap."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.simsearch import lsh_signatures
-
-    keyed = lsh_signatures(
-        emb_stream.select(id_col, ts_col, emb_col), dim, k, tables, seed,
-        id_col, emb_col, keep_cols=[ts_col, emb_col], with_full_sig=True,
-    )
-
-    out_schema = f"id_a long, id_b long, cos_sim double, {ts_col} timestamp"
-    # embs stored as DOUBLE: a float32 state round-trip would perturb
-    # cos_sim at the 6th decimal vs the batch operator for double-typed
-    # sources; asigs is the flattened (n, tables) signature matrix
-    state_schema = (
-        "ids array<long>, embs array<double>, asigs array<long>, "
-        "evicted array<long>, last_ms long"
-    )
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdfs = [p for p in pdf_iter if len(p)]
-        if not pdfs:
-            return
-        table = int(key[0])
-        pdf = (pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)).sort_values(
-            [ts_col, id_col]
-        )
-        if state.exists:
-            ids, embs, asigs, evicted, last_ms = state.get
-            ids = list(ids)
-            embs = list(embs)
-            asigs = list(asigs)
-            evicted = list(evicted)
-        else:
-            ids, embs, asigs, evicted, last_ms = [], [], [], [], 0
-        new_ids = pdf[id_col].to_numpy(dtype=np.int64)
-        new_embs = [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
-        new_asigs = [np.asarray(s, dtype=np.int64) for s in pdf["all_sigs"]]
-        new_ts = pdf[ts_col].to_numpy("datetime64[us]")
-        seen = set(ids)
-        seen_evicted = set(evicted)
-        out_a, out_b, out_s, out_t = [], [], [], []
-
-        for i in range(len(new_ids)):
-            if int(new_ids[i]) in seen or int(new_ids[i]) in seen_evicted:
-                continue  # at-least-once replay: idempotent skip
-            x = new_embs[i]
-            if ids:
-                M = np.asarray(embs, dtype=np.float64).reshape(len(ids), dim)
-                # elementwise-multiply + pairwise sum, NOT a BLAS dot: the
-                # batch rerank (dedup.py) reduces with (A*B).sum(axis=1),
-                # and matching its summation order keeps the rounded sims
-                # bit-equal to the batch operator's
-                sim = np.round(
-                    (M * x[None, :]).sum(axis=1)
-                    / (np.sqrt((M * M).sum(axis=1)) * np.sqrt((x * x).sum())),
-                    6,
-                )
-                hit = np.nonzero(sim >= threshold)[0]
-                if len(hit):
-                    A = np.asarray(asigs, dtype=np.int64).reshape(len(ids), tables)
-                    sx = new_asigs[i]
-                    for j in hit:
-                        # agreement set from the STORED signatures — the same
-                        # GEMM outputs that produced every bucket key
-                        agreeing = np.nonzero(sx == A[j])[0]
-                        if len(agreeing) == 0 or agreeing[0] != table:
-                            continue  # emitted by the minimal agreeing table
-                        out_a.append(ids[j])
-                        out_b.append(int(new_ids[i]))
-                        out_s.append(float(sim[j]))
-                        out_t.append(new_ts[i])
-            ids.append(int(new_ids[i]))
-            embs.extend(float(v) for v in new_embs[i])
-            asigs.extend(int(s) for s in new_asigs[i])
-            seen.add(int(new_ids[i]))
-        if len(ids) > max_state_docs:  # hot bucket: keep the most recent
-            cut = len(ids) - max_state_docs
-            evicted = (evicted + ids[:cut])[-4 * max_state_docs:]
-            ids = ids[cut:]
-            embs = embs[cut * dim:]
-            asigs = asigs[cut * tables:]
-        last_ms = max(int(last_ms), int(new_ts.max().astype("int64") // 1000))
-        state.update((ids, embs, asigs, evicted, last_ms))
-        state.setTimeoutTimestamp(last_ms + state_ttl_seconds * 1000)
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "cos_sim": out_s, ts_col: out_t}
-            )
-
-    return (
-        keyed.withWatermark(ts_col, watermark)
-        .groupBy("table", "sig")
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-        )
-    )
-
-
-def streaming_decontaminate(
-    doc_stream: DataFrame,
-    benchmark: DataFrame,
-    n: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming benchmark decontamination — the online counterpart of
-    ``operators.dedup.decontaminate``, restated STATELESSLY: the batch
-    operator's explode → join → per-doc groupBy is an illegal streaming
-    aggregation in append mode, but the contamination decision only ever
-    depends on a document's OWN n-grams versus a static dirty set, so the
-    streaming form needs no state at all.
-
-    The benchmark's distinct n-gram set is collected once and broadcast as
-    a Python set (bounded BY DEFINITION — eval suites are O(10^5) docs;
-    the same smallness argument that justifies the batch operator's
-    broadcast join); each arriving document's shingles are computed
-    JVM-side by the SAME ``shingles_col`` expression the batch operator
-    uses (one tokenizer, zero drift) and counted against the set in a
-    vectorized mapInPandas — map-only, no shuffle, no watermark needed.
-    Streamed output equals the batch operator row-for-row (tested)."""
-    import pandas as pd
-
-    from ..operators.dedup import shingles_col
-
-    # the batch operator's own dirty-set derivation (distinct grams),
-    # collected driver-side: |grams| ≤ benchmark tokens, small by definition
-    dirty_rows = (
-        benchmark.select(F.explode(shingles_col(n, text_col)).alias("s"))
-        .distinct()
-        .collect()
-    )
-    dirty = frozenset(r["s"] for r in dirty_rows)
-    # swap out the previous call's broadcast PER STREAM KEY (same lifecycle
-    # discipline as dedup._swap_cache): repeated calls in a long-lived
-    # driver would otherwise pin every dirty set for the session lifetime.
-    # unpersist() (NOT destroy()) only evicts executor-side copies — a
-    # still-running stream that lost its blocks re-fetches the value from
-    # the driver, so correctness is unaffected; keying by the stream's
-    # logical identity means two CONCURRENT decontamination streams never
-    # evict each other's hot copies either.
-    key = (id_col, text_col, ts_col, n)
-    prev = _dirty_broadcasts.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # previous broadcast belonged to a stopped SparkContext
-    b = doc_stream.sparkSession.sparkContext.broadcast(dirty)
-    _dirty_broadcasts[key] = b
-
-    shingled = doc_stream.select(
-        id_col, ts_col, shingles_col(n, text_col).alias("_sh")
-    )
-
-    def gen(batches):
-        d = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            hits = [sum(1 for g in row if g in d) for row in pdf["_sh"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    ts_col: pdf[ts_col],
-                    "n_dirty_ngrams": pd.Series(hits, dtype="int64"),
-                    "contaminated": pd.Series(
-                        [1 if h else 0 for h in hits], dtype="int32"
-                    ),
-                }
-            )
-
-    return shingled.mapInPandas(
-        gen,
-        f"{id_col} long, {ts_col} timestamp, n_dirty_ngrams long, contaminated int",
-    )
-
-
-def run_stream_to_memory(
-    spark: SparkSession, src_dir: str, checkpoint: str, name: str = "tier_1m_stream",
-    watermark: str = "10 minutes",
-):
-    """Drive the streaming rollup into an in-memory sink (tests / demos);
-    production uses run_stream_to_icelite (per-micro-batch tier commits)."""
-    out = streaming_rollup_1m(stream_transcripts_from_dir(spark, src_dir), watermark)
-    return (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 def run_stream_to_icelite(

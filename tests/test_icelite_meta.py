@@ -1,18 +1,14 @@
-"""icelite rollback + metadata tables.
+"""icelite rollback, direct writes and the partition-spec guard.
 
 Rollback (Iceberg's ``rollback_to_snapshot``) commits a NEW head whose
 resolved manifest is exactly the target's — a ``reset`` delta, so
 partitions added after the target cease to exist (replace-mode folding
 would leave them behind), while history stays time-travelable until
-expire_snapshots ages it out.  Metadata tables mirror Iceberg's
-``tbl.snapshots`` / ``tbl.files`` / ``tbl.partitions`` introspection, both
-as IceliteTable methods and through the registered Spark data source's
-``metadata`` option.  The reference has no storage layer at all (inputs
-are in-memory arrays, reference tests/test_pcm.py:10) — this guards the
-engine's own claimed Iceberg-semantics surface.
+expire_snapshots ages it out.  The reference has no storage layer at all
+(inputs are in-memory arrays, reference tests/test_pcm.py:10) — this
+guards the engine's own claimed Iceberg-semantics surface.
 """
 
-import json
 import os
 
 import pytest
@@ -139,184 +135,6 @@ def test_expire_after_rollback_gcs_rolled_back_files(spark, tmp_path):
     assert _vals(t, spark) == want  # survivor re-checkpointed, still readable
 
 
-# ---------------------------------------------------------- metadata tables
-
-
-@pytest.fixture()
-def meta_table(spark, tmp_path):
-    t = IceliteTable(str(tmp_path / "meta"))
-    t.append(_mk(spark, [(1, "a", "d1"), (2, "b", "d2")]), partition_col="day")
-    t.upsert(_mk(spark, [(1, "a2", "d1")]), key_cols=["k"], partition_col="day")
-    return t
-
-
-def test_snapshots_df(spark, meta_table):
-    rows = meta_table.snapshots_df(spark).orderBy("seq").collect()
-    assert [r.operation for r in rows] == ["append", "upsert"]
-    assert [r.is_current for r in rows] == [False, True]
-    assert rows[0].parent_id is None and rows[1].parent_id == rows[0].snapshot_id
-    assert rows[1].delete_files == 1 and rows[0].delete_files == 0
-    assert rows[1].rows == 3  # physical upper bound pre-compaction
-    assert rows[1].fmt == 3 and rows[0].fmt == 2
-
-
-def test_files_df_matches_manifest_and_footers(spark, meta_table):
-    import pyspark.sql.functions as F
-
-    fd = meta_table.files_df(spark)
-    snap = meta_table.snapshot()
-    n_data = sum(len(m["files"]) for m in snap.partitions.values())
-    n_del = sum(len(m.get("deletes") or ()) for m in snap.partitions.values())
-    by = {r["content"]: r["count(1)"] for r in fd.groupBy("content").agg(F.count(F.lit(1))).collect()}
-    assert by == {"data": n_data, "eq_delete": n_del}
-    got = fd.filter("content = 'data'").agg(F.sum("row_count")).collect()[0][0]
-    assert got == meta_table.rows()
-    r = fd.filter("content = 'data'").first()
-    # pre-MOR files carry the fseq-0 sentinel (born before every delete);
-    # the upsert commit's data files are stamped with its seq
-    assert r.size_bytes > 0 and r.birth_seq >= 0
-    assert fd.filter("content = 'data' AND birth_seq = 2").count() >= 1
-    assert "__cols__" in json.loads(r.stats)  # fmt-2 stats round-trip
-    # snapshot_id pins the view: the pre-upsert snapshot has no delete files
-    first = meta_table.snapshots_df(spark).orderBy("seq").first().snapshot_id
-    old = meta_table.files_df(spark, snapshot_id=first)
-    assert old.filter("content = 'eq_delete'").count() == 0
-
-
-def test_partitions_df_totals(spark, meta_table):
-    rows = {r.partition: r for r in meta_table.partitions_df(spark).collect()}
-    snap = meta_table.snapshot()
-    assert set(rows) == set(snap.partitions)
-    for value, m in snap.partitions.items():
-        assert rows[value].data_files == len(m["files"])
-        assert rows[value].rows == m["rows"]
-        assert rows[value].size_bytes > 0
-    assert rows["d1"].delete_files == 1 and rows["d2"].delete_files == 0
-
-
-def test_metadata_via_data_source(spark, meta_table):
-    from hdstats_spark.icelite_source import register
-
-    register(spark)
-    for kind in ("snapshots", "files", "partitions"):
-        native = meta_table._meta_df(spark, kind)
-        ds = (
-            spark.read.format("icelite")
-            .option("metadata", kind)
-            .load(meta_table.root)
-        )
-        assert ds.schema == native.schema
-        assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, native.collect()))
-
-
-# ------------------------------------------------------------------- tags
-
-
-def test_tag_create_read_remove(spark, tmp_path):
-    t = IceliteTable(str(tmp_path / "tag1"))
-    s1 = t.append(_mk(spark, [(1, "a", "d1")]), partition_col="day")
-    t.append(_mk(spark, [(2, "b", "d1")]), partition_col="day")
-    assert t.create_tag("v1.0", s1.snapshot_id) == s1.snapshot_id
-    assert t.create_tag("head") == t.current_snapshot_id()  # defaults to head
-    assert _vals(t, spark, ref="v1.0") == [(1, "a")]
-    assert _vals(t, spark, ref="head") == [(1, "a"), (2, "b")]
-    assert set(t.tags()) == {"v1.0", "head"}
-    # immutable: same name cannot be silently repointed
-    with pytest.raises(FileExistsError, match="immutable"):
-        t.create_tag("v1.0")
-    t.remove_tag("head")
-    with pytest.raises(KeyError):
-        t.resolve_ref("head")
-    with pytest.raises(KeyError):
-        t.remove_tag("head")
-    with pytest.raises(ValueError, match="tag name"):
-        t.create_tag("bad/name")
-    with pytest.raises(ValueError, match="not both"):
-        t.read(spark, snapshot_id=s1.snapshot_id, ref="v1.0")
-    # tags metadata table
-    rows = t._meta_rows("tags")
-    assert rows == [("v1.0", s1.snapshot_id, rows[0][2])]
-
-
-def test_tagged_snapshot_survives_expiry_as_island(spark, tmp_path):
-    """expire_snapshots pins tagged snapshots AND their files; a tag older
-    than the kept suffix becomes a checkpointed island, readable verbatim."""
-    t = IceliteTable(str(tmp_path / "tag2"))
-    s1 = t.append(_mk(spark, [(1, "a", "d1")]), partition_col="day")
-    t.create_tag("train-corpus", s1.snapshot_id)
-    t.overwrite_partitions(_mk(spark, [(1, "b", "d1")]), "day")
-    t.append(_mk(spark, [(3, "c", "d2")]), partition_col="day")
-    res = t.expire_snapshots(keep_last=1)
-    # the middle overwrite expired; s1 survived as a tagged island
-    assert res["snapshots_removed"] == 1
-    assert {s.snapshot_id for s in t.snapshots()} >= {s1.snapshot_id}
-    island = t._load_raw(s1.snapshot_id)
-    assert island.kind == "checkpoint" and island.parent_id is None
-    assert _vals(t, spark, ref="train-corpus") == [(1, "a")]  # files intact
-    assert _vals(t, spark) == [(1, "b"), (3, "c")]
-    # dropping the tag releases the island on the next expiry
-    t.remove_tag("train-corpus")
-    res = t.expire_snapshots(keep_last=1)
-    assert res["snapshots_removed"] == 1
-    with pytest.raises(FileNotFoundError):
-        t.read(spark, snapshot_id=s1.snapshot_id)
-
-
-def test_tag_via_data_source(spark, tmp_path):
-    from hdstats_spark.icelite_source import register
-
-    register(spark)
-    t = IceliteTable(str(tmp_path / "tag3"))
-    s1 = t.append(_mk(spark, [(1, "a", "d1")]), partition_col="day")
-    t.append(_mk(spark, [(2, "b", "d1")]), partition_col="day")
-    t.create_tag("pin", s1.snapshot_id)
-    ds = spark.read.format("icelite").option("ref", "pin").load(t.root)
-    assert sorted((r.k, r.v) for r in ds.collect()) == [(1, "a")]
-    tags = spark.read.format("icelite").option("metadata", "tags").load(t.root)
-    assert [(r.name, r.snapshot_id) for r in tags.collect()] == [
-        ("pin", s1.snapshot_id)
-    ]
-
-
-# ------------------------------------------------------------- maintenance
-
-
-def test_maintain_policy_pass(spark, tmp_path):
-    """maintain(): compacts only partitions over the file/backlog
-    thresholds, then expires — one schedulable idempotent call."""
-    t = IceliteTable(str(tmp_path / "mt1"))
-    # d1: 5 small appends (over max_files=3); d2: single append (under)
-    for i in range(5):
-        t.append(_mk(spark, [(i, f"v{i}", "d1")]), partition_col="day")
-    t.append(_mk(spark, [(100, "w", "d2")]), partition_col="day")
-    before = _vals(t, spark)
-    res = t.maintain(spark, max_files=3, keep_last=1)
-    assert res["compacted"] == ["d1"] and res["skipped"] == []
-    assert res["expired"]["snapshots_removed"] > 0
-    snap = t.snapshot()
-    assert len(snap.partitions["d1"]["files"]) == 1
-    assert len(snap.partitions["d2"]["files"]) == 1  # untouched
-    assert _vals(t, spark) == before
-    # idempotent: a second pass finds nothing to do
-    res2 = t.maintain(spark, max_files=3, keep_last=1)
-    assert res2 == {"compacted": [], "skipped": [], "expired": None} or (
-        res2["compacted"] == [] and res2["expired"]["snapshots_removed"] == 0
-    )
-
-
-def test_maintain_materializes_delete_backlog(spark, tmp_path):
-    t = IceliteTable(str(tmp_path / "mt2"))
-    t.append(_mk(spark, [(1, "a", "d1"), (2, "b", "d1")]), partition_col="day")
-    for i in range(3):  # 3 upserts -> 3 pending delete files in d1
-        t.upsert(_mk(spark, [(1, f"a{i}", "d1")]), key_cols=["k"], partition_col="day")
-    assert t.pending_deletes()["d1"]["files"] == 3
-    before = _vals(t, spark)
-    res = t.maintain(spark, max_files=100, max_delete_files=2)
-    assert res["compacted"] == ["d1"]
-    assert t.pending_deletes() == {}  # backlog materialized
-    assert _vals(t, spark) == before
-
-
 # ---------------------------------------------------------- direct writes
 
 
@@ -388,35 +206,3 @@ def test_partition_spec_mismatch_guard(spark, tmp_path):
         u.append(_mk(spark, [(2, "b", "d1")]), partition_col="day")
     u.append(_mk(spark, [(2, "b", "d2")]))
     assert _vals(u, spark) == [(1, "a"), (2, "b")]
-
-
-def test_remove_orphan_files(spark, tmp_path):
-    """Crash-abandoned writes (files never referenced by any snapshot) are
-    reclaimed past the safety bound; referenced and young files survive."""
-    import time as _time
-
-    t = IceliteTable(str(tmp_path / "orph"))
-    t.append(_mk(spark, [(1, "a", "d1")]), partition_col="day")
-    before = _vals(t, spark)
-    # simulate a crashed write: a commit dir with files no snapshot knows
-    dead = os.path.join(t.data_dir, "commit-deadbeef")
-    os.makedirs(dead)
-    orphan = os.path.join(dead, "part-zzz.parquet")
-    with open(orphan, "wb") as f:
-        f.write(b"not really parquet")
-    old = _time.time() - 7200
-    os.utime(orphan, (old, old))
-    young = os.path.join(dead, "part-young.parquet")
-    with open(young, "wb") as f:
-        f.write(b"in-flight maybe")
-    res = t.remove_orphan_files(older_than_s=3600)
-    assert res["files_removed"] == 1 and not os.path.exists(orphan)
-    assert os.path.exists(young)  # inside the safety bound
-    # age the young file out; its dir goes with it
-    os.utime(young, (old, old))
-    res = t.remove_orphan_files(older_than_s=3600)
-    assert res["files_removed"] == 1 and res["dirs_removed"] == 1
-    assert not os.path.exists(dead)
-    assert _vals(t, spark) == before  # referenced files untouched
-    # idempotent no-op afterwards
-    assert t.remove_orphan_files(older_than_s=0)["files_removed"] == 0

@@ -1,14 +1,16 @@
-"""Full training-data lakehouse lifecycle in one flow — every round-6
-storage capability composed end-to-end:
+"""Full training-data lakehouse lifecycle in one flow — the icelite storage
+capabilities composed end-to-end:
 
-stage a corpus drop on a BRANCH → QC it (Gopher repetition filter over
-the branch read) → FAST-FORWARD publish → CDC changelog materializes a
-downstream table → MAINTAIN compacts → TAG the release → EXPIRE — and
-every intermediate contract (main isolation, replay equivalence,
-tag-pinned reads) holds at each step.  Individually each feature has its
-own suite; this guards their COMPOSITION.
+APPEND a corpus drop → QC it (Gopher repetition filter over the
+incremental read of the drop) → MOR key delete quarantines the flagged
+docs → CDC changelog materializes a downstream table → COMPACT
+materializes the delete backlog → EXPIRE — and every intermediate
+contract (physical vs logical rows, replay equivalence, time travel
+until expiry) holds at each step.  Individually each feature has its own
+suite; this guards their COMPOSITION.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from hdstats_spark.icelite import IceliteTable
@@ -29,7 +31,7 @@ def _docs(spark, lo, hi, words=_SENTENCE):
     )
 
 
-def test_stage_qc_publish_cdc_maintain_tag_expire(spark, tmp_path):
+def test_append_qc_delete_cdc_compact_expire(spark, tmp_path):
     corpus = IceliteTable(str(tmp_path / "corpus"))
     derived = IceliteTable(str(tmp_path / "derived"))
 
@@ -37,35 +39,30 @@ def test_stage_qc_publish_cdc_maintain_tag_expire(spark, tmp_path):
     corpus.append(_docs(spark, 0, 40), partition_col="day")
     base = corpus.snapshot()
 
-    # ---- stage: a new drop lands on a branch; 5 junk docs ride along
-    corpus.create_branch("drop-2026-08")
+    # ---- append: a new drop lands; 5 junk docs ride along
     junk = spark.range(1000, 1005).select(
         F.col("id").alias("doc_id"),
         F.lit("spam spam spam spam spam spam spam spam").alias("text"),
         F.lit("d0").alias("day"),
     )
-    corpus.append(
-        _docs(spark, 40, 80).unionByName(junk),
-        partition_col="day",
-        branch="drop-2026-08",
-    )
-    assert corpus.rows() == 40  # main untouched
+    corpus.append(_docs(spark, 40, 80).unionByName(junk), partition_col="day")
+    assert corpus.rows() == 85
 
-    # ---- audit: Gopher repetition QC over the BRANCH read finds the junk
-    staged = corpus.read(spark, ref="drop-2026-08")
-    qc = repetition_stats(staged)
+    # ---- QC: Gopher repetition filter over the drop alone finds the junk
+    drop = corpus.read_incremental(spark, base.snapshot_id)
+    assert drop.count() == 45
+    qc = repetition_stats(drop)
     bad = [r.doc_id for r in qc.filter(F.col("keep") == 0).collect()]
     assert sorted(bad) == [1000, 1001, 1002, 1003, 1004]
-    # publish, then quarantine the flagged docs with a MOR key delete
-    # (main must not move before fast_forward — WAP ordering)
-    corpus.fast_forward("drop-2026-08")
-    corpus.drop_branch("drop-2026-08")
+    # quarantine the flagged docs with a MOR key delete
     corpus.delete_by_keys(
         spark.createDataFrame([(i,) for i in bad], "doc_id long"),
         key_cols=["doc_id"],
     )
     assert corpus.rows() == 85  # physical: junk masked at read, not rewritten
     assert corpus.read(spark).count() == 80  # logical
+    backlog = corpus.pending_deletes()
+    assert "d0" in backlog  # the keys carry no day: every partition gets one
 
     # ---- CDC: materialize the changes since `base` into the derived table
     # the partition column lives in manifest keys: CDC surfaces it as
@@ -87,16 +84,21 @@ def test_stage_qc_publish_cdc_maintain_tag_expire(spark, tmp_path):
     want = sorted(r.doc_id for r in corpus.read(spark).collect())
     assert got == want == list(range(80))
 
-    # ---- maintain: compaction materializes the MOR backlog
-    res = corpus.maintain(spark, max_files=1, max_delete_files=0)
-    assert "d0" in res["compacted"]
+    # ---- compact: rewriting each partition with a backlog materializes it
+    for value in sorted(backlog):
+        assert corpus.compact_partition(spark, "day", value) is not None
     assert corpus.pending_deletes() == {}
+    assert corpus.rows() == 80  # junk physically gone
     assert corpus.read(spark).count() == 80
 
-    # ---- tag the release, expire history: the tag pins its snapshot
-    corpus.create_tag("release-1")
-    rel = corpus.read(spark, ref="release-1").count()
+    # ---- expire: history is time-travelable until expiry GCs it
     corpus.append(_docs(spark, 80, 90), partition_col="day")
-    corpus.expire_snapshots(keep_last=1)
-    assert corpus.read(spark, ref="release-1").count() == rel == 80
+    assert corpus.read(spark, snapshot_id=base.snapshot_id).count() == 40
+    n_snaps = len(corpus.snapshots())
+    assert n_snaps == 4 + len(backlog)  # 3 appends, 1 delete, the compactions
+    res = corpus.expire_snapshots(keep_last=1)
+    assert res["snapshots_removed"] == n_snaps - 1 and res["files_removed"] > 0
+    with pytest.raises(FileNotFoundError):
+        corpus.read(spark, snapshot_id=base.snapshot_id)
     assert corpus.read(spark).count() == 90
+    assert sorted(r.doc_id for r in corpus.read(spark).collect()) == list(range(90))

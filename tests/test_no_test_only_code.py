@@ -1,16 +1,23 @@
-"""Guards: every public top-level ``def``/``class`` under ``hdstats_spark/``
-has a caller outside the tests, and the batched NumPy kernels
-(``hdstats_spark.kernels_np``) are reached only through their Spark
-operators in ``hdstats_spark/operators/series.py``.
+"""Guards: every definition under ``hdstats_spark/`` has a caller outside
+the tests, and the batched NumPy kernels (``hdstats_spark.kernels_np``) are
+reached only through their Spark operators in
+``hdstats_spark/operators/series.py``.
 
-A name counts as used when some non-test ``.py`` file of the repo refers to
-it in code: as a name, an attribute, an imported name, or a string constant
-equal to the name (registries and ``__all__``).  A mention in a comment or a
-docstring does not keep a name alive.  Names that are still reached only
-from tests are listed in ``ALLOWED`` with the reason they stay.
+Checked definitions: every module-level ``def``/``class`` (public and
+``_``-prefixed) and every method of every class (``_``-prefixed included,
+dunders excluded).  A name counts as used when some non-test ``.py`` file
+of the repo refers to it in code: as a name, an attribute, an imported
+name, or a string constant equal to the name (registries and ``__all__``).
+A mention in a comment or a docstring does not keep a name alive.
+
+Spark calls some methods itself: a method is exempt when a ``pyspark.*``
+class in its class's MRO defines the same name (the Python data source
+callbacks).  Names that are still reached only from tests are listed in
+``ALLOWED`` with the reason they stay.
 """
 
 import ast
+import importlib
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -18,16 +25,8 @@ ROOT = Path(__file__).resolve().parents[1]
 ALLOWED = {
     "pad_stack": "NaN-padded stack builder the batched-kernel unit tests use to feed kernels_np",
     "geomedian_axis0": "the only Spark implementation of the reference's axis-0 geomedian; no query asks for it",
-    "locf": "sparse-series forward-fill; the batch reference streaming_gapfill is tested against",
     "gen_assets": "synthetic binary-asset table for the multimodal operator tests",
     "sample_frames": "video frame-sampling stub of the multimodal asset plumbing, test-driven only",
-    "streaming_gapfill": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "streaming_exact_dedup": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "streaming_neardup_simhash": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "streaming_neardup_minhash": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "streaming_neardup_embedding": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "streaming_decontaminate": "streaming operator exercised only by tests/test_streaming.py; no job wires it",
-    "run_stream_to_memory": "in-memory streaming sink for tests; production uses run_stream_to_icelite",
 }
 
 
@@ -42,14 +41,45 @@ def _sources():
             yield path, ast.parse(path.read_text(), filename=str(path))
 
 
-def _public_defs():
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _spark_callbacks(module: str, cls_name: str) -> set[str]:
+    """Names that a ``pyspark.*`` base of ``module.cls_name`` defines."""
+    cls = getattr(importlib.import_module(module), cls_name, None)
+    if cls is None:
+        return set()
+    return {
+        name
+        for base in cls.__mro__[1:]
+        if base.__module__.startswith("pyspark.")
+        for name in vars(base)
+    }
+
+
+def _defs():
+    """(where, name) for every checked definition under hdstats_spark/;
+    a method's name is qualified by its class."""
     for path, tree in _sources():
-        if path.relative_to(ROOT).parts[0] != "hdstats_spark":
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] != "hdstats_spark":
             continue
+        module = ".".join(rel.with_suffix("").parts)
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if not node.name.startswith("_"):
-                    yield f"{path.relative_to(ROOT)}:{node.lineno}", node.name
+                yield f"{rel}:{node.lineno}", node.name
+        for cls in ast.walk(tree):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            exempt = _spark_callbacks(module, cls.name)
+            for node in cls.body:
+                if (
+                    isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not _is_dunder(node.name)
+                    and node.name not in exempt
+                ):
+                    yield f"{rel}:{node.lineno}", f"{cls.name}.{node.name}"
 
 
 def _names_used_outside_tests() -> set[str]:
@@ -67,6 +97,13 @@ def _names_used_outside_tests() -> set[str]:
             elif isinstance(node, ast.Constant) and isinstance(node.value, str):
                 used.add(node.value)
     return used
+
+
+def _test_only():
+    used = _names_used_outside_tests()
+    for where, name in _defs():
+        if name.rsplit(".", 1)[-1] not in used:
+            yield where, name
 
 
 def _imported_modules(path: Path, tree: ast.Module):
@@ -95,17 +132,15 @@ def test_kernels_np_imported_only_by_series_operators():
 
 
 def test_no_public_name_is_test_only():
-    used = _names_used_outside_tests()
-    defs = list(_public_defs())
-    assert defs, "no public definitions found under hdstats_spark/"
-    unused = [f"{where} {name}" for where, name in defs if name not in used and name not in ALLOWED]
-    assert not unused, "public names with no caller outside tests:\n" + "\n".join(unused)
+    """Public and private names alike: every checked definition."""
+    assert any("." in name for _, name in _defs()), "no methods found under hdstats_spark/"
+    unused = [f"{where} {name}" for where, name in _test_only() if name not in ALLOWED]
+    assert not unused, "definitions with no caller outside tests:\n" + "\n".join(unused)
 
 
 def test_allowlist_has_no_stale_entries():
     """An allowlisted name that gained a non-test caller, or was deleted,
     leaves the list."""
-    used = _names_used_outside_tests()
-    defined = {name for _, name in _public_defs()}
-    stale = sorted(n for n in ALLOWED if n not in defined or n in used)
+    test_only = {name for _, name in _test_only()}
+    stale = sorted(n for n in ALLOWED if n not in test_only)
     assert not stale, f"stale ALLOWED entries: {stale}"

@@ -659,6 +659,37 @@ def test_icelite_gen_publish_atomic_and_torn_gen_reclaimed(tmp_path):
     assert not [p for p in os.listdir(t.meta_dir) if p.startswith(".gen.")]
 
 
+def test_icelite_expire_ignores_crash_orphaned_snapshot(tmp_path):
+    """A writer that crashed between its snapshot JSON write and its gen
+    CAS leaves an orphan sharing a seq with a committed snapshot.  Expiry
+    counts its retention suffix along the head's chain only (the newer
+    orphan must not displace a committed snapshot) and unlinks only gen
+    files that name the expired snapshot itself."""
+    import json
+    import os
+    import time as _time
+
+    t = IceliteTable(str(tmp_path / "orphan"), lock="none")
+
+    def commit(name):
+        return t._commit_delta("append", "append", {"p": {"files": [name], "rows": 1}}, None)
+
+    s1, s2, s3 = commit("a.parquet"), commit("b.parquet"), commit("c.parquet")
+    orphan = t._next_snapshot(s1, "append", "append", {"p": {"files": ["x.parquet"], "rows": 1}}, None)
+    assert orphan.seq == s2.seq
+    orphan.committed_at = _time.time()  # newest JSON on disk, never committed
+    with open(t._snapshot_path(orphan.snapshot_id), "w") as f:
+        json.dump(orphan.to_json(), f)
+
+    res = t.expire_snapshots(keep_last=2)
+    assert res["snapshots_removed"] == 2  # s1 and the orphan
+    assert [s.snapshot_id for s in t.snapshots()] == [s2.snapshot_id, s3.snapshot_id]
+    with open(t._gen_path(s2.seq)) as f:  # s2 still owns its generation
+        assert f.read().strip() == s2.snapshot_id
+    assert not os.path.exists(t._gen_path(s1.seq))
+    assert sorted(t.snapshot().partitions["p"]["files"]) == ["a.parquet", "b.parquet", "c.parquet"]
+
+
 def test_icelite_file_stats_skipping(spark, tmp_path):
     """fmt-2 manifests carry per-file column min/max and read(where=...)
     skips files whose range provably misses the predicate — the Iceberg

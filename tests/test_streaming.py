@@ -6,13 +6,12 @@ import os
 import time
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from hdstats_spark.operators.channels import channelize
 from hdstats_spark.operators.rollup import rollup_raw
 from hdstats_spark.schema import CHANNELS
-from hdstats_spark.streaming.stream import run_stream_to_memory
+from hdstats_spark.streaming.stream import stream_transcripts_from_dir, streaming_rollup_1m
 
 
 def test_streaming_equals_batch(spark, transcripts, tmp_path):
@@ -31,7 +30,14 @@ def test_streaming_equals_batch(spark, transcripts, tmp_path):
     for i, p in enumerate(parts):
         os.utime(p, (base + i, base + i))
 
-    q = run_stream_to_memory(spark, src, ckpt, name="t1m_stream", watermark="0 seconds")
+    q = (
+        streaming_rollup_1m(stream_transcripts_from_dir(spark, src), watermark="0 seconds")
+        .writeStream.format("memory")
+        .queryName("t1m_stream")
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
     try:
         deadline = time.time() + 180
         while time.time() < deadline:
@@ -104,461 +110,6 @@ def test_streaming_to_icelite_commits(spark, transcripts, tmp_path):
     a = got.sort_values(["conv_id", "bucket"]).reset_index(drop=True)
     b = expect.sort_values(["conv_id", "bucket"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)], check_dtype=False)
-
-
-def test_streaming_gapfill_equals_batch_locf(spark, transcripts, tmp_path):
-    """Stateful online gap-fill (applyInPandasWithState) ≡ batch densify+locf:
-    the causal half of the reference's completion, computed incrementally."""
-    from hdstats_spark.operators.gapfill import densify, locf
-    from hdstats_spark.streaming.stream import streaming_gapfill
-
-    tier = rollup_raw(channelize(transcripts), "1m").cache()
-    src = str(tmp_path / "tier_arrivals")
-    ckpt = str(tmp_path / "gf_ckpt")
-    tier.orderBy("bucket").coalesce(4).write.mode("overwrite").parquet(src)
-    parts = sorted(glob.glob(os.path.join(src, "part-*.parquet")))
-    base = time.time()
-    for i, p in enumerate(parts):
-        os.utime(p, (base + i, base + i))
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_gapfill(stream, CHANNELS, step_seconds=60)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("gf_stream")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = (
-        spark.table("gf_stream")
-        .toPandas()
-        .sort_values(["conv_id", "bucket"])
-        .reset_index(drop=True)
-    )
-    expect = (
-        locf(densify(tier, "1m", CHANNELS), "bucket", CHANNELS)
-        .drop("t")
-        .toPandas()
-        .sort_values(["conv_id", "bucket"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(expect), (len(got), len(expect))
-    assert (got.conv_id.values == expect.conv_id.values).all()
-    assert (got.bucket.values == expect.bucket.values).all()
-    for c in CHANNELS:
-        pd.testing.assert_series_equal(
-            got[c].astype("float64"), expect[c].astype("float64"), check_names=False
-        )
-    # gap rows are flagged and carry the previous observation
-    assert (got.is_gap.isin([0, 1])).all() and got.is_gap.sum() > 0
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    """dropDuplicatesWithinWatermark dedup ≡ batch distinct-by-digest for
-    on-time data: each duplicated text is emitted exactly once across
-    micro-batches inside the watermark window."""
-    import datetime
-
-    from hdstats_spark.streaming.stream import streaming_exact_dedup
-
-    t0 = datetime.datetime(2025, 4, 1)
-    texts = ["alpha bravo", "charlie delta", "  Alpha   bravo ", "echo", "charlie delta"]
-    rows_a = [(i, t0 + datetime.timedelta(minutes=i), texts[i]) for i in range(3)]
-    rows_b = [(i + 3, t0 + datetime.timedelta(minutes=i + 3), texts[i + 3]) for i in range(2)]
-    src = str(tmp_path / "dd_src")
-    os.makedirs(src)
-    spark.createDataFrame(rows_a, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    base = time.time()
-    a_files = set(glob.glob(os.path.join(src, "part-*.parquet")))
-    for p in a_files:
-        os.utime(p, (base - 100, base - 100))
-    spark.createDataFrame(rows_b, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_exact_dedup(stream, watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dd_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = spark.table("dd_stream").toPandas()
-    # "alpha bravo" ≡ "  Alpha   bravo "?  No: whitespace INSIDE differs and
-    # normalization is lower+trim only, so digests differ — 2 distinct rows;
-    # "charlie delta" repeats verbatim across micro-batches → 1 row
-    assert len(got) == len(set(got.digest)) == 4, got[["doc_id", "digest"]]
-    # the duplicate emitted exactly once, from its first arrival
-    dup_digest = got.set_index("doc_id").digest
-    assert 1 in dup_digest.index and 4 not in dup_digest.index
-
-
-def test_streaming_gapfill_multichunk_and_late_rows(spark, tmp_path):
-    """Two hardening contracts: (a) a group whose micro-batch spans several
-    Arrow chunks (forced via a tiny maxRecordsPerBatch) is sorted as a WHOLE
-    before gap expansion — per-chunk sorting used to move state backwards on
-    out-of-order chunks; (b) rows at or before the state clock (late
-    arrivals) are dropped, never re-emitted as duplicate buckets."""
-    import datetime
-
-    from hdstats_spark.streaming.stream import streaming_gapfill
-
-    t0 = datetime.datetime(2025, 3, 1)
-    mins_a = [0, 2, 5, 30, 7, 12, 9, 20, 15, 25, 1, 3]  # deliberately unordered
-    mins_b = [3, 4, 31, 35]  # 3, 4 are LATE (state clock is 30 after batch A)
-    rows_a = [("c1", t0 + datetime.timedelta(minutes=m), float(m)) for m in mins_a]
-    rows_b = [("c1", t0 + datetime.timedelta(minutes=m), 100.0 + m) for m in mins_b]
-    src = str(tmp_path / "mc_src")
-    os.makedirs(src)
-    dfa = spark.createDataFrame(rows_a, ["conv_id", "bucket", "v"]).coalesce(1)
-    dfb = spark.createDataFrame(rows_b, ["conv_id", "bucket", "v"]).coalesce(1)
-    dfa.write.mode("append").parquet(src)
-    base = time.time()
-    a_files = set(glob.glob(os.path.join(src, "part-*.parquet")))
-    for p in a_files:
-        os.utime(p, (base - 100, base - 100))
-    dfb.write.mode("append").parquet(src)
-    for p in set(glob.glob(os.path.join(src, "part-*.parquet"))) - a_files:
-        os.utime(p, (base, base))
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = streaming_gapfill(stream, ["v"], step_seconds=60)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("gf_mc")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "mc_ckpt"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                q.processAllAvailable()
-                if not q.status["isDataAvailable"]:
-                    break
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = spark.table("gf_mc").toPandas().sort_values("bucket").reset_index(drop=True)
-    # batch A must emit the full dense 0..30 grid exactly once
-    # (multi-chunk disorder must not fragment or duplicate it); batch B the
-    # 31..35 grid; the late rows (3, 4) must be dropped, so bucket values at
-    # 3 and 4 carry batch A's LOCF values, not 103/104
-    assert len(got) == 36, len(got)
-    assert not got.bucket.duplicated().any()
-    mins = ((got.bucket - got.bucket.min()).dt.total_seconds() // 60).astype(int)
-    assert list(mins) == list(range(36))
-    byv = got.set_index(mins)["v"]
-    assert byv[3] == 3.0 and byv[4] == 3.0  # LOCF from minute 3's ON-TIME row
-    assert byv[31] == 131.0 and byv[34] == 131.0 and byv[35] == 135.0
-    obs = {0, 1, 2, 3, 5, 7, 9, 12, 15, 20, 25, 30, 31, 35}
-    assert set(got.loc[got.is_gap == 0].index.map(mins)) == obs
-
-
-def test_streaming_neardup_simhash_equals_batch(spark, tmp_path):
-    """Streamed SimHash near-dup pairs ≡ batch simhash_pairs on the same
-    corpus (as normalized {pair: hamming} sets): the same fingerprint kernel
-    and band layout run over two micro-batches with all docs inside the
-    state TTL, so every batch pair must be found online — including pairs
-    whose two sides arrive in DIFFERENT micro-batches — with identical
-    Hamming distances, and no extra pairs."""
-    import datetime
-
-    import numpy as np
-
-    from hdstats_spark.operators.dedup import simhash_pairs
-    from hdstats_spark.streaming.stream import streaming_neardup_simhash
-
-    rng = np.random.default_rng(5)
-    vocab = "alpha bravo charlie delta echo foxtrot golf hotel india juliet".split()
-    t0 = datetime.datetime(2025, 4, 1)
-    rows = []
-    for i in range(40):
-        words = [vocab[x] for x in rng.integers(0, len(vocab), size=40)]
-        rows.append((i, t0 + datetime.timedelta(minutes=i), " ".join(words)))
-    # near-dups of docs 0..7 (2-word edits) arriving in the SECOND batch
-    for i in range(8):
-        words = rows[i][2].split()
-        words[5] = "zulu"
-        words[20] = "yankee"
-        rows.append((100 + i, t0 + datetime.timedelta(minutes=60 + i), " ".join(words)))
-    rows.append((200, t0 + datetime.timedelta(minutes=70), rows[3][2]))  # exact dup
-
-    docs = spark.createDataFrame(rows, ["doc_id", "ts", "text"])
-    src = str(tmp_path / "nd_src")
-    os.makedirs(src)
-    first = [r for r in rows if r[0] < 100]
-    second = [r for r in rows if r[0] >= 100]
-    spark.createDataFrame(first, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    base = time.time()
-    for p in glob.glob(os.path.join(src, "part-*.parquet")):
-        os.utime(p, (base - 100, base - 100))
-    spark.createDataFrame(second, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    # at-least-once replay: the second batch's docs arrive AGAIN as a third
-    # file — replayed ids must neither self-pair nor re-emit reversed pairs
-    time.sleep(1.1)
-    spark.createDataFrame(second, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_neardup_simhash(
-        stream, max_hamming=3, watermark="1 hour", state_ttl_seconds=86400
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("nd_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "nd_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = spark.table("nd_stream").toPandas()
-    # minimal-agreeing-band emission + replay idempotence: every unordered
-    # pair appears exactly once (no multi-band duplicates, no self-pairs,
-    # no reversed re-emissions from the replayed third file)
-    assert (got.id_a != got.id_b).all(), got
-    keys = got.apply(lambda r: (min(r.id_a, r.id_b), max(r.id_a, r.id_b)), axis=1)
-    assert not keys.duplicated().any(), got
-    streamed = {
-        (min(a, b), max(a, b)): h
-        for a, b, h in zip(got.id_a, got.id_b, got.hamming)
-    }
-    batch = simhash_pairs(docs.select("doc_id", "text"), max_hamming=3).toPandas()
-    expect = {
-        (min(a, b), max(a, b)): h
-        for a, b, h in zip(batch.id_a, batch.id_b, batch.hamming)
-    }
-    assert streamed == expect, (streamed, expect)
-    assert (3, 200) in streamed and streamed[(3, 200)] == 0  # cross-batch exact dup
-
-
-def test_streaming_neardup_minhash_equals_batch(spark, tmp_path):
-    """Streamed MinHash+LSH near-dup pairs ≡ batch minhash_lsh_pairs on the
-    same corpus (as normalized {pair: est_jaccard} maps): the stream's
-    map-only signatures equal the batch explode/groupBy signatures exactly
-    (same hash, same permutation constants), the band-bucket state op finds
-    every batch pair — including pairs whose two sides arrive in DIFFERENT
-    micro-batches — with identical estimates, emits each exactly once
-    (minimal-agreeing-band rule), and ignores an at-least-once replay."""
-    import datetime
-
-    import numpy as np
-
-    from hdstats_spark.operators.dedup import minhash_lsh_pairs
-    from hdstats_spark.streaming.stream import streaming_neardup_minhash
-
-    rng = np.random.default_rng(9)
-    vocab = "alpha bravo charlie delta echo foxtrot golf hotel india juliet".split()
-    t0 = datetime.datetime(2025, 4, 1)
-    rows = []
-    for i in range(40):
-        words = [vocab[x] for x in rng.integers(0, len(vocab), size=40)]
-        rows.append((i, t0 + datetime.timedelta(minutes=i), " ".join(words)))
-    # near-dups of docs 0..7 (2-word edits) arriving in the SECOND batch
-    for i in range(8):
-        words = rows[i][2].split()
-        words[5] = "zulu"
-        words[20] = "yankee"
-        rows.append((100 + i, t0 + datetime.timedelta(minutes=60 + i), " ".join(words)))
-    rows.append((200, t0 + datetime.timedelta(minutes=70), rows[3][2]))  # exact dup
-
-    docs = spark.createDataFrame(rows, ["doc_id", "ts", "text"])
-    src = str(tmp_path / "mh_src")
-    os.makedirs(src)
-    first = [r for r in rows if r[0] < 100]
-    second = [r for r in rows if r[0] >= 100]
-    spark.createDataFrame(first, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    base = time.time()
-    for p in glob.glob(os.path.join(src, "part-*.parquet")):
-        os.utime(p, (base - 100, base - 100))
-    spark.createDataFrame(second, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    # at-least-once replay as a third file: replayed ids must be ignored
-    time.sleep(1.1)
-    spark.createDataFrame(second, ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_neardup_minhash(
-        stream, k=8, bands=4, threshold=0.25, n=2,
-        watermark="1 hour", state_ttl_seconds=86400,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("mh_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "mh_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = spark.table("mh_stream").toPandas()
-    assert (got.id_a != got.id_b).all(), got
-    keys = got.apply(lambda r: (min(r.id_a, r.id_b), max(r.id_a, r.id_b)), axis=1)
-    assert not keys.duplicated().any(), got
-    streamed = {
-        (min(a, b), max(a, b)): e
-        for a, b, e in zip(got.id_a, got.id_b, got.est_jaccard)
-    }
-    batch = minhash_lsh_pairs(
-        docs.select("doc_id", "text"), k=8, bands=4, threshold=0.25, n=2
-    ).toPandas()
-    expect = {
-        (min(a, b), max(a, b)): e
-        for a, b, e in zip(batch.id_a, batch.id_b, batch.est_jaccard)
-    }
-    assert streamed == expect, (streamed, expect)
-    assert (3, 200) in streamed and streamed[(3, 200)] == 1.0  # cross-batch exact dup
-
-
-def test_streaming_neardup_embedding_equals_batch(spark, tmp_path):
-    """Streamed embedding near-dup pairs ≡ batch dedup_embedding_lsh on the
-    same corpus (as normalized {pair: cos_sim} maps): identical hyperplane
-    signatures (same seed) make the streamed bucket index generate exactly
-    the batch self-join's candidate set; the exact-cosine verify and τ
-    filter match, pairs split across micro-batches are found online, each
-    emits once (minimal-agreeing-table rule), and an at-least-once replay
-    is ignored."""
-    import datetime
-
-    import numpy as np
-
-    from hdstats_spark.operators.dedup import dedup_embedding_lsh
-    from hdstats_spark.streaming.stream import streaming_neardup_embedding
-
-    rng = np.random.default_rng(21)
-    dim, t0 = 16, datetime.datetime(2025, 4, 1)
-    rows = []
-    base_vecs = {}
-    for i in range(40):
-        v = rng.standard_normal(dim)
-        base_vecs[i] = v
-        rows.append((i, t0 + datetime.timedelta(minutes=i), [float(x) for x in v]))
-    # near-dups of vecs 0..7 (small perturbations) arriving in the SECOND batch
-    for i in range(8):
-        v = base_vecs[i] + 0.05 * rng.standard_normal(dim)
-        rows.append((100 + i, t0 + datetime.timedelta(minutes=60 + i), [float(x) for x in v]))
-    rows.append((200, t0 + datetime.timedelta(minutes=70), rows[3][2]))  # exact dup
-
-    from pyspark.sql.types import (
-        ArrayType, FloatType, LongType, StructField, StructType, TimestampType,
-    )
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("embedding", ArrayType(FloatType())),
-    ])
-    embs = spark.createDataFrame(rows, schema)
-    src = str(tmp_path / "emb_src")
-    os.makedirs(src)
-    first = [r for r in rows if r[0] < 100]
-    second = [r for r in rows if r[0] >= 100]
-    spark.createDataFrame(first, schema).coalesce(1).write.mode("append").parquet(src)
-    base = time.time()
-    for p in glob.glob(os.path.join(src, "part-*.parquet")):
-        os.utime(p, (base - 100, base - 100))
-    spark.createDataFrame(second, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # at-least-once replay as a third file
-    spark.createDataFrame(second, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_neardup_embedding(
-        stream, dim=dim, threshold=0.4, k=4, tables=8, seed=11,
-        watermark="1 hour", state_ttl_seconds=86400,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("emb_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "emb_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = spark.table("emb_stream").toPandas()
-    assert (got.id_a != got.id_b).all(), got
-    keys = got.apply(lambda r: (min(r.id_a, r.id_b), max(r.id_a, r.id_b)), axis=1)
-    assert not keys.duplicated().any(), got
-    streamed = {
-        (min(a, b), max(a, b)): s
-        for a, b, s in zip(got.id_a, got.id_b, got.cos_sim)
-    }
-    batch = dedup_embedding_lsh(
-        embs.select("vec_id", "embedding"), dim, threshold=0.4, k=4, tables=8, seed=11
-    ).toPandas()
-    expect = {
-        (min(a, b), max(a, b)): s
-        for a, b, s in zip(batch.id_a, batch.id_b, batch.cos_sim)
-    }
-    assert streamed == expect, (streamed, expect)
-    assert (3, 200) in streamed and streamed[(3, 200)] == 1.0  # cross-batch exact dup
 
 
 def test_streaming_cascade_to_icelite(spark, transcripts, tmp_path):
@@ -785,71 +336,6 @@ def test_icelite_sink_cascade_composite_compaction_together(spark, transcripts, 
     for t in (*casc.values(), comp):
         assert len(t.snapshots()) <= 5
     assert tbl.rows() == tier.count()
-
-
-def test_streaming_decontaminate_equals_batch(spark, tmp_path):
-    """Streaming decontamination (stateless map-only form) ≡ the batch
-    operator row-for-row on the same corpus/benchmark, across multiple
-    micro-batches."""
-    import datetime
-
-    from hdstats_spark.operators.dedup import decontaminate
-    from hdstats_spark.streaming.stream import streaming_decontaminate
-
-    bench_text = "alpha bravo charlie delta echo foxtrot golf hotel"
-    t0 = datetime.datetime(2025, 5, 1)
-    rows = [
-        (0, t0, bench_text),
-        (1, t0 + datetime.timedelta(minutes=1), "xx yy alpha bravo charlie delta echo foxtrot zz ww"),
-        (2, t0 + datetime.timedelta(minutes=2), "one two three four five six seven eight nine ten"),
-        (3, t0 + datetime.timedelta(minutes=3), "short doc"),
-        (4, t0 + datetime.timedelta(minutes=4), "golf hotel india juliet kilo lima mike november"),
-    ]
-    src = str(tmp_path / "dec_src")
-    os.makedirs(src)
-    # two arrival files -> two micro-batches
-    spark.createDataFrame(rows[:3], ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-    base = time.time()
-    for p in glob.glob(os.path.join(src, "part-*.parquet")):
-        os.utime(p, (base - 100, base - 100))
-    spark.createDataFrame(rows[3:], ["doc_id", "ts", "text"]).coalesce(1).write.mode("append").parquet(src)
-
-    bench = spark.createDataFrame([(100, bench_text)], ["doc_id", "text"])
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_decontaminate(stream, bench, n=6)
-        .writeStream.format("memory")
-        .queryName("dec_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dec_ckpt"))
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if not q.status["isDataAvailable"]:
-                break
-    finally:
-        q.stop()
-
-    got = (
-        spark.table("dec_stream").toPandas()
-        .set_index("doc_id")[["n_dirty_ngrams", "contaminated"]]
-        .sort_index()
-    )
-    corpus = spark.createDataFrame([(i, t) for i, _, t in rows], ["doc_id", "text"])
-    expect = (
-        decontaminate(corpus, bench, n=6).toPandas()
-        .set_index("doc_id")[["n_dirty_ngrams", "contaminated"]]
-        .sort_index()
-    )
-    pd.testing.assert_frame_equal(got, expect, check_dtype=False)
-    assert got.loc[1, "contaminated"] == 1 and got.loc[2, "contaminated"] == 0
 
 
 def test_composite_reroll_prunes_to_touched_bucket_files(spark, transcripts, tmp_path):
