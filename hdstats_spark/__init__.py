@@ -12,6 +12,8 @@ Catalyst supplies pushdown/pruning/partial-aggregation for free.
 
 Layout:
   session       — tuned SparkSession builder (AQE, Arrow, UTC)
+  worker_daemon — zip-free Python worker daemon (this package's import must
+                  not import pyspark: the daemon loads through it)
   schema        — transcript + tier schemas, channel definitions
   datagen       — deterministic distributed synthetic transcripts
   operators/    — channelize, rollup tiers, gap-fill, batched series kernels,

@@ -27,6 +27,9 @@ import numpy as np
 F32 = np.float32
 F64 = np.float64
 
+# most recent Weiszfeld iterates nangeomedian_batch keeps for its cycle exit
+_CYCLE_RING = 128
+
 
 def pad_stack(series: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
     """Stack per-series (p, n_i) float32 matrices into (G, p, n_max),
@@ -52,10 +55,22 @@ def nangeomedian_batch(
     ``lengths`` gives each series' true (pre-padding) observation count: the
     all-anchors stall test (geomedian.pyx:353, nzeros == n) must compare
     against the REAL length, else a padded constant series would miss its
-    stall and oscillate — NaN pads can never be anchors."""
+    stall and oscillate — NaN pads can never be anchors.
+
+    Cycle exit: float32 rounding often locks a series into a cycle that
+    never meets eps (periods 2–86 seen on hourly event tiers).  One step
+    ``y_t ↦ y_{t+1}`` is a pure function of ``y_t``, so once ``y_{t+1}``
+    repeats an earlier iterate ``y_j`` bit for bit, the serial loop cycles
+    with period ``P = t + 1 - j`` until ``maxiters`` and returns
+    ``y_maxiters = y_{j + (maxiters - j) % P}``, an iterate the ring of the
+    last ``K`` iterates still holds.  Cycles longer than ``K`` run to
+    ``maxiters`` as the serial loop does."""
     eps = F32(eps)
     G, p, n = X.shape
     lens = np.full(G, n, dtype=np.int64) if lengths is None else np.asarray(lengths, np.int64)
+    # the ring is (K, G, p): K ≤ n keeps it no larger than X itself, which
+    # may hold millions of short series
+    K = max(1, min(n, _CYCLE_RING))
     with warnings.catch_warnings(), np.errstate(all="ignore"):
         warnings.simplefilter("ignore", RuntimeWarning)
         Y = np.nanmean(X, axis=2).astype(F32, copy=False)  # (G, p)
@@ -63,9 +78,9 @@ def nangeomedian_batch(
         active = np.arange(G)
         Xa = X
         y = Y
-        # previous-previous estimate, for parity-exact period-2 short-circuit
-        yprev = np.full_like(Y, np.nan)
+        ring = np.empty((K, G, p), dtype=F32)  # iterate t at slot t % K
         for it in range(maxiters):
+            ring[it % K] = y
             diff = Xa - y[:, :, None]  # f32
             # one f64 cast, passed twice: the duplicated astype allocated a
             # second (G, p, n) float64 tensor per iteration (identical
@@ -93,25 +108,26 @@ def nangeomedian_batch(
             dd = (y - y1).astype(F64)
             dist = np.sqrt(np.einsum("gp,gp->g", dd, dd)).astype(F32)
             done = (dist < eps) | stalled  # NaN dist → keep iterating
-            # Period-2 oscillation short-circuit: float32 rounding often locks
-            # the iteration into y1 ↔ y forever (dist stuck ≥ eps).  The cycle
-            # is deterministic, so the value the serial reference would return
-            # after exhausting maxiters is y1 if the remaining iteration count
-            # is even, else y — computed here exactly, no semantic deviation.
-            osc = ~done & (y1 == yprev).all(axis=1)
-            even_rem = (maxiters - 1 - it) % 2 == 0
-            out[active] = np.where(
-                (osc & ~even_rem)[:, None], y, y1
-            )
-            done = done | osc
+            out[active] = y1
+            # bitwise compare: NaN iterates repeat too, and ±0 differ
+            h = min(it + 1, K)
+            seen = (ring[:h].view(np.uint32) == y1.view(np.uint32)[None]).all(axis=2)
+            cyc = ~done & seen.any(axis=0)
+            if cyc.any():
+                rows = np.nonzero(cyc)[0]
+                slot = seen[:, rows].argmax(axis=0)  # some j ≤ it with y_j = y_{it+1}
+                j = it - (it - slot) % K
+                e = j + (maxiters - j) % (it + 1 - j)
+                out[active[rows]] = ring[e % K, rows]
+                done |= cyc
             if done.all():
                 break
             keep = ~done
             active = active[keep]
-            yprev = y[keep]
             Xa = Xa[keep]
             y = y1[keep]
             lens = lens[keep]
+            ring = ring[:, keep]
         return out
 
 

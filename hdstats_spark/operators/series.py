@@ -14,10 +14,11 @@ which amortizes the Python-dispatch and iteration overhead across series
 keeping results identical.
 
 Skew note: one row per series bounds group size at the hot-conversation
-length (10^4 buckets ≈ 320 KB — far under Arrow limits); padded-tensor blowup
-from mixing one hot series with many short ones in a batch is bounded by
-length-sorted chunking (_chunks_by_cells) and, for DTW, by row chunks under
-_DTW_BUDGET_BYTES.
+length (10^4 buckets ≈ 320 KB — far under Arrow limits).  In the flat
+composite, length-sorted chunking (_chunks_by_cells) keeps every series
+within 2× of its chunk's shortest, so one hot series no longer pads the
+short ones of its batch (padding at most doubles a chunk's cells); for DTW,
+row chunks stay under _DTW_BUDGET_BYTES.
 """
 
 from __future__ import annotations
@@ -84,18 +85,19 @@ def series_table(
 
 
 def _chunks_by_cells(lens: np.ndarray, p: int, budget: int = _CELL_BUDGET):
-    """Yield index arrays sorted by series length such that each chunk's
-    padded tensor stays under the cell budget."""
+    """Yield index arrays sorted by series length.  A chunk ends before its
+    padded tensor would pass the cell budget, or its longest series would be
+    more than twice its shortest, so padding at most doubles a chunk's cells
+    (one hot conversation would otherwise pad every short series with it)."""
     order = np.argsort(lens, kind="mergesort")
     start = 0
     while start < len(order):
         end = start + 1
-        nmax = lens[order[start]]
+        nmin = lens[order[start]]
         while end < len(order):
-            cand = max(nmax, lens[order[end]])
-            if (end - start + 1) * p * cand > budget:
+            nmax = lens[order[end]]
+            if (end - start + 1) * p * nmax > budget or nmax > 2 * nmin:
                 break
-            nmax = cand
             end += 1
         yield order[start:end]
         start = end

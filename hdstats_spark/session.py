@@ -7,7 +7,12 @@ Defaults are chosen for correctness-at-scale first:
     large conversations instead of materializing them;
   * UTC session timezone so bucket boundaries are deterministic everywhere;
   * shuffle partitions sized to the local core count (a real cluster job
-    overrides via spark-submit --conf).
+    overrides via spark-submit --conf);
+  * Python workers forked from ``hdstats_spark.worker_daemon``, which takes
+    Spark's zip archives off the workers' ``sys.path`` when an installed
+    pyspark is importable.  Each task runs ``importlib.invalidate_caches()``,
+    which makes every zip importer re-read its archive: 125–240 ms per task
+    on a 4-core VM, most of a small task's fixed cost (see that module).
 """
 
 from __future__ import annotations
@@ -65,6 +70,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "hdstats_spark.worker_daemon")
     )
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)

@@ -231,3 +231,44 @@ def test_batch_handles_many_series():
     got = nangeomedian_batch(X, lengths=lens)
     for i in (0, 150, 299):
         npt.assert_array_equal(got[i], _nangeomedian_axis_one(series[i]))
+
+
+def _step_series(rng, n, types=5):
+    """Piecewise-constant hourly event channels, as a gap-filled event tier
+    holds them: per-type counts, the 2-dp value sum and max, the event
+    count.  Integer channels like these often lock Weiszfeld into a float32
+    cycle instead of meeting eps."""
+    cuts = np.sort(rng.choice(np.arange(1, n), size=rng.integers(3, 12), replace=False))
+    X = np.empty((types + 3, n), np.float32)
+    for a, b in zip(np.r_[0, cuts], np.r_[cuts, n]):
+        m = 1 + rng.poisson(0.4)
+        v = np.round(rng.exponential(50.0, m), 2)
+        X[:types, a:b] = np.bincount(rng.integers(0, types, m), minlength=types)[:, None]
+        X[types:, a:b] = np.array([v.sum(), v.max(), m], np.float32)[:, None]
+    return X
+
+
+def _period(s, start=180, span=36):
+    """Least period of the serial iterates y_start … y_{start+span-1}, read
+    off the oracle's output at each maxiters (1: converged), or None."""
+    ys = [hdo.nangeomedian(s, maxiters=m).tobytes() for m in range(start, start + span)]
+    return next(
+        (P for P in range(1, span // 2 + 1) if ys[P:] == ys[: span - P]), None
+    )
+
+
+def test_cycle_exit_matches_serial():
+    """Four series cycle with periods 3, 4, 5 and 18, from iterations 49–178;
+    the others converge at different steps, so the active set shrinks while
+    the cycles run.  The cycle exit must emit the very iterate the serial
+    loop holds when maxiters runs out, for either parity of maxiters and for
+    a maxiters that ends a few steps after two of the cycles are found.
+    Equal lengths: no padding, so every sum runs in the serial order."""
+    rng = np.random.default_rng(6)
+    series = [_step_series(rng, 120) for _ in range(12)]
+    assert sorted(P for P in map(_period, series) if P > 1) == [3, 4, 5, 18]
+    X, lens = pad_stack(series)
+    for maxiters in (1000, 999, 61):
+        got = nangeomedian_batch(X, maxiters=maxiters, lengths=lens)
+        for i, s in enumerate(series):
+            npt.assert_array_equal(got[i], hdo.nangeomedian(s, maxiters=maxiters))

@@ -8,7 +8,9 @@ Checked definitions: every module-level ``def``/``class`` (public and
 dunders excluded).  A name counts as used when some non-test ``.py`` file
 of the repo refers to it in code: as a name, an attribute, an imported
 name, or a string constant equal to the name (registries and ``__all__``).
-A mention in a comment or a docstring does not keep a name alive.
+A mention in a comment or a docstring does not keep a name alive, and
+neither does a string constant inside the definition's own body (a method
+that writes its own name as a lineage key is not thereby called).
 
 Spark calls some methods itself: a method is exempt when a ``pyspark.*``
 class in its class's MRO defines the same name (the Python data source
@@ -27,6 +29,8 @@ ALLOWED = {
     "geomedian_axis0": "the only Spark implementation of the reference's axis-0 geomedian; no query asks for it",
     "gen_assets": "synthetic binary-asset table for the multimodal operator tests",
     "sample_frames": "video frame-sampling stub of the multimodal asset plumbing, test-driven only",
+    "IceliteTable.rollback_to": "icelite's snapshot rollback; no job rolls a tier back yet (ROADMAP direction 2)",
+    "IceliteTable.delete_where": "icelite's copy-on-write row delete; no job deletes rows yet (ROADMAP direction 2)",
 }
 
 
@@ -82,11 +86,24 @@ def _defs():
                     yield f"{rel}:{node.lineno}", f"{cls.name}.{node.name}"
 
 
+def _constants_outside_own_def(node: ast.AST, enclosing: frozenset = frozenset()):
+    """String constants under ``node``, except each one that equals the
+    name of a ``def``/``class`` enclosing it."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        enclosing = enclosing | {node.name}
+    elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+        if node.value not in enclosing:
+            yield node.value
+    for child in ast.iter_child_nodes(node):
+        yield from _constants_outside_own_def(child, enclosing)
+
+
 def _names_used_outside_tests() -> set[str]:
     used = set()
     for path, tree in _sources():
         if _is_test(path):
             continue
+        used.update(_constants_outside_own_def(tree))
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 used.add(node.id)
@@ -94,8 +111,6 @@ def _names_used_outside_tests() -> set[str]:
                 used.add(node.attr)
             elif isinstance(node, ast.alias):
                 used.add(node.name.rsplit(".", 1)[-1])
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                used.add(node.value)
     return used
 
 
