@@ -1,4 +1,5 @@
-"""Session-scoped registry of shared query intermediates.
+"""Session-scoped registry of shared query intermediates: the one cache
+of ``hdstats_spark``.
 
 Several queries read the same intermediate (a base-table reader, the
 hourly bucket tier, the gap-filled dense tier).  Rebuilding it as a new
@@ -14,7 +15,19 @@ each one ONCE per live session and hands back the same DataFrame.
   under its input paths, and a lookup that finds them changed unpersists
   the entry and rebuilds it over a fresh reader.  The CacheManager matches
   plans by path, so a stale entry left cached would keep serving the old
-  files' rows.
+  files' rows; the same lookup therefore also refreshes the changed paths
+  (``spark.catalog.refreshByPath``), which drops the blocks of every cached
+  plan over them, whoever cached it.
+* Operators that cache their own intermediate (the dedup shingle,
+  signature and fingerprint tables, the decontamination dirty set, the
+  winnowing fingerprints) hold ONE entry per name, ``("plan", name)``,
+  through :func:`cached_plan`.  A call with the same plan by
+  ``DataFrame.sameSemantics`` returns the warm entry; any other call
+  unpersists it and caches the new plan, so each name pins at most one
+  table's blocks.  Such an entry over a registry-read table follows that
+  table's rewrites through the refresh above.  It records no fingerprint
+  of its own: ``df.inputFiles()`` lists no file under a cached relation, so
+  once the entry is cached its plan reports no inputs.
 """
 
 from __future__ import annotations
@@ -48,7 +61,11 @@ def _fingerprint(paths: Sequence[str]) -> tuple:
     return tuple(sorted(out))
 
 
-def _lookup(spark: SparkSession, key: Hashable, paths: Sequence[str], build) -> DataFrame:
+def _lookup(
+    spark: SparkSession, key: Hashable, paths: Sequence[str], build, same=None
+) -> DataFrame:
+    """The entry under ``key``, rebuilt unless its files are unchanged and,
+    when ``same`` is given, ``same(entry)`` holds."""
     fp = _fingerprint(paths)
     with _lock:
         per_session = _entries.get(spark)
@@ -56,8 +73,14 @@ def _lookup(spark: SparkSession, key: Hashable, paths: Sequence[str], build) -> 
             per_session = _entries[spark] = {}
         hit = per_session.get(key)
         if hit is not None:
-            if hit[0] == fp:
+            if hit[0] == fp and (same is None or same(hit[1])):
                 return hit[1]
+            if hit[0] != fp:
+                # drop the blocks of every other plan cached over these
+                # files as well (a cached_plan entry, a plan built on this
+                # entry): the CacheManager matches them by path too
+                for path in paths:
+                    spark.catalog.refreshByPath(path)
             if hit[1].is_cached:
                 # unpersist BEFORE rebuilding: the rebuilt plan canonicalizes
                 # to the stale one, so caching first would re-find the old
@@ -81,3 +104,13 @@ def cached(
     """``build().cache()`` for the current state of ``paths``; the blocks
     fill on the first action, as with ``.cache()``."""
     return _lookup(spark, key, paths, lambda: build().cache())
+
+
+def cached_plan(name: str, df: DataFrame) -> DataFrame:
+    """``df.cache()`` held as the one entry under ``name`` in ``df``'s
+    session; a repeat call with the same plan returns the warm entry.  A
+    caller that keeps the returned DataFrame across a later call under the
+    same name with another plan recomputes it uncached: slower, not wrong.
+    An input read outside :func:`table` is not checked: after rewriting it,
+    call ``spark.catalog.refreshByPath``, as for any Spark cache."""
+    return _lookup(df.sparkSession, ("plan", name), (), df.cache, df.sameSemantics)

@@ -22,69 +22,16 @@ is the standard guard against quadratic blowup on 10^12-scale corpora.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import cached_plan
+
 # 31-bit Mersenne prime: (a·h + b) stays < 2^62, safe under ANSI int64
 _MERSENNE = (1 << 31) - 1
 _ONE_U64 = np.uint64(1)
-
-# live per-operator caches, keyed by call site: each operator caches one
-# intermediate table (shingles / minhash signatures / LSH signatures) that
-# feeds several consumers within ONE invocation; in a long-lived driver
-# (bench loops, the query registry) the blocks would otherwise accumulate
-# for the session lifetime, so each new call unpersists its predecessor's.
-# A caller that keeps the returned LAZY DataFrame across a later call simply
-# recomputes without the cache — correct, just slower.  The same applies to
-# INTERLEAVED invocations from concurrent driver threads: the registry swap
-# itself is lock-guarded (no lost/doubly-unpersisted entries), but a second
-# same-key call unpersists the first call's cache while its job may still
-# be running — Spark degrades that to recompute, never wrong results.
-# Serial operator invocation per key is the assumed (and benched) mode.
-_live_caches: dict[str, DataFrame] = {}
-_live_caches_lock = threading.Lock()
-
-
-def _swap_cache(key: str, df: DataFrame) -> DataFrame:
-    with _live_caches_lock:
-        prev = _live_caches.get(key)
-        if prev is not None:
-            # when the new call rebuilds the IDENTICAL plan (bench repeats,
-            # a sibling query sharing the same intermediate — e.g.
-            # dup_clusters after ngram_jaccard, both over the same shingle
-            # table), keep the already-warm cache instead of dropping and
-            # refilling it: unpersist-then-recache discards the
-            # materialized blocks and pays the full recompute on the next
-            # action for zero correctness benefit.  ``_jdf`` and
-            # ``queryExecution().analyzed().sameResult`` are private
-            # PySpark/Catalyst API, checked against pyspark 4.1.x only;
-            # if they fail, the predecessor counts as different and is
-            # unpersisted and recached (slower, never wrong)
-            try:
-                if (
-                    prev.sparkSession is df.sparkSession
-                    and prev._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(df._jdf.queryExecution().analyzed())
-                ):
-                    return prev
-            except Exception:
-                pass  # stopped session / analysis error: treat as different
-            # unpersist BEFORE caching the successor: Spark's CacheManager
-            # keys entries by logical plan, so a cache-then-unpersist order
-            # would drop the entry that was just registered and silently
-            # uncache the new call too
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # predecessor belonged to a since-stopped SparkSession
-        out = df.cache()
-        _live_caches[key] = out
-    return out
 
 
 def tokens_col(text_col="text"):
@@ -143,7 +90,7 @@ def shingle_jaccard_pairs(
     """Exact n-gram Jaccard near-duplicate pairs via shingle equi-join."""
     # cached: the exploded shingle table feeds the size agg AND both sides of
     # the self-join — recomputing the explode 3× dominates at scale
-    s = _swap_cache("shingles", doc_shingles(docs, n, id_col, text_col, max_doc_freq))
+    s = cached_plan("shingles", doc_shingles(docs, n, id_col, text_col, max_doc_freq))
     sizes = s.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = s.select(F.col(id_col).alias("id_a"), "shingle")
     b = s.select(F.col(id_col).alias("id_b"), "shingle")
@@ -213,7 +160,7 @@ def decontaminate(
         # the few survivors with a plain (shuffle) semi-join against the
         # dirty table.  False positives cost only re-verify shuffle rows —
         # the final result is bit-identical to the broadcast method.
-        dirty = _swap_cache("decontaminate_dirty", dirty)
+        dirty = cached_plan("decontaminate_dirty", dirty)
         cand = _bloom_prefilter(s, dirty, "shingle")
         hits = (
             cand.join(dirty, "shingle")
@@ -490,7 +437,7 @@ def minhash_lsh_pairs(
     query."""
     assert k % bands == 0
     r = k // bands
-    sig = _swap_cache(
+    sig = cached_plan(
         "minhash_sig", minhash_signatures(docs, k, n, seed, id_col, text_col, hash_mode)
     )
     if hash_mode == "poly31":
@@ -577,7 +524,7 @@ def dedup_embedding_lsh(
     # this is the materialized LSH *index* table (you'd persist it to the
     # lake and share it across dedup runs, exactly like the minhash sig
     # table); memory cost is N·tables (id, table, sig) longs.
-    sig = _swap_cache(
+    sig = cached_plan(
         "emb_lsh_sig", lsh_signatures(emb_df, dim, k, tables, seed, id_col, emb_col)
     )
     # the PROBE side of the self-join seeds the parallelism of the whole
@@ -720,7 +667,7 @@ def simhash_pairs(
     DuckDB mirror (``simhash_poly`` driver query); xxhash64 remains the
     scale default."""
     layout = simhash_band_layout(simhash_bits(hash_mode), n_bands=max_hamming + 1)
-    fp = _swap_cache("simhash_fp", simhash_fingerprints(docs, id_col, text_col, hash_mode))
+    fp = cached_plan("simhash_fp", simhash_fingerprints(docs, id_col, text_col, hash_mode))
     bands = fp.select(
         id_col,
         "simhash",

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import cached_plan
+
 _M31 = np.int64((1 << 31) - 1)
 _BASE = np.int64(257)
 
@@ -80,7 +82,7 @@ def fingerprint_overlap_pairs(
     # cached: the fingerprint mapInPandas otherwise re-runs for every
     # consumer (hot-filter, size agg, both self-join sides) — same pattern
     # as shingle_jaccard_pairs' shingle table
-    fp = winnow_fingerprints(docs, k, w, id_col, text_col).cache()
+    fp = cached_plan("winnow_fp", winnow_fingerprints(docs, k, w, id_col, text_col))
     if max_doc_freq is not None:
         hot = (
             fp.groupBy("fingerprint").count().filter(F.col("count") > max_doc_freq)
@@ -88,7 +90,7 @@ def fingerprint_overlap_pairs(
         )
         # unhinted: hot-fingerprint count grows with the corpus; AQE
         # broadcasts it when genuinely small
-        fp = fp.join(hot, "fingerprint", "left_anti").cache()
+        fp = cached_plan("winnow_fp_capped", fp.join(hot, "fingerprint", "left_anti"))
     sizes = fp.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = fp.select(F.col(id_col).alias("id_a"), "fingerprint")
     b = fp.select(F.col(id_col).alias("id_b"), "fingerprint")

@@ -237,44 +237,82 @@ def test_registry_rebuilds_when_input_rewritten(spark, tmp_path):
     assert dq.q_rollup_1m(spark, sf).select("user_id").distinct().count() == 10
 
 
-def test_swap_cache_keeps_identical_plan_only(spark):
-    from hdstats_spark.operators.dedup import _swap_cache
+def _cache_loaded(df):
+    """Whether every cache buffer behind ``df``'s plan is filled."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    builders = [
+        leaves.apply(i).cacheBuilder()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "InMemoryRelation"
+    ]
+    return bool(builders) and all(b.isCachedColumnBuffersLoaded() for b in builders)
 
-    base = spark.range(100).withColumn("y", F.col("id") % 10)
-    first = _swap_cache("__test_swap", base)
-    again = _swap_cache("__test_swap", spark.range(100).withColumn("y", F.col("id") % 10))
-    assert again is first  # same plan: warm cache retained
-    other = _swap_cache("__test_swap", spark.range(101).withColumn("y", F.col("id") % 10))
-    assert other is not first  # different plan: swapped as before
+
+def test_cached_plan_holds_one_entry_per_name(spark):
+    from hdstats_spark import materialize
+
+    name = "__test_plan"
+    first = materialize.cached_plan(name, spark.range(100).withColumn("y", F.col("id") % 10))
+    assert first.count() == 100
+    again = materialize.cached_plan(name, spark.range(100).withColumn("y", F.col("id") % 10))
+    assert again is first and _cache_loaded(again)  # same plan: warm blocks kept
+
+    other = materialize.cached_plan(name, spark.range(101).withColumn("y", F.col("id") % 10))
+    assert other is not first and other.is_cached and not first.is_cached
+    assert materialize._entries[spark][("plan", name)][1] is other  # one entry per name
+
+    fresh = spark.newSession()
+    assert ("plan", name) not in materialize._entries.get(fresh, {})
+    mine = materialize.cached_plan(name, fresh.range(101).withColumn("y", F.col("id") % 10))
+    assert mine is not other and other.is_cached  # the first session's entry stays
+    mine.unpersist()
     other.unpersist()
 
 
-class _OpaquePlan:
-    """A cached predecessor whose plan cannot be read: ``_jdf`` raises, as
-    it would if the private PySpark API changed shape."""
+def _write_documents(path, texts):
+    import pandas as pd
 
-    def __init__(self, df):
-        self.sparkSession = df.sparkSession
-        self._df = df
-        self.unpersisted = False
-
-    @property
-    def _jdf(self):
-        raise AttributeError("plan unavailable")
-
-    def unpersist(self):
-        self.unpersisted = True
-        return self._df.unpersist()
+    pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}
+    ).to_parquet(path)
 
 
-def test_swap_cache_falls_back_when_plan_not_comparable(spark):
-    from hdstats_spark.operators import dedup
+def test_dedup_queries_follow_rewritten_documents(spark, tmp_path):
+    """An operator-level cache over a rewritten file is rebuilt: each query
+    equals its DuckDB oracle over the file's current contents."""
+    import duckdb
 
-    key = "__test_swap_opaque"
-    prev = _OpaquePlan(dedup._swap_cache(key, spark.range(10)))
-    dedup._live_caches[key] = prev
-    out = dedup._swap_cache(key, spark.range(7).withColumn("y", F.col("id") * 2))
-    assert prev.unpersisted  # predecessor released, not kept
-    assert out.is_cached and dedup._live_caches[key] is out
-    assert sorted(tuple(r) for r in out.collect()) == [(i, 2 * i) for i in range(7)]
-    out.unpersist()
+    from hdstats_spark import driver_queries as dq
+
+    path = tmp_path / "documents.parquet"
+    sf = str(tmp_path)
+    names = ["ngram_jaccard", "dup_clusters", "winnow_overlap"]
+    a = "the quick brown fox jumps over the lazy dog near the river bank"
+    b = "a stitch in time saves nine said the tailor to the young apprentice"
+    c = "every cloud has a silver lining when the storm finally passes away"
+    d = "red green blue yellow purple orange cyan magenta and plain grey"
+
+    def answers(spark_side):
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        out = {}
+        for name in names:
+            if spark_side:
+                rows = [tuple(r) for r in dq.queries()[name](spark, sf).collect()]
+            else:
+                rows = con.sql(dq.oracles()[name]).fetchall()
+            out[name] = sorted(
+                tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in rows
+            )
+        return out
+
+    _write_documents(path, [a, a + " today", b, b + " again"])
+    assert answers(True) == answers(False)
+    _write_documents(path, [a, c, a, d])  # same path, new contents
+    new = answers(False)
+    assert new["ngram_jaccard"] == [(0, 2, 1.0)]
+    assert answers(True) == new
+    _write_documents(path, [d, b, c, b])  # a second rewrite after warm reuse
+    new = answers(False)
+    assert new["ngram_jaccard"] == [(1, 3, 1.0)]
+    assert answers(True) == new

@@ -3,6 +3,7 @@ on Spark and its oracle_sql() on DuckDB over the same parquet dir, compare
 row count, column set, and order-insensitive values.
 
 Usage: python tools/parity.py [sf_dir] [query ...]
+Env: SPARK_GRAFT_CPUS (default: the CPUs this process may use).
 """
 
 from __future__ import annotations
@@ -46,7 +47,10 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    spark = get_spark(app="parity", cores=8, shuffle_partitions=8, driver_memory="8g")
+    # the CPUs this process may use unless SPARK_GRAFT_CPUS says otherwise,
+    # as in tools/scaling_bench.py
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(app="parity", cores=cpus, driver_memory="8g")
     qs = entrymod.queries()
     if only:
         # explicitly-named queries may come from the bench-only registry
