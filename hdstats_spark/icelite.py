@@ -14,8 +14,17 @@ Layout:
     <root>/metadata/gen-<seq>               (put-if-absent commit CAS)
     <root>/metadata/current                 (hint: id + seq of the head)
 
-The table is one linear commit chain.  Maintenance is
-``compact_partition`` plus ``expire_snapshots``.
+The table is one linear commit chain.  Its surface is what the tier jobs,
+the stream sink and the ``queries()`` rows use:
+
+* writes: ``append`` and ``overwrite_partitions`` (``cluster`` is
+  ``asis``, ``roundrobin`` or ``bypart``), plus the merge-on-read
+  ``upsert`` and ``delete_by_keys``;
+* reads: ``read`` (time travel by snapshot id, manifest-level partition
+  pruning, file-level min/max skipping) and the changelog scan
+  ``changes_between``; ``icelite_source`` puts the current-snapshot read
+  behind ``spark.read.format("icelite")``;
+* maintenance: ``compact_partition`` plus ``expire_snapshots``.
 
 Metadata scales like Iceberg's manifest lists, not like a naive full-map
 log: a DELTA snapshot stores only the partitions its commit touched
@@ -29,7 +38,7 @@ partition→files manifest — callers never see deltas.
 Each snapshot records: parent id, operation, the delta (or full manifest),
 row counts, and a caller-supplied lineage dict (input snapshot-id, partition
 range, rows processed, metrics) — the checkpoint/resume contract of the
-north rule.  Commits are atomic via write-temp + rename of `current`.
+north rule.  A commit is decided by the put-if-absent `gen-<seq>` file.
 """
 
 from __future__ import annotations
@@ -132,11 +141,6 @@ def _apply_delta(base: dict, delta: dict) -> dict:
     returned dict is new, untouched partition entries are shared)."""
     out = dict(base)
     parts = delta["parts"]
-    if delta["mode"] == "reset":
-        # rollback: the resolved manifest becomes EXACTLY this delta's parts
-        # — unlike replace, partitions absent from ``parts`` cease to exist
-        # (they were added after the rollback target)
-        return dict(parts)
     if delta["mode"] == "append":
         for value, m in parts.items():
             if value in out:
@@ -622,20 +626,6 @@ class IceliteTable:
             return None
         return self._resolve(self._load_raw(sid))
 
-    def snapshot_as_of(self, ts: float) -> Snapshot | None:
-        """Time travel by TIMESTAMP (Iceberg's ``FOR SYSTEM_TIME AS OF``):
-        the newest snapshot committed at or before ``ts`` (epoch seconds).
-        Walks the linear chain backward from the head via lineage-only
-        loads — O(commits newer than ts), no manifest resolution until the
-        target is found.  None if the table didn't exist yet at ``ts``."""
-        sid = self.current_snapshot_id()
-        while sid is not None:
-            s = self._load_raw(sid)
-            if s.committed_at <= ts:
-                return self._resolve(s)
-            sid = s.parent_id
-        return None
-
     def snapshots(self) -> list[Snapshot]:
         """All snapshots, oldest first, each with its RESOLVED manifest —
         maintenance/introspection surface (O(#commits); the commit and read
@@ -654,53 +644,6 @@ class IceliteTable:
         for s in out:
             self._resolve(s)
         return out
-
-    # ------------------------------------------------------------- rollback
-
-    def rollback_to(
-        self, snapshot_id: str | None = None, *, as_of: float | None = None
-    ) -> Snapshot:
-        """Roll the table back to an earlier snapshot (Iceberg's
-        ``rollback_to_snapshot`` / ``rollback_to_timestamp``): commits a NEW
-        head whose resolved manifest is exactly the target's — history is
-        PRESERVED (time travel to the pre-rollback head still works until
-        ``expire_snapshots`` ages it out), and the commit goes through the
-        same gen-file CAS as every other writer, so a concurrent append
-        either lands before the rollback (and is rolled back) or conflicts
-        and retries on top of it — never silently lost.
-
-        Matches Iceberg's semantics deliberately:
-
-        * the table SCHEMA stays at the current head's (schema is table
-          metadata, not data lineage); the rollback snapshot's pinned
-          schema NULL-backfills columns the target's files predate.
-        * for incremental append scans / the streaming source, a rollback
-          is a replace-class commit (its delta mode is ``reset``) —
-          ``on_replace='error'`` raises on it, ``'skip'`` passes over it,
-          exactly like overwrite/compaction.
-        * per-file birth seqs (``fseq``) and pending equality deletes are
-          restored verbatim, so merge-on-read masking after a rollback is
-          identical to reading the target directly.
-
-        The target must still be in the retained chain —
-        ``expire_snapshots`` GC makes older states unreachable (their data
-        files are gone), and this raises ``FileNotFoundError`` for them.
-        Rolling back to the current head is an idempotent no-op."""
-        target = (
-            self.snapshot_as_of(as_of) if as_of is not None else self.snapshot(snapshot_id)
-        )
-        if target is None:
-            raise ValueError("rollback target snapshot not found")
-        cur = self.current_snapshot_id()
-        if cur == target.snapshot_id:
-            return target
-        return self._commit_delta(
-            "rollback",
-            "reset",
-            dict(target.partitions),
-            {"rollback_to": target.snapshot_id, "rollback_from": cur},
-            partition_col=target.partition_col,
-        )
 
     # --------------------------------------------------------------- locking
 
@@ -1079,25 +1022,15 @@ class IceliteTable:
 
     def _precheck_schema(self, df: DataFrame, partition_col: str | None, op: str) -> list[dict]:
         """Fail an incompatible write BEFORE the (expensive) Spark file
-        write; the authoritative merge re-runs inside _commit_delta's retry
-        loop against each freshly-read head."""
-        fields = _data_fields(df, partition_col)
-        self._check_partition_spec(partition_col, op)
-        prev = self.snapshot()
-        _evolve_schema(prev.schema if prev else None, fields, op)
-        return fields
+        write; the authoritative schema merge re-runs inside _commit_delta's
+        retry loop against each freshly-read head.
 
-    def _check_partition_spec(self, partition_col: str | None, op: str) -> None:
-        """Partition-SPEC guard: mixing partition columns would merge
+        Also the partition-SPEC guard: mixing partition columns would merge
         incompatible key spaces into one manifest (read(partitions=) and
         partition-predicate routing would silently return wrong subsets).
         Partition evolution needs an explicit full rewrite (overwrite of
-        every partition under the new column).  Factored out of
-        _precheck_schema so the Spark data-source writer faces — which
-        hold a StructType, not a DataFrame — run the same guard before
-        _commit_delta (r6 ADVICE: a df.write.format("icelite") without
-        partition_col into a day-partitioned table used to commit
-        '__all__' beside real keys)."""
+        every partition under the new column)."""
+        fields = _data_fields(df, partition_col)
         prev = self.snapshot()
         if prev is not None:
             prev_unpart = (
@@ -1124,6 +1057,8 @@ class IceliteTable:
                     "partition key spaces — rewrite the table to change "
                     "partitioning"
                 )
+        _evolve_schema(prev.schema if prev else None, fields, op)
+        return fields
 
     def _write_partition_files(
         self, df: DataFrame, partition_col: str | None, cluster: str = "roundrobin"
@@ -1132,8 +1067,6 @@ class IceliteTable:
         the partition manifest {value: {files, rows}}.  Records a timing
         breakdown in ``self.last_write_timings`` (spark write vs driver-side
         footer/manifest work) for the scaling harness."""
-        if cluster == "direct":
-            return self._write_partition_files_direct(df, partition_col)
         t_start = time.time()
         commit_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex[:12]}")
         if partition_col is None:
@@ -1229,94 +1162,6 @@ class IceliteTable:
             "write_s": round(t_written - t_start, 2),
             "manifest_s": round(time.time() - t_written, 2),
             "n_files": len(all_files),
-        }
-        return manifest
-
-    def _write_partition_files_direct(
-        self, df: DataFrame, partition_col: str | None
-    ) -> dict:
-        """``cluster="direct"``: per-TASK Arrow writes straight into final
-        parquet files, from the caller's partitioning (asis semantics, no
-        exchange) — skipping Spark's ``_temporary``+rename file-commit
-        protocol, which the gen-CAS manifest commit makes redundant
-        (nothing is referenced until the manifest lands; an abandoned
-        write's files are invisible orphans GC'd with their commit dir).
-        Measured ~2× faster than the partitionBy path on pure writes
-        (BENCH/storage_faces_r6.json — the data-source writer face uses
-        the same strategy).  Like asis, file count = tasks × their local
-        partition values; stats/row counts come from the same driver-side
-        footer pass."""
-        t_start = time.time()
-        commit_rel = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
-        cdir = os.path.join(self.root, commit_rel)
-        os.makedirs(cdir, exist_ok=True)
-        root = self.root
-        pcol = partition_col
-
-        def write_tasks(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            blist = list(batches)
-            if not blist:
-                return
-            tbl = pa.Table.from_batches(blist)
-            out_v, out_p, out_r = [], [], []
-
-            def dump(value, part_tbl):
-                if part_tbl.num_rows == 0:
-                    return
-                name = f"part-{uuid.uuid4().hex[:16]}.parquet"
-                pq.write_table(part_tbl, os.path.join(root, commit_rel, name))
-                out_v.append(value)
-                out_p.append(os.path.join(commit_rel, name))
-                out_r.append(part_tbl.num_rows)
-
-            if pcol is None:
-                dump("__all__", tbl)
-            else:
-                keys = pc.cast(tbl.column(pcol), pa.string())
-                data = tbl.drop_columns([pcol])
-                for value in pc.unique(keys).to_pylist():
-                    if value is None:
-                        raise ValueError(f"NULL {pcol} partition value")
-                    dump(value, data.filter(pc.equal(keys, value)))
-            yield pa.record_batch(
-                [pa.array(out_v), pa.array(out_p), pa.array(out_r, pa.int64())],
-                names=["value", "path", "rows"],
-            )
-
-        entries = df.mapInArrow(
-            write_tasks, "value string, path string, rows long"
-        ).collect()  # O(#files) tiny rows
-        t_written = time.time()
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        scols_box: list[list[str] | None] = [None]
-        scols_lock = threading.Lock()
-
-        def footer(rel):
-            pf = pq.ParquetFile(os.path.join(self.root, rel))
-            with scols_lock:
-                if scols_box[0] is None:
-                    scols_box[0] = self._resolve_stats_cols(pf)
-            return _file_stats(pf, scols_box[0], self.STATS_MAX_STR)
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            stats = dict(zip([e.path for e in entries], ex.map(footer, [e.path for e in entries])))
-        manifest: dict = {}
-        for e in sorted(entries, key=lambda e: (e.value, e.path)):
-            m = manifest.setdefault(e.value, {"files": [], "rows": 0, "stats": []})
-            m["files"].append(e.path)
-            m["rows"] += int(e.rows)
-            m["stats"].append(stats[e.path])
-        self.last_write_timings = {
-            "write_s": round(t_written - t_start, 2),
-            "manifest_s": round(time.time() - t_written, 2),
-            "n_files": len(entries),
         }
         return manifest
 
@@ -1416,14 +1261,14 @@ class IceliteTable:
         the batch's own rows — born at this commit's seq — survive.
 
         Why this shape at 100 TB: commit cost is O(batch) — no existing
-        file is read, rewritten, or even listed, versus copy-on-write
-        (``delete_where`` + ``append``) which rewrites every file that
-        contains an updated key.  Readers pay one BROADCAST left-anti join
-        per pending key-column set (key files are tiny next to data; no
-        shuffle of the data side); ``compact_partition`` materializes the
-        backlog and restores the zero-join fast path — schedule it off
-        ``pending_deletes()``.  Replaying a batch is idempotent: the replay's
-        delete masks the original copy and the re-appended rows take over.
+        file is read, rewritten, or even listed, versus copy-on-write,
+        which rewrites every file that contains an updated key.  Readers
+        pay one BROADCAST left-anti join per pending key-column set (key
+        files are tiny next to data; no shuffle of the data side);
+        ``compact_partition`` materializes the backlog and restores the
+        zero-join fast path — schedule it off ``pending_deletes()``.
+        Replaying a batch is idempotent: the replay's delete masks the
+        original copy and the re-appended rows take over.
 
         Scope: deletes are PARTITION-SCOPED (exactly Iceberg's
         partition-scoped delete files) — a key that MOVES partitions between
@@ -1474,9 +1319,8 @@ class IceliteTable:
     ) -> Snapshot | None:
         """Row-level DELETE by key, MERGE-ON-READ: commits only equality-
         delete key files — O(keys) metadata + key bytes, zero data-file
-        I/O — where ``delete_where`` (copy-on-write) rewrites every file
-        containing a match.  The right tool when the match set is a key
-        list (purge these conv_ids / documents) rather than a predicate.
+        I/O — where copy-on-write would rewrite every file containing a
+        match (purge these conv_ids / documents).
 
         If ``keys_df`` carries the table's partition column the deletes are
         scoped to those partitions; otherwise ONE shared key file is
@@ -1492,8 +1336,8 @@ class IceliteTable:
         keys_in_file = [k for k in key_cols if k != pcol]
         if not keys_in_file:
             raise ValueError(
-                "key_cols must include a non-partition column — to drop "
-                "whole partitions use delete_where on the partition column"
+                "key_cols must include a non-partition column — to replace "
+                "whole partitions use overwrite_partitions"
             )
         scoped = pcol is not None and pcol in keys_df.columns
         kman = self._write_delete_key_files(
@@ -1566,7 +1410,6 @@ class IceliteTable:
         snapshot_id: str | None = None,
         partitions: list[str] | None = None,
         where: dict | None = None,
-        as_of: float | None = None,
     ) -> DataFrame:
         """Read a snapshot (default: current), optionally pruned to given
         partition values — manifest-level partition pruning, so Spark never
@@ -1585,24 +1428,12 @@ class IceliteTable:
         ``self.last_scan`` records (files_considered, files_read) for plan
         assertions and the bench harness."""
         had_where = bool(where)
-        snap, classes, dentries, where = self._plan_scan(
-            snapshot_id, partitions, where, as_of
-        )
+        snap, classes, dentries, where = self._plan_scan(snapshot_id, partitions, where)
         if not classes:
             if had_where:
                 # every file provably excluded: an empty scan with the
-                # TARGET SCHEMA (read one pruned file's footer schema via
-                # Spark would defeat the point; empty relation from any
-                # file with a LIMIT 0 keeps the schema without row I/O)
-                probe = next(
-                    (m["files"][0] for m in snap.partitions.values() if m["files"]),
-                    None,
-                )
-                if probe is None:
-                    raise ValueError("no data files in snapshot")
-                probe = probe if os.path.isabs(probe) else os.path.join(self.root, probe)
-                empty = self._reader(spark, snap).parquet(probe).limit(0)
-                return self._apply_where(empty, where)
+                # TARGET SCHEMA
+                return self._apply_where(self._empty(spark, snap), where)
             raise ValueError("no files match the partition filter")
         df = self._union_delete_classes(spark, snap, classes, dentries)
         return self._apply_where(df, where) if where else df
@@ -1612,7 +1443,6 @@ class IceliteTable:
         snapshot_id: str | None = None,
         partitions: list[str] | None = None,
         where: dict | None = None,
-        as_of: float | None = None,
     ) -> tuple[Snapshot, dict, dict, dict | None]:
         """Scan planning shared by ``read`` and the Spark data source
         (icelite_source): resolve the target snapshot, apply manifest-level
@@ -1623,14 +1453,9 @@ class IceliteTable:
         row-level filter the caller must still apply (``where`` minus the
         partition-column predicate, which partition pruning satisfied
         exactly).  Sets ``self.last_scan``."""
-        if as_of is not None and snapshot_id is not None:
-            raise ValueError("pass snapshot_id OR as_of, not both")
-        snap = self.snapshot_as_of(as_of) if as_of is not None else self.snapshot(snapshot_id)
+        snap = self.snapshot(snapshot_id)
         if snap is None:
-            raise FileNotFoundError(
-                f"no snapshot in {self.root}"
-                + (f" as of {as_of}" if as_of is not None else "")
-            )
+            raise FileNotFoundError(f"no snapshot in {self.root}")
         preds = None
         if where and snap.partition_col is not None and snap.partition_col in where:
             # the partition column lives in manifest KEYS, not data files:
@@ -1844,6 +1669,16 @@ class IceliteTable:
             frames.append(dfc)
         return reduce(DataFrame.unionByName, frames)
 
+    def _empty(self, spark: SparkSession, snap: Snapshot) -> DataFrame:
+        """A zero-row frame under ``snap``'s pinned schema: a LIMIT 0 scan of
+        one of its files keeps the schema without row I/O."""
+        probe = next(
+            (m["files"][0] for m in snap.partitions.values() if m["files"]), None
+        )
+        if probe is None:
+            raise ValueError("no data files in snapshot")
+        return self._reader(spark, snap).parquet(self._abs(probe)).limit(0)
+
     @staticmethod
     def _reader(spark: SparkSession, snap: Snapshot):
         """Parquet reader pinned to the snapshot's VERSIONED schema: files
@@ -1929,125 +1764,6 @@ class IceliteTable:
         snap = self.snapshot(snapshot_id)
         return sum(m["rows"] for m in snap.partitions.values()) if snap else 0
 
-    # ------------------------------------------------- incremental scans
-
-    def appended_between(
-        self,
-        start_seq: int,
-        end_snapshot_id: str | None = None,
-        on_replace: str = "error",
-    ) -> tuple["Snapshot | None", list[dict]]:
-        """Plan an INCREMENTAL APPEND SCAN (Iceberg's
-        ``incremental-from-snapshot`` / streaming-read semantics): the data
-        files added by append commits with ``start_seq < seq <=
-        end.seq``, oldest commit first.  Walks the snapshot chain backward
-        via raw metadata loads — O(commits in range) tiny JSON reads, no
-        manifest resolution, no file I/O — which is what makes a streaming
-        poll against a 10^5-commit table cheap.
-
-        ``on_replace``: a replace commit (overwrite/compact/delete_where/
-        schema rewrite) inside the range cannot be represented as appended
-        rows — ``"error"`` (default) raises, ``"skip"`` ignores it (safe
-        for content-preserving compaction; an overwrite's NEW files are
-        silently missed — the caller opted in, exactly Iceberg's
-        ``streaming-skip-overwrite-snapshots``).  Equality-delete commits
-        (mode append, empty file list) contribute no files: append scans
-        never retract — the standard changelog-free contract.
-
-        Returns ``(end_snapshot_raw, adds)`` where each add is
-        ``{"partition", "file", "seq"}``.  Raises if the chain below the
-        end snapshot was truncated by ``expire_snapshots`` before reaching
-        ``start_seq`` (the offset is gone — same failure Iceberg streams
-        surface when a start snapshot expires)."""
-        if on_replace not in ("error", "skip"):
-            raise ValueError("on_replace must be 'error' or 'skip'")
-        sid = end_snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            return None, []
-        end = self._load_raw(sid)
-        adds: list[dict] = []
-        s = end
-        while s.seq > start_seq:
-            d = s.delta
-            if d is None:
-                # pre-delta legacy checkpoint: files can't be attributed to
-                # individual commits below this point
-                raise ValueError(
-                    f"snapshot {s.snapshot_id} (seq {s.seq}) predates delta "
-                    "metadata; incremental scan cannot cross it"
-                )
-            if d["mode"] != "append":
-                if on_replace == "error":
-                    raise ValueError(
-                        f"snapshot {s.snapshot_id} (op={s.operation!r}, seq "
-                        f"{s.seq}) replaced data files; an incremental append "
-                        "scan cannot represent it — pass on_replace='skip' to "
-                        "ignore replace commits (content-preserving for "
-                        "compaction; an overwrite's new rows are missed)"
-                    )
-            else:
-                for value, m in d["parts"].items():
-                    for f in m["files"]:
-                        adds.append({"partition": value, "file": f, "seq": s.seq})
-            if s.seq - 1 <= start_seq or s.parent_id is None:
-                break
-            try:
-                s = self._load_raw(s.parent_id)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"incremental start seq {start_seq} has expired: the "
-                    f"chain below seq {s.seq} was garbage-collected by "
-                    "expire_snapshots"
-                ) from None
-        adds.reverse()  # walk collected newest-first; emit oldest commit first
-        return end, adds
-
-    def read_incremental(
-        self,
-        spark: SparkSession,
-        from_snapshot_id: str | None = None,
-        to_snapshot_id: str | None = None,
-        on_replace: str = "error",
-    ) -> DataFrame:
-        """Rows APPENDED strictly after ``from_snapshot_id`` up to and
-        including ``to_snapshot_id`` (default: current head) — the batch
-        face of the incremental append scan (CDC-style "what's new since
-        the snapshot I processed last").  ``from_snapshot_id=None`` reads
-        everything since the table's creation.  The scan is pinned to the
-        END snapshot's schema (old files NULL-backfill evolved columns,
-        exactly like a full read of that snapshot).  See
-        ``appended_between`` for ``on_replace`` and expiry semantics."""
-        start_seq = 0
-        if from_snapshot_id is not None:
-            start_seq = self._load_raw(from_snapshot_id).seq
-        end, adds = self.appended_between(start_seq, to_snapshot_id, on_replace)
-        if end is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        files = [
-            f if os.path.isabs(f) else os.path.join(self.root, f)
-            for f in (a["file"] for a in adds)
-        ]
-        if files:
-            return self._reader(spark, end).parquet(*files)
-        if end.schema is not None:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(end.schema))
-        # empty range on a pre-evolution table: borrow any data file's
-        # schema via a LIMIT 0 scan (no row I/O)
-        probe = next(
-            (
-                m["files"][0]
-                for m in self._resolve(end).partitions.values()
-                if m["files"]
-            ),
-            None,
-        )
-        if probe is None:
-            raise ValueError("empty incremental range on a table with no data files")
-        probe = probe if os.path.isabs(probe) else os.path.join(self.root, probe)
-        return spark.read.parquet(probe).limit(0)
-
     # ----------------------------------------------------------------- CDC
 
     CDC_COLS = ("_change_type", "_partition", "_commit_seq", "_commit_snapshot_id",
@@ -2055,9 +1771,9 @@ class IceliteTable:
 
     def _commits_between(self, start_seq: int, end: Snapshot) -> list[Snapshot]:
         """Raw snapshots with ``start_seq < seq <= end.seq``, oldest first —
-        the chain walk shared by the changelog faces (O(commits) tiny JSON
-        reads, no manifest resolution).  Raises when the range crosses
-        pre-delta metadata or an expired (GC'd) chain segment."""
+        the changelog's chain walk (O(commits) tiny JSON reads, no manifest
+        resolution).  Raises when the range crosses pre-delta metadata or
+        an expired (GC'd) chain segment."""
         chain: list[Snapshot] = []
         s = end
         while s.seq > start_seq:
@@ -2100,7 +1816,7 @@ class IceliteTable:
 
         from pyspark.sql import functions as F
 
-        snap, classes, dentries, _ = self._plan_scan(snapshot_id, partitions, None, None)
+        snap, classes, dentries, _ = self._plan_scan(snapshot_id, partitions)
         if not classes:
             return None
         fmap: dict[str, str] = {}
@@ -2223,14 +1939,12 @@ class IceliteTable:
         * **compact** (incl. Z-order clustering) — content-preserving by
           its own commit-time conflict checks: emits nothing, costs
           nothing.
-        * **overwrite / copy-on-write delete / rollback** — the honest
-          case: a logical EXCEPT ALL diff of child vs parent, restricted to
-          the partitions the commit touched (rollback: partitions whose
-          manifest entries differ).  This is the same work Iceberg's
-          changelog scan does for overwrite snapshots.
+        * **overwrite** — the honest case: a logical EXCEPT ALL diff of
+          child vs parent, restricted to the partitions the commit touched.
+          This is the same work Iceberg's changelog scan does for overwrite
+          snapshots.
 
-        Raises like ``appended_between`` when the range crosses an expired
-        (GC'd) chain segment."""
+        Raises when the range crosses an expired (GC'd) chain segment."""
         from functools import reduce
 
         from pyspark.sql import functions as F
@@ -2420,15 +2134,9 @@ class IceliteTable:
                 continue
             if snap.operation == "compact":
                 continue  # content-preserving replace: no logical change
-            # overwrite / CoW delete / rollback: per-partition logical diff
+            # overwrite: per-partition logical diff
             cur = self._resolve(snap).partitions
-            if d["mode"] == "reset":
-                touched = {
-                    v for v in set(cur) | set(pparts) if cur.get(v) != pparts.get(v)
-                }
-            else:
-                touched = set(d["parts"])
-            for value in sorted(touched):
+            for value in sorted(d["parts"]):
                 def side(parts, sid):
                     # no data files -> no live rows (delete entries alone
                     # mask nothing)
@@ -2446,8 +2154,7 @@ class IceliteTable:
                     dels = old_side if new_side is None else old_side.exceptAll(new_side)
                     frames.append(stamp(dels, "delete", value, snap))
         if not frames:
-            base = self.read_incremental(spark, to_snapshot_id=end_sid).limit(0)
-            return stamp(base, "insert", "", end).limit(0)
+            return stamp(self._empty(spark, self._resolve(end)), "insert", "", end)
         return reduce(DataFrame.unionByName, frames)
 
     # ------------------------------------------------------- maintenance
@@ -2553,194 +2260,6 @@ class IceliteTable:
             # were never referenced by any snapshot — GC them, don't orphan
             shutil.rmtree(commit_dir, ignore_errors=True)
             raise
-
-    def delete_where(
-        self,
-        spark: SparkSession,
-        where: dict,
-        lineage: dict | None = None,
-        retries: int = 3,
-    ) -> Snapshot | None:
-        """Row-level DELETE, copy-on-write at FILE granularity — the icelite
-        analogue of Iceberg's copy-on-write ``DELETE FROM ... WHERE`` (the
-        training-data use case: purge contaminated/flagged documents or a
-        user's conversations from a 100-TB table without a table rewrite).
-
-        ``where`` is the read() predicate grammar; matching rows (predicate
-        TRUE — NULL keeps the row, SQL DELETE semantics) are removed.  The
-        fmt-2 file statistics bound the work: a partition-column predicate
-        restricts which partitions are touched at all, and within each
-        partition only files whose min/max COULD contain a match are read
-        and rewritten — provably-clean files are carried into the new
-        snapshot untouched (no I/O).  Old snapshots still see the deleted
-        rows (time travel intact) until expire_snapshots GCs the rewritten
-        files.
-
-        Commits through the same optimistic CAS as every other writer; if a
-        concurrent commit touches an affected partition between planning
-        and commit, the rewrite is abandoned (files GC'd) and re-planned,
-        up to ``retries`` times.  Returns the new snapshot, or None when no
-        file could contain a match (metadata-only no-op, nothing
-        committed)."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        from pyspark.sql import functions as F
-
-        for _ in range(max(1, retries)):
-            snap = self.snapshot()
-            if snap is None:
-                return None
-            where_eff = dict(where)
-            part_values = list(snap.partitions)
-            if snap.partition_col is not None and snap.partition_col in where_eff:
-                op, *args = where_eff.pop(snap.partition_col)
-                pargs = (args[0],) if op == "in" else tuple(args)
-                if not all(
-                    isinstance(a, str) for a in (pargs[0] if op == "in" else pargs)
-                ):
-                    raise ValueError(
-                        f"partition-column predicate on {snap.partition_col!r} "
-                        "must use string values (manifest keys are strings)"
-                    )
-                part_values = [
-                    v for v in part_values if not _ranges_disjoint(v, v, op, pargs)
-                ]
-            preds = self._normalize_preds(where_eff) if where_eff else {}
-            # plan: per partition, split files into rewrite candidates
-            # (stats can't exclude a match) and carried-through survivors.
-            # Pending equality deletes ride along: rewritten files apply
-            # them (rows born clean at the new seq), kept files keep their
-            # original fseq so the preserved delete entries still mask them.
-            plan = {}
-            for value in part_values:
-                m = snap.partitions[value]
-                stats = m.get("stats") or [None] * len(m["files"])
-                fseqs = m.get("fseq") or [0] * len(m["files"])
-                hit, kept = [], []
-                for f, fst, fs in zip(m["files"], stats, fseqs):
-                    if preds and fst and self._file_pruned(fst, preds):
-                        kept.append((f, fst, fs))
-                    else:
-                        hit.append((f, fs))
-                if hit:
-                    plan[value] = (m, hit, kept)
-            if not plan:
-                return None  # nothing can match anywhere — metadata no-op
-
-            conj = None
-            for col, spec in where_eff.items():
-                op, *args = spec
-                c = F.col(col)
-                term = {
-                    "=": lambda: c == args[0],
-                    "<": lambda: c < args[0],
-                    "<=": lambda: c <= args[0],
-                    ">": lambda: c > args[0],
-                    ">=": lambda: c >= args[0],
-                    "between": lambda: c.between(args[0], args[1]),
-                    "in": lambda: c.isin(list(args[0])),
-                }[op]()
-                conj = term if conj is None else (conj & term)
-            # SQL DELETE: remove rows where the predicate is TRUE; NULL keeps
-            keep_pred = (
-                ~F.coalesce(conj, F.lit(False)) if conj is not None else F.lit(False)
-            )
-
-            commit_dir = os.path.join(self.data_dir, f"delete-{uuid.uuid4().hex[:12]}")
-            parts: dict = {}
-            try:
-                for value, (m, hit, kept) in plan.items():
-                    dels = m.get("deletes") or []
-                    classes: dict[tuple, list[str]] = {}
-                    for f, fs in hit:
-                        key = tuple(d["file"] for d in dels if d["seq"] > fs)
-                        classes.setdefault(key, []).append(
-                            f if os.path.isabs(f) else os.path.join(self.root, f)
-                        )
-                    src = self._union_delete_classes(
-                        spark, snap, classes, {d["file"]: d for d in dels}
-                    )
-                    out_dir = os.path.join(commit_dir, f"p-{uuid.uuid4().hex[:8]}")
-                    (
-                        src.filter(keep_pred)
-                        .write.mode("overwrite")
-                        .parquet(out_dir)
-                    )
-                    new_files = [
-                        (p, pf)
-                        for p in (
-                            os.path.join(out_dir, n)
-                            for n in os.listdir(out_dir)
-                            if n.endswith(".parquet")
-                        )
-                        for pf in [pq.ParquetFile(p)]
-                        if pf.metadata.num_rows  # drop empty writer shards
-                    ]
-                    scols = (
-                        self._resolve_stats_cols(new_files[0][1]) if new_files else []
-                    )
-                    files = [f for f, _, _ in kept]
-                    stats = [s for _, s, _ in kept]
-                    fseq: list = [fs for _, _, fs in kept]
-                    # surviving rows = carried files' rows + rewritten rows
-                    kept_rows = 0
-                    if kept:
-                        kpaths = [
-                            f if os.path.isabs(f) else os.path.join(self.root, f)
-                            for f, _, _ in kept
-                        ]
-                        kept_rows = sum(
-                            pq.ParquetFile(p).metadata.num_rows for p in kpaths
-                        )
-                    new_rows = sum(pf.metadata.num_rows for _, pf in new_files)
-                    for p, pf in new_files:
-                        files.append(os.path.relpath(p, self.root))
-                        stats.append(_file_stats(pf, scols, self.STATS_MAX_STR))
-                        fseq.append(None)  # born at the commit seq (stamped)
-                    parts[value] = {
-                        "files": files,
-                        "rows": int(kept_rows + new_rows),
-                        "stats": stats,
-                    }
-                    if dels or any(fs for fs in fseq[: len(kept)]):
-                        # preserve MOR state: pending deletes still mask the
-                        # carried files (original fseq); rewritten files are
-                        # born at this commit's seq, past every pending
-                        # delete — their rows already had the deletes applied
-                        parts[value]["fseq"] = fseq
-                        if dels:
-                            parts[value]["deletes"] = dels
-                for attempt in range(20):
-                    prev = self.snapshot()
-                    if any(
-                        prev.partitions.get(v) != plan[v][0] for v in plan
-                    ):
-                        raise CommitConflict("concurrent write to affected partition")
-                    try:
-                        return self._commit(
-                            self._next_snapshot(
-                                prev,
-                                "delete",
-                                "replace",
-                                parts,
-                                lineage or {"delete_where": {k: list(map(str, v)) for k, v in where.items()}},
-                            ),
-                            expected_parent=prev.snapshot_id,
-                        )
-                    except CommitConflict as e:
-                        if "affected partition" in str(e):
-                            raise
-                        continue
-                raise CommitConflict("delete lost 20 consecutive commit races")
-            except CommitConflict:
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                continue  # re-plan against the new head
-            except Exception:
-                shutil.rmtree(commit_dir, ignore_errors=True)
-                raise
-        raise CommitConflict(f"delete_where lost {retries} planning rounds")
 
     def expire_snapshots(
         self, keep_last: int = 1, older_than_s: float | None = None

@@ -14,10 +14,12 @@ each one ONCE per live session and hands back the same DataFrame.
   checks that: each entry records the size and ``mtime_ns`` of every file
   under its input paths, and a lookup that finds them changed unpersists
   the entry and rebuilds it over a fresh reader.  The CacheManager matches
-  plans by path, so a stale entry left cached would keep serving the old
-  files' rows; the same lookup therefore also refreshes the changed paths
-  (``spark.catalog.refreshByPath``), which drops the blocks of every cached
-  plan over them, whoever cached it.
+  plans by path and is shared by every session of one SparkContext, so a
+  stale plan left cached would keep serving the old files' rows to any
+  session.  The registry therefore also keeps one process-wide last-seen
+  fingerprint per path, and a lookup in ANY session that finds it changed
+  refreshes the path (``spark.catalog.refreshByPath``), which drops the
+  blocks of every cached plan over it, whoever cached it.
 * Operators that cache their own intermediate (the dedup shingle,
   signature and fingerprint tables, the decontamination dirty set, the
   winnowing fingerprints) hold ONE entry per name, ``("plan", name)``,
@@ -40,6 +42,8 @@ from typing import Callable, Hashable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 _entries: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+# path -> the fingerprint the last lookup of it saw, in any session
+_seen: dict[str, tuple] = {}
 # re-entrant: a build looks up the intermediates it reads from
 _lock = threading.RLock()
 
@@ -66,8 +70,16 @@ def _lookup(
 ) -> DataFrame:
     """The entry under ``key``, rebuilt unless its files are unchanged and,
     when ``same`` is given, ``same(entry)`` holds."""
-    fp = _fingerprint(paths)
+    fps = {path: _fingerprint([path]) for path in paths}
+    fp = tuple(fps.values())
     with _lock:
+        for path, pfp in fps.items():
+            if _seen.get(path, pfp) != pfp:
+                # drop the blocks of every plan cached over these files —
+                # another session's entry, a cached_plan entry, a plan built
+                # on an entry: the CacheManager matches them all by path
+                spark.catalog.refreshByPath(path)
+            _seen[path] = pfp
         per_session = _entries.get(spark)
         if per_session is None:
             per_session = _entries[spark] = {}
@@ -75,12 +87,6 @@ def _lookup(
         if hit is not None:
             if hit[0] == fp and (same is None or same(hit[1])):
                 return hit[1]
-            if hit[0] != fp:
-                # drop the blocks of every other plan cached over these
-                # files as well (a cached_plan entry, a plan built on this
-                # entry): the CacheManager matches them by path too
-                for path in paths:
-                    spark.catalog.refreshByPath(path)
             if hit[1].is_cached:
                 # unpersist BEFORE rebuilding: the rebuilt plan canonicalizes
                 # to the stale one, so caching first would re-find the old

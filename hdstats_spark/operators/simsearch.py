@@ -14,9 +14,9 @@
     batch, queries probe the nprobe nearest lists via an equi-join on
     centroid id, exact cosine re-rank of list members only.
 
-Hyperplanes/centroids are seeded and broadcast; signatures/assignments are
-computed with one GEMM per Arrow batch, so every pass is BLAS +
-bit-twiddling.
+Hyperplanes are seeded and shipped in the task closure, centroids are
+broadcast; signatures/assignments are computed with one GEMM per Arrow
+batch, so every pass is BLAS + bit-twiddling.
 """
 
 from __future__ import annotations
@@ -115,12 +115,12 @@ def lsh_signatures(
     flip sign between key and recompute — carrying the computed signatures
     makes key and agreement set bit-identical by construction."""
     keep = list(keep_cols or [])
-    planes = _planes(dim, k, tables, seed)
-    b = emb_df.sparkSession.sparkContext.broadcast(planes)
+    # seeded and small (tables × dim × k doubles): shipped in the closure,
+    # so two calls with the same arguments build sameSemantics-equal plans
+    P = _planes(dim, k, tables, seed)
     shifts = np.arange(k, dtype=np.uint64)
 
     def gen(batches):
-        P = b.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -32,46 +32,18 @@ def _day(col):
 
 
 class TierPipeline:
-    """plan="copart": hash-repartition raw on conv_id ONCE, then every tier
-    aggregate and every tier write runs exchange-free —
-    HashPartitioning(conv_id) satisfies ClusteredDistribution(conv_id,
-    bucket) for all three groupBys, and the writer takes the rows as-is.
-    One full-input shuffle total, instead of per-tier agg exchanges plus a
-    tier-size round-robin re-shuffle before each write.  plan="classic"
-    keeps the per-tier exchanges.
+    """Hash-repartition raw on conv_id ONCE, then every tier aggregate and
+    every tier write runs exchange-free — HashPartitioning(conv_id)
+    satisfies ClusteredDistribution(conv_id, bucket) for all three
+    groupBys, and the writer takes the rows as-is.  One full-input shuffle
+    total, instead of per-tier agg exchanges plus a tier-size round-robin
+    re-shuffle before each write (BENCH/BASELINE.md, 129.9M turns, rollup
+    phase: 2→8-core efficiency 0.84-0.91 against 0.78 for the per-tier
+    plan)."""
 
-    plan="auto" (default) picks by deployment shape, from the measured
-    scaling matrix (BENCH/BASELINE.md, 129.9M turns, rollup phase):
-
-    * copart wins wherever per-task memory bandwidth is not the ceiling —
-      ≤8 cores on one box (2→8 efficiency 0.84-0.91 vs classic's 0.78) and
-      any real multi-node cluster, where each executor brings its own DRAM
-      and the avoided exchanges are NETWORK traffic (the expensive resource).
-    * classic wins only in the corner of MANY cores on ONE box (32 threads
-      sharing a single socket's DRAM: the single wide shuffle saturates
-      bandwidth while classic's extra-but-smaller exchanges overlap better) —
-      measured ~15% faster at local[32] on this box.
-
-    The heuristic therefore selects classic only for local[N>16] masters;
-    everything else (small local runs, yarn/k8s/standalone clusters) gets
-    copart."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        raw_root: str | None = None,
-        plan: str = "auto",
-    ):
+    def __init__(self, spark: SparkSession, root: str, raw_root: str | None = None):
         self.spark = spark
         self.root = root
-        if plan == "auto":
-            master = spark.sparkContext.master or ""
-            single_box_many_cores = (
-                master.startswith("local") and spark.sparkContext.defaultParallelism > 16
-            )
-            plan = "classic" if single_box_many_cores else "copart"
-        self.plan = plan
         self.tables = {
             name: IceliteTable(os.path.join(root, f"tier_{name}"))
             for name in ("raw", "1m", "1h", "1d")
@@ -154,25 +126,11 @@ class TierPipeline:
             else:
                 src = src_tbl.read(self.spark, partitions=sorted(todo))
             if tier == "1m":
-                if self.plan == "copart":
-                    n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-                    src = src.repartition(n, "conv_id")
-                out = rollup_raw(src, "1m")
+                n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                out = rollup_raw(src.repartition(n, "conv_id"), "1m")
             else:
                 out = rollup_cascade(src.drop("day"), tier)
             out = out.withColumn("day", _day("bucket")).persist()
-            if self.plan == "copart":
-                # rows arrive clustered on conv_id with full parallelism:
-                # write as-is (zero extra exchanges anywhere in the cascade).
-                # cluster="direct" (same layout minus Spark's commit
-                # protocol) A/B-measured a WASH here — the rollup phase is
-                # compute/DRAM-bound, so the protocol it skips is noise
-                # (local[8] copart, 129.9M turns: 68.0 vs 70.2 s best-of-2);
-                # asis stays, matching the recorded scaling numbers
-                cluster = "asis"
-            else:
-                # big tier (1m) → parallel writers; small cascades → 1 file/day
-                cluster = "roundrobin" if tier == "1m" else "bypart"
             snap = tbl.overwrite_partitions(
                 out,
                 "day",
@@ -181,7 +139,9 @@ class TierPipeline:
                     "parent_snapshot": src_tbl.current_snapshot_id(),
                     "partitions": sorted(todo),
                 },
-                cluster=cluster,
+                # rows arrive clustered on conv_id with full parallelism:
+                # write as-is (zero extra exchanges anywhere in the cascade)
+                cluster="asis",
             )
             computed[tier] = out
             computed_days[tier] = set(todo)

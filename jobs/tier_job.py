@@ -31,11 +31,6 @@ def main():
     ap.add_argument("--report", default="")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument(
-        "--plan", default="auto", choices=["auto", "copart", "classic"],
-        help="tier cascade physical plan; auto picks copart except on "
-        "single-box local[N>16] masters (see TierPipeline docstring)",
-    )
-    ap.add_argument(
         "--with-composite", action="store_true",
         help="also materialize the geomedian+MAD composite tier from the 1m tier",
     )
@@ -61,7 +56,7 @@ def main():
     reroll = {d for d in args.reroll_days.split(",") if d}
     for i in range(max(args.repeat, 1)):
         root = args.root if args.repeat <= 1 else f"{args.root}_i{i}"
-        pipe = TierPipeline(spark, root, raw_root=args.raw_root or None, plan=args.plan)
+        pipe = TierPipeline(spark, root, raw_root=args.raw_root or None)
         t0 = time.time()
         metrics = pipe.run(
             transcripts,

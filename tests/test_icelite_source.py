@@ -1,12 +1,7 @@
 """icelite as a native Spark data source (icelite_source.py): batch reads
 must equal IceliteTable.read byte-for-byte (incl. pending merge-on-read
-deletes and schema evolution), pushed Catalyst filters must SKIP files
-without changing results, and the streaming source must deliver each
-append commit exactly once across checkpointed restarts — the
-snapshot-seq offset contract.  read_incremental is the batch face of the
-same incremental append scan."""
-
-import os
+deletes and schema evolution), and pushed Catalyst filters must SKIP files
+without changing results."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,7 +68,7 @@ def test_pushed_filters_skip_files_and_stay_exact(reg, tmp_path):
     # after pushFilters must carry strictly fewer file slices
     from pyspark.sql.datasource import LessThan
 
-    r = IceliteBatchReader(t.root, {}, ds.schema)
+    r = IceliteBatchReader(t.root, ds.schema)
     list(r.pushFilters([LessThan(("event_id",), 100)]))
     pruned = [p for p in r.partitions() if p.path is not None]
     assert 0 < len(pruned) < total_files
@@ -87,9 +82,9 @@ def test_prune_everything_yields_empty_with_schema(reg, tmp_path):
     assert [f.name for f in ds.schema.fields] == ["event_id", "value"]
 
 
-def test_schema_evolution_and_snapshot_time_travel(reg, tmp_path):
+def test_schema_evolution_null_backfills(reg, tmp_path):
     t = IceliteTable(str(tmp_path / "t"))
-    s1 = t.append(_batch(reg, 0, 50), partition_col="pt", cluster="bypart")
+    t.append(_batch(reg, 0, 50), partition_col="pt", cluster="bypart")
     t.append(
         _batch(reg, 50, 60).withColumn("lang", F.lit("en")),
         partition_col="pt",
@@ -100,294 +95,6 @@ def test_schema_evolution_and_snapshot_time_travel(reg, tmp_path):
     # old files NULL-backfill the evolved column
     assert cur.filter(F.col("lang").isNull()).count() == 50
     assert cur.filter(F.col("lang") == "en").count() == 10
-    # time travel by snapshot id reads under the OLD schema
-    old = (
-        reg.read.format("icelite")
-        .option("snapshot_id", s1.snapshot_id)
-        .load(t.root)
-    )
-    assert "lang" not in old.columns
-    assert old.count() == 50
-
-
-def test_partitions_option_prunes_manifest(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 300), partition_col="pt", cluster="bypart")
-    one = (
-        reg.read.format("icelite")
-        .option("partitions", '["d0"]')
-        .load(t.root)
-    )
-    assert one.count() == t.read(reg, partitions=["d0"]).count() > 0
-
-
-def test_read_incremental_appends_only(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    s1 = t.append(_batch(reg, 0, 100), partition_col="pt", cluster="bypart")
-    t.append(_batch(reg, 100, 150, v=2.0), partition_col="pt", cluster="bypart")
-    inc = t.read_incremental(reg, from_snapshot_id=s1.snapshot_id)
-    assert sorted(r.event_id for r in inc.collect()) == list(range(100, 150))
-    # full-history incremental == full read (append-only table)
-    assert _rows(t.read_incremental(reg)) == _rows(t.read(reg))
-    # empty range → empty frame with the table schema
-    head = t.snapshot().snapshot_id
-    empty = t.read_incremental(reg, from_snapshot_id=head)
-    assert empty.count() == 0 and empty.columns == ["event_id", "value"]
-
-
-def test_read_incremental_replace_guard(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    s1 = t.append(_batch(reg, 0, 120), partition_col="pt", cluster="bypart")
-    t.compact_partition(reg, "pt", "d0", target_files=1)
-    t.append(_batch(reg, 120, 130, v=3.0), partition_col="pt", cluster="bypart")
-    with pytest.raises(ValueError, match="replaced data files"):
-        t.read_incremental(reg, from_snapshot_id=s1.snapshot_id)
-    got = t.read_incremental(
-        reg, from_snapshot_id=s1.snapshot_id, on_replace="skip"
-    )
-    assert sorted(r.event_id for r in got.collect()) == list(range(120, 130))
-
-
-def test_streaming_exactly_once_across_restarts(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 400), partition_col="pt", cluster="bypart")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def drain(**opts):
-        rd = reg.readStream.format("icelite")
-        for k, v in opts.items():
-            rd = rd.option(k, v)
-        q = (
-            rd.load(t.root)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain()
-    assert reg.read.parquet(out).count() == 400
-    # upsert = append commit (data + delete files): the append scan emits
-    # the batch's own rows; masked older copies are NOT retracted
-    # (standard append-scan semantics, documented in appended_between)
-    t.upsert(
-        _batch(reg, 0, 30, v=-1.0),
-        key_cols=["event_id"],
-        partition_col="pt",
-        cluster="bypart",
-    )
-    drain()
-    assert reg.read.parquet(out).count() == 430
-    # a replace commit poisons the stream under the default...
-    t.compact_partition(reg, "pt", "d1", target_files=1)
-    t.append(_batch(reg, 400, 440, v=5.0), partition_col="pt", cluster="bypart")
-    with pytest.raises(Exception, match="STREAM_FAILED|replaced data files"):
-        drain()
-    # ...and on_replace=skip resumes from the same checkpoint, delivering
-    # ONLY the 40 new rows — the compaction rewrite is not re-emitted
-    drain(on_replace="skip")
-    df = reg.read.parquet(out)
-    assert df.count() == 470
-    assert df.filter(F.col("value") == 5.0).count() == 40
-
-
-def test_streaming_starting_latest(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 200), partition_col="pt", cluster="bypart")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        reg.readStream.format("icelite")
-        .option("starting", "latest")
-        .load(t.root)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # head-start offset: the pre-existing 200 rows are never emitted
-    assert reg.read.parquet(out).count() == 0
-
-
-# ------------------------------------------------------------ streaming CDC
-
-
-def test_streaming_cdc_equals_batch_changelog(reg, tmp_path):
-    """cdc=true stream over appends + MOR upserts + key deletes must emit
-    exactly the batch changes_between rows, exactly once across restarts."""
-    t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 200), partition_col="pt", cluster="bypart")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def drain(**opts):
-        rd = reg.readStream.format("icelite").option("cdc", "true")
-        for k, v in opts.items():
-            rd = rd.option(k, v)
-        q = (
-            rd.load(t.root)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain()
-    got1 = reg.read.parquet(out)
-    assert got1.count() == 200
-    assert set(got1.select("_change_type").distinct().toPandas()._change_type) == {
-        "insert"
-    }
-    # an upsert (delete+insert pair) and a cross-partition key delete land
-    # in the NEXT micro-batch only (checkpointed offsets)
-    t.upsert(
-        _batch(reg, 50, 80, v=-2.0),
-        key_cols=["event_id"],
-        partition_col="pt",
-        cluster="bypart",
-    )
-    t.delete_by_keys(
-        reg.createDataFrame([(i,) for i in range(190, 200)], "event_id long"),
-        key_cols=["event_id"],
-    )
-    drain()
-    got = reg.read.parquet(out)
-    assert got.count() == 200 + 30 + 30 + 10
-    # "pt" is the partition column: it lives in manifest keys (surfaced as
-    # _partition), not in data files
-    cols = ["event_id", "value", "_change_type", "_partition", "_commit_seq"]
-    want = t.changes_between(reg).select(*cols)
-    assert _rows(got.select(*cols)) == _rows(want)
-    # the upsert's delete rows carry the OLD value, its inserts the new one
-    # (commit seq 2; seq 1 is the original append's insert)
-    pair = got.filter(
-        (F.col("event_id") == 60) & (F.col("_commit_seq") == 2)
-    ).select("_change_type", "value")
-    assert sorted(map(tuple, pair.collect())) == [("delete", 1.0), ("insert", -2.0)]
-
-
-def test_streaming_cdc_replace_guard(reg, tmp_path):
-    t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 90), partition_col="pt", cluster="bypart")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def drain(**opts):
-        rd = reg.readStream.format("icelite").option("cdc", "true")
-        for k, v in opts.items():
-            rd = rd.option(k, v)
-        q = (
-            rd.load(t.root)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain()
-    t.compact_partition(reg, "pt", "d0", target_files=1)
-    t.append(_batch(reg, 90, 120, v=7.0), partition_col="pt", cluster="bypart")
-    with pytest.raises(Exception, match="STREAM_FAILED|replaced data files"):
-        drain()
-    # skip mode passes over the compaction and resumes from the checkpoint
-    drain(on_replace="skip")
-    df = reg.read.parquet(out)
-    assert df.count() == 120
-    assert df.filter(F.col("value") == 7.0).count() == 30
-
-
-# ------------------------------------------------------------- writer faces
-
-
-def test_batch_writer_append_and_dynamic_overwrite(reg, tmp_path):
-    """df.write.format("icelite"): append commits + dynamic partition
-    overwrite through the data-source writer, equal to the table API."""
-    root = str(tmp_path / "w")
-    _batch(reg, 0, 300).write.format("icelite").mode("append").option(
-        "partition_col", "pt"
-    ).save(root)
-    _batch(reg, 300, 400, v=2.0).write.format("icelite").mode("append").option(
-        "partition_col", "pt"
-    ).save(root)
-    t = IceliteTable(root)
-    assert t.rows() == 400 and t.snapshot().seq == 2
-    assert sorted(r.event_id for r in t.read(reg).collect()) == list(range(400))
-    # dynamic overwrite: only the partitions present in the new data (d0)
-    # are replaced; d1/d2 untouched
-    ow = _batch(reg, 0, 30, v=9.0).filter(F.col("pt") == "d0")
-    ow.write.format("icelite").mode("overwrite").option("partition_col", "pt").save(root)
-    got = t.read(reg)
-    assert got.filter(F.col("value") == 9.0).count() == ow.count()
-    assert got.count() == 400 - 300 // 3 - 100 // 3 - (1 if 300 % 3 else 0) + ow.count() or True
-    d0_before = [i for i in range(400) if i % 3 == 0]
-    remaining = sorted(r.event_id for r in got.collect())
-    assert remaining == sorted(
-        [i for i in range(400) if i % 3 != 0] + [i for i in range(30) if i % 3 == 0]
-    )
-    # fmt-2 stats recorded by the writer drive file skipping on read
-    t.read(reg, where={"event_id": ("=", 1)})
-    assert t.last_scan["files_read"] < t.last_scan["files_considered"]
-    # schema is versioned like every other writer (evolution composes)
-    assert t.snapshot().schema is not None
-
-
-def test_batch_writer_unpartitioned_and_abort_cleanup(reg, tmp_path):
-    root = str(tmp_path / "w2")
-    _batch(reg, 0, 50).drop("pt").write.format("icelite").mode("append").save(root)
-    t = IceliteTable(root)
-    assert t.rows() == 50 and t.committed_partitions() == {"__all__"}
-    # a failing write must not leave referenced files (abort unlinks)
-    before = t.snapshot().seq
-    bad = _batch(reg, 0, 10).withColumn(
-        "value", F.expr("raise_error('boom')").cast("double")
-    )
-    with pytest.raises(Exception, match="boom|STREAM|Job aborted"):
-        bad.drop("pt").write.format("icelite").mode("append").save(root)
-    assert IceliteTable(root).snapshot().seq == before  # nothing committed
-
-
-def test_stream_writer_exactly_once(reg, tmp_path):
-    """writeStream.format("icelite"): per-micro-batch commits with batch-id
-    lineage; replays skip and clean up."""
-    src = IceliteTable(str(tmp_path / "src"))
-    src.append(_batch(reg, 0, 120), partition_col="pt", cluster="bypart")
-    dst_root = str(tmp_path / "dst")
-    ckpt = str(tmp_path / "ck")
-
-    def drain():
-        # re-derive the partition column: the source's partition col lives
-        # in manifest keys, not data columns
-        q = (
-            reg.readStream.format("icelite")
-            .load(src.root)
-            .withColumn(
-                "pt", F.concat(F.lit("d"), (F.col("event_id") % 3).cast("string"))
-            )
-            .writeStream.format("icelite")
-            .option("partition_col", "pt")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start(dst_root)
-        )
-        q.awaitTermination(180)
-
-    drain()
-    dst = IceliteTable(dst_root)
-    assert sorted(r.event_id for r in dst.read(reg).collect()) == list(range(120))
-    head = dst.snapshot()
-    assert head.lineage["micro_batch"] == 0 and head.operation == "append"
-    # no new data -> no new commit; new source rows -> exactly one commit
-    drain()
-    assert IceliteTable(dst_root).snapshot().seq == head.seq
-    src.append(_batch(reg, 120, 150, v=4.0), partition_col="pt", cluster="bypart")
-    drain()
-    dst = IceliteTable(dst_root)
-    assert dst.rows() == 150 and dst.snapshot().lineage["micro_batch"] == 1
 
 
 def test_register_self_sufficient_on_pushdown_disabled_session(spark, tmp_path):

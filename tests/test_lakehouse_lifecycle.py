@@ -2,7 +2,7 @@
 capabilities composed end-to-end:
 
 APPEND a corpus drop → QC it (Gopher repetition filter over the
-incremental read of the drop) → MOR key delete quarantines the flagged
+changelog's inserts of the drop) → MOR key delete quarantines the flagged
 docs → CDC changelog materializes a downstream table → COMPACT
 materializes the delete backlog → EXPIRE — and every intermediate
 contract (physical vs logical rows, replay equivalence, time travel
@@ -49,7 +49,11 @@ def test_append_qc_delete_cdc_compact_expire(spark, tmp_path):
     assert corpus.rows() == 85
 
     # ---- QC: Gopher repetition filter over the drop alone finds the junk
-    drop = corpus.read_incremental(spark, base.snapshot_id)
+    drop = (
+        corpus.changes_between(spark, base.snapshot_id)
+        .filter(F.col("_change_type") == "insert")
+        .select("doc_id", "text")
+    )
     assert drop.count() == 45
     qc = repetition_stats(drop)
     bad = [r.doc_id for r in qc.filter(F.col("keep") == 0).collect()]

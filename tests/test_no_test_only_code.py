@@ -14,13 +14,20 @@ that writes its own name as a lineage key is not thereby called).
 
 Spark calls some methods itself: a method is exempt when a ``pyspark.*``
 class in its class's MRO defines the same name (the Python data source
-callbacks).  Names that are still reached only from tests are listed in
+callbacks).  A ``DataSource``'s ``reader``, ``streamReader``, ``writer``
+and ``streamWriter`` are the exception: Spark calls each only when some
+code asks for the format on the matching DataFrame face, so each counts
+as used only when a non-test file calls ``.format("<its name()>")`` on a
+``read``, ``readStream``, ``write`` or ``writeStream`` attribute
+respectively.  Names that are still reached only from tests are listed in
 ``ALLOWED`` with the reason they stay.
 """
 
 import ast
 import importlib
 from pathlib import Path
+
+from pyspark.sql.datasource import DataSource
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -29,8 +36,15 @@ ALLOWED = {
     "geomedian_axis0": "the only Spark implementation of the reference's axis-0 geomedian; no query asks for it",
     "gen_assets": "synthetic binary-asset table for the multimodal operator tests",
     "sample_frames": "video frame-sampling stub of the multimodal asset plumbing, test-driven only",
-    "IceliteTable.rollback_to": "icelite's snapshot rollback; no job rolls a tier back yet (ROADMAP direction 2)",
-    "IceliteTable.delete_where": "icelite's copy-on-write row delete; no job deletes rows yet (ROADMAP direction 2)",
+}
+
+# the DataFrame attribute whose .format(name) makes Spark call each
+# DataSource face
+DATASOURCE_FACES = {
+    "read": "reader",
+    "readStream": "streamReader",
+    "write": "writer",
+    "writeStream": "streamWriter",
 }
 
 
@@ -49,22 +63,28 @@ def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
 
-def _spark_callbacks(module: str, cls_name: str) -> set[str]:
-    """Names that a ``pyspark.*`` base of ``module.cls_name`` defines."""
+def _spark_callbacks(module: str, cls_name: str) -> dict[str, str | None]:
+    """Names that a ``pyspark.*`` base of ``module.cls_name`` defines, each
+    mapped to the use that keeps it alive: None for a callback Spark always
+    makes, ``"<face>:<format>"`` for a DataSource face."""
     cls = getattr(importlib.import_module(module), cls_name, None)
     if cls is None:
-        return set()
-    return {
-        name
+        return {}
+    out = {
+        name: None
         for base in cls.__mro__[1:]
         if base.__module__.startswith("pyspark.")
         for name in vars(base)
     }
+    if issubclass(cls, DataSource):
+        out.update({face: f"{face}:{cls.name()}" for face in DATASOURCE_FACES.values()})
+    return out
 
 
 def _defs():
-    """(where, name) for every checked definition under hdstats_spark/;
-    a method's name is qualified by its class."""
+    """(where, name, use) for every checked definition under hdstats_spark/:
+    a method's name is qualified by its class, and ``use`` is the name (or
+    DataSource face key) a non-test caller must refer to."""
     for path, tree in _sources():
         rel = path.relative_to(ROOT)
         if rel.parts[0] != "hdstats_spark":
@@ -72,18 +92,19 @@ def _defs():
         module = ".".join(rel.with_suffix("").parts)
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                yield f"{rel}:{node.lineno}", node.name
+                yield f"{rel}:{node.lineno}", node.name, node.name
         for cls in ast.walk(tree):
             if not isinstance(cls, ast.ClassDef):
                 continue
-            exempt = _spark_callbacks(module, cls.name)
+            callbacks = _spark_callbacks(module, cls.name)
             for node in cls.body:
                 if (
                     isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
                     and not _is_dunder(node.name)
-                    and node.name not in exempt
                 ):
-                    yield f"{rel}:{node.lineno}", f"{cls.name}.{node.name}"
+                    use = callbacks.get(node.name, node.name)
+                    if use is not None:
+                        yield f"{rel}:{node.lineno}", f"{cls.name}.{node.name}", use
 
 
 def _constants_outside_own_def(node: ast.AST, enclosing: frozenset = frozenset()):
@@ -96,6 +117,24 @@ def _constants_outside_own_def(node: ast.AST, enclosing: frozenset = frozenset()
             yield node.value
     for child in ast.iter_child_nodes(node):
         yield from _constants_outside_own_def(child, enclosing)
+
+
+def _format_face(node: ast.AST) -> str | None:
+    """``"<face>:<format>"`` when ``node`` is ``<x>.<attr>.format("<format>")``
+    with ``<attr>`` one of DATASOURCE_FACES."""
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return None
+    attr = node.func.value
+    if (
+        node.func.attr == "format"
+        and isinstance(attr, ast.Attribute)
+        and attr.attr in DATASOURCE_FACES
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+    ):
+        return f"{DATASOURCE_FACES[attr.attr]}:{node.args[0].value}"
+    return None
 
 
 def _names_used_outside_tests() -> set[str]:
@@ -111,13 +150,15 @@ def _names_used_outside_tests() -> set[str]:
                 used.add(node.attr)
             elif isinstance(node, ast.alias):
                 used.add(node.name.rsplit(".", 1)[-1])
+            elif (face := _format_face(node)) is not None:
+                used.add(face)
     return used
 
 
 def _test_only():
     used = _names_used_outside_tests()
-    for where, name in _defs():
-        if name.rsplit(".", 1)[-1] not in used:
+    for where, name, use in _defs():
+        if use not in used:
             yield where, name
 
 
@@ -148,7 +189,7 @@ def test_kernels_np_imported_only_by_series_operators():
 
 def test_no_public_name_is_test_only():
     """Public and private names alike: every checked definition."""
-    assert any("." in name for _, name in _defs()), "no methods found under hdstats_spark/"
+    assert any("." in name for _, name, _ in _defs()), "no methods found under hdstats_spark/"
     unused = [f"{where} {name}" for where, name in _test_only() if name not in ALLOWED]
     assert not unused, "definitions with no caller outside tests:\n" + "\n".join(unused)
 

@@ -55,7 +55,7 @@ def test_fused_scan_equals_per_class_loop(spark, tmp_path):
     from hdstats_spark.icelite import IceliteTable
 
     t = _mk_mor_table(spark, tmp_path)
-    snap, classes, dentries, _ = t._plan_scan(None, None, None, None)
+    snap, classes, dentries, _ = t._plan_scan()
     assert len(classes) > 1, "scenario must produce multiple classes"
     keysets = {tuple(dentries[p]["keys"]) for key in classes for p in key}
     assert len(keysets) > 1, "scenario must produce multiple key-column sets"
@@ -81,7 +81,7 @@ def test_fused_scan_equals_per_class_loop(spark, tmp_path):
 
 def test_fused_scan_refuses_infeasible_attribution(spark, tmp_path):
     t = _mk_mor_table(spark, tmp_path)
-    snap, classes, dentries, _ = t._plan_scan(None, None, None, None)
+    snap, classes, dentries, _ = t._plan_scan()
     # >64 files in one reader
     many = {(): [f"d/p{i}.parquet" for i in range(65)]}
     assert t._fused_delete_scan(spark, snap, many, {}) is None
@@ -316,3 +316,30 @@ def test_dedup_queries_follow_rewritten_documents(spark, tmp_path):
     new = answers(False)
     assert new["ngram_jaccard"] == [(1, 3, 1.0)]
     assert answers(True) == new
+
+
+def test_new_session_follows_rewrite_cached_by_another_session(spark, tmp_path):
+    """The CacheManager is shared by every session of one SparkContext: a
+    session that first reads a table after it was rewritten must not be
+    served rows that another session cached before the rewrite."""
+    import duckdb
+
+    from hdstats_spark import driver_queries as dq
+
+    path = tmp_path / "documents.parquet"
+    sf = str(tmp_path)
+    a = "the quick brown fox jumps over the lazy dog near the river bank"
+    b = "a stitch in time saves nine said the tailor to the young apprentice"
+    c = "every cloud has a silver lining when the storm finally passes away"
+    d = "red green blue yellow purple orange cyan magenta and plain grey"
+
+    _write_documents(path, [a, a + " today", b, b + " again"])
+    assert dq.queries()["ngram_jaccard"](spark, sf).count() == 2
+    _write_documents(path, [a, c, a, d])
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = sorted(con.sql(dq.oracles()["ngram_jaccard"]).fetchall())
+    assert want == [(0, 2, 1.0)]
+    other = spark.newSession()
+    got = [tuple(r) for r in dq.queries()["ngram_jaccard"](other, sf).collect()]
+    assert sorted((x, y, round(s, 6)) for x, y, s in got) == want

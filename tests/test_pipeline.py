@@ -44,17 +44,6 @@ def test_copart_cascade_single_exchange(spark, transcripts):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_plan_auto_selection(spark, tmp_path):
-    """plan='auto' resolves to copart everywhere except single-box local
-    masters with >16 cores (the measured DRAM-ceiling corner); explicit
-    plans pass through untouched."""
-    root = str(tmp_path / "psel")
-    # test session is local[8] → defaultParallelism 8 → copart
-    assert TierPipeline(spark, root).plan == "copart"
-    assert TierPipeline(spark, root, plan="classic").plan == "classic"
-    assert TierPipeline(spark, root, plan="copart").plan == "copart"
-
-
 def test_icelite_escaped_partition_values(spark, tmp_path):
     """Partition values Spark path-escapes (space, ':') must round-trip
     through the manifest and match caller-supplied filters."""
@@ -866,89 +855,3 @@ def test_icelite_compact_preserves_cluster_col(spark, tmp_path):
         assert hi1 < lo2, ranges
     t.read(spark, where={"gmb": ("=", 2)})
     assert t.last_scan["files_read"] == 1
-
-
-def test_icelite_delete_where_copy_on_write(spark, tmp_path):
-    """Row-level DELETE (Iceberg copy-on-write analogue): matching rows
-    vanish from the new snapshot, provably-clean files are carried through
-    UNTOUCHED (same manifest paths — no I/O), time travel still sees the
-    deleted rows, and a no-op predicate commits nothing."""
-    t = IceliteTable(str(tmp_path / "del"))
-    for lo in (0, 100, 200):  # 3 files per day partition, disjoint id ranges
-        t.append(
-            spark.createDataFrame([(lo + i, f"u{(lo + i) % 7}", "d1") for i in range(50)],
-                                  ["id", "user", "day"]),
-            "day", cluster="bypart",
-        )
-    t.append(spark.createDataFrame([(500, "u0", "d2")], ["id", "user", "day"]), "day")
-    before = t.snapshot()
-    files_before = dict(before.partitions)["d1"]["files"]
-
-    s = t.delete_where(spark, {"day": ("=", "d1"), "id": ("between", 120, 130)})
-    assert s is not None and s.operation == "delete"
-    # rows gone from the head…
-    assert t.rows() == 151 - 11
-    assert t.read(spark, where={"id": ("between", 120, 130)}).count() == 0
-    # …but time travel still sees them
-    assert (
-        t.read(spark, snapshot_id=before.snapshot_id)
-        .filter("id between 120 and 130").count() == 11
-    )
-    # file granularity: the two clean d1 files carried through by PATH
-    after = t.snapshot().partitions["d1"]
-    carried = set(files_before) & set(after["files"])
-    assert len(carried) == 2
-    assert after["rows"] == 150 - 11
-    # untouched partition d2 kept verbatim
-    assert t.snapshot().partitions["d2"] == before.partitions["d2"]
-    # stats stay aligned after the rewrite
-    assert len(after["stats"]) == len(after["files"])
-    # no-op: predicate no file can match -> None, no new snapshot
-    head = t.current_snapshot_id()
-    assert t.delete_where(spark, {"id": ("=", 99999)}) is None
-    assert t.current_snapshot_id() == head
-    # whole-partition delete (partition predicate only)
-    t.delete_where(spark, {"day": ("=", "d2")})
-    assert t.rows() == 139
-    assert "d2" in t.snapshot().partitions and t.snapshot().partitions["d2"]["rows"] == 0
-
-
-def test_icelite_read_as_of_timestamp(spark, tmp_path):
-    """Time travel by timestamp: read(as_of=) resolves the newest snapshot
-    committed at or before ts."""
-    import time as _t
-
-    t = IceliteTable(str(tmp_path / "asof"))
-    t.append(spark.createDataFrame([(1, "a")], ["id", "day"]), "day")
-    ts1 = t.snapshot().committed_at
-    _t.sleep(0.05)
-    t.append(spark.createDataFrame([(2, "a")], ["id", "day"]), "day")
-    assert t.read(spark, as_of=ts1).count() == 1
-    assert t.read(spark, as_of=_t.time()).count() == 2
-    assert t.snapshot_as_of(ts1 - 10) is None
-    with pytest.raises(ValueError, match="not both"):
-        t.read(spark, snapshot_id="x", as_of=ts1)
-
-
-def test_purge_contaminated_docs_end_to_end(spark, tmp_path):
-    """The training-data purge loop the delete exists for: decontaminate
-    flags benchmark-overlapping docs, delete_where removes exactly them
-    from the icelite corpus table, clean docs' files untouched."""
-    from hdstats_spark.operators.dedup import decontaminate
-
-    bench_text = "alpha bravo charlie delta echo foxtrot golf hotel"
-    docs = [(0, bench_text, "d1"), (1, "one two three four five six seven", "d1"),
-            (2, "xx yy alpha bravo charlie delta echo foxtrot zz", "d2"),
-            (3, "totally clean other text goes here ok", "d2")]
-    t = IceliteTable(str(tmp_path / "corpus"))
-    t.append(spark.createDataFrame(docs, ["doc_id", "text", "day"]), "day")
-    bench = spark.createDataFrame([(100, bench_text)], ["doc_id", "text"])
-    flagged = (
-        decontaminate(t.read(spark), bench, n=6)
-        .filter("contaminated = 1").select("doc_id").collect()
-    )
-    bad_ids = sorted(r["doc_id"] for r in flagged)
-    assert bad_ids == [0, 2]
-    t.delete_where(spark, {"doc_id": ("in", bad_ids)})
-    left = sorted(r["doc_id"] for r in t.read(spark).collect())
-    assert left == [1, 3]
