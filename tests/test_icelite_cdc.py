@@ -125,6 +125,23 @@ def test_overwrite_changelog_diff(spark, tmp_path):
     _replay(t, spark, s1.snapshot_id)
 
 
+def test_cow_delete_changelog(spark, tmp_path):
+    t = IceliteTable(str(tmp_path / "cdc6"))
+    s1 = t.append(
+        _mk(spark, [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d1")]),
+        partition_col="day",
+    )
+    # copy-on-write delete of k<=2: rewrite d1 with its surviving row
+    t.overwrite_partitions(_mk(spark, [(3, "c", "d1")]), "day")
+    rows = _changes(t, spark, s1.snapshot_id)
+    # the survivor is rewritten unchanged, so it emits no change rows
+    assert sorted((r._change_type, r.k) for r in rows) == [
+        ("delete", 1),
+        ("delete", 2),
+    ]
+    _replay(t, spark, s1.snapshot_id)
+
+
 def test_changelog_across_schema_evolution(spark, tmp_path):
     t = IceliteTable(str(tmp_path / "cdc8"))
     t.append(_mk(spark, [(1, "a", "d1")]), partition_col="day")

@@ -82,9 +82,9 @@ def test_prune_everything_yields_empty_with_schema(reg, tmp_path):
     assert [f.name for f in ds.schema.fields] == ["event_id", "value"]
 
 
-def test_schema_evolution_null_backfills(reg, tmp_path):
+def test_schema_evolution_and_snapshot_time_travel(reg, tmp_path):
     t = IceliteTable(str(tmp_path / "t"))
-    t.append(_batch(reg, 0, 50), partition_col="pt", cluster="bypart")
+    s1 = t.append(_batch(reg, 0, 50), partition_col="pt", cluster="bypart")
     t.append(
         _batch(reg, 50, 60).withColumn("lang", F.lit("en")),
         partition_col="pt",
@@ -95,6 +95,10 @@ def test_schema_evolution_null_backfills(reg, tmp_path):
     # old files NULL-backfill the evolved column
     assert cur.filter(F.col("lang").isNull()).count() == 50
     assert cur.filter(F.col("lang") == "en").count() == 10
+    # time travel by snapshot id reads under the OLD schema
+    old = t.read(reg, snapshot_id=s1.snapshot_id)
+    assert "lang" not in old.columns
+    assert old.count() == 50
 
 
 def test_register_self_sufficient_on_pushdown_disabled_session(spark, tmp_path):

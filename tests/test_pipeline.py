@@ -679,6 +679,36 @@ def test_icelite_expire_ignores_crash_orphaned_snapshot(tmp_path):
     assert sorted(t.snapshot().partitions["p"]["files"]) == ["a.parquet", "b.parquet", "c.parquet"]
 
 
+def test_purge_contaminated_docs_end_to_end(spark, tmp_path):
+    """The training-data purge loop: decontaminate flags benchmark-
+    overlapping docs, a MOR key delete removes exactly them from the
+    icelite corpus table, and no data file is rewritten."""
+    from hdstats_spark.operators.dedup import decontaminate
+
+    bench_text = "alpha bravo charlie delta echo foxtrot golf hotel"
+    docs = [(0, bench_text, "d1"), (1, "one two three four five six seven", "d1"),
+            (2, "xx yy alpha bravo charlie delta echo foxtrot zz", "d2"),
+            (3, "totally clean other text goes here ok", "d2")]
+    t = IceliteTable(str(tmp_path / "corpus"))
+    t.append(spark.createDataFrame(docs, ["doc_id", "text", "day"]), "day")
+    bench = spark.createDataFrame([(100, bench_text)], ["doc_id", "text"])
+    flagged = (
+        decontaminate(t.read(spark), bench, n=6)
+        .filter("contaminated = 1").select("doc_id").collect()
+    )
+    bad_ids = sorted(r["doc_id"] for r in flagged)
+    assert bad_ids == [0, 2]
+    files_before = {p: m["files"] for p, m in t.snapshot().partitions.items()}
+    t.delete_by_keys(
+        spark.createDataFrame([(i,) for i in bad_ids], "doc_id long"),
+        key_cols=["doc_id"],
+    )
+    left = sorted(r["doc_id"] for r in t.read(spark).collect())
+    assert left == [1, 3]
+    files_after = {p: m["files"] for p, m in t.snapshot().partitions.items()}
+    assert files_after == files_before
+
+
 def test_icelite_file_stats_skipping(spark, tmp_path):
     """fmt-2 manifests carry per-file column min/max and read(where=...)
     skips files whose range provably misses the predicate — the Iceberg
