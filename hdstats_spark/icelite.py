@@ -23,7 +23,10 @@ the stream sink and the ``queries()`` rows use:
 * reads: ``read`` (time travel by snapshot id, manifest-level partition
   pruning, file-level min/max skipping) and the changelog scan
   ``changes_between``; ``icelite_source`` puts the current-snapshot read
-  behind ``spark.read.format("icelite")``;
+  behind ``spark.read.format("icelite")``.  A read with pending deletes is
+  one scan plus one broadcast anti join per key-column set, and
+  ``_labelled_scan`` is the one place a scanned row is tagged with its
+  file's label (delete class, partition value, key file's partitions);
 * maintenance: ``compact_partition`` plus ``expire_snapshots``.
 
 Metadata scales like Iceberg's manifest lists, not like a naive full-map
@@ -45,7 +48,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import threading
 import time
 import uuid
@@ -211,31 +213,71 @@ def _stamp_seq(parts: dict, prev_parts: dict | None, mode: str, seq: int) -> dic
     return out
 
 
-_TAIL2_SAFE = re.compile(r"^[A-Za-z0-9._=/-]+$")
+# files per literal label map: a longer file list is read as a union of
+# one reader per chunk, so no map expression grows past this many entries
+_LABEL_CHUNK = 64
 
 
 def _path_tail2(p: str) -> str:
-    """Last two path components — the per-file identity used for
-    partition attribution: a part-file BASENAME alone repeats across the
-    partition dirs of one write job (same job uuid, same task index), but
+    """Last two path components — the per-file identity used for label
+    attribution: a part-file BASENAME alone repeats across the partition
+    dirs of one write job (same job uuid, same task index), but
     '<partition dir>/<basename>' is unique within a table."""
     return "/".join(p.replace(os.sep, "/").rstrip("/").split("/")[-2:])
 
 
-def _tail2_mappable(tails) -> bool:
-    """input_file_name() returns a URI, which percent-encodes characters
-    outside the unreserved set — a tail containing such characters would
-    not match its raw manifest form, so only URL-safe tails take the fused
-    attribution path (others fall back to exact per-partition reads)."""
-    return all(_TAIL2_SAFE.match(t) for t in tails)
+def _labelled_scan(reader, files: list[str], labels: dict[str, list]) -> DataFrame:
+    """``reader.parquet(*files)`` plus one column per ``labels`` entry
+    carrying the label of each row's own file (``labels[c][i]`` labels
+    ``files[i]``; a list label becomes an array).  The one place rows are
+    tied to their files: a literal map from each file's ``_path_tail2`` to
+    its label, looked up by the tail of ``input_file_name()``.  That is a
+    URI, so a tail holding an escape is percent-decoded, with ``+``
+    protected because ``url_decode`` is form decoding — any file name maps,
+    and a plain one costs no decode per row.  Past
+    ``_LABEL_CHUNK`` files the scan is a union of one reader per chunk,
+    each with its own map.  Tails are unique by construction (every data
+    and key file sits under a uuid-named ``commit-``/``compact-``/
+    ``deletes-`` dir, and part names carry the write job's uuid), so a
+    repeat is an error."""
+    from functools import reduce
 
-
-def _file_tail2_col():
-    """input_file_name()'s last two path components (matches _path_tail2)."""
     from pyspark.sql import functions as F
 
+    tails = [_path_tail2(p) for p in files]
+    if len(set(tails)) != len(tails):
+        raise ValueError(f"files with the same last two path components: {files}")
+    # input_file_name() is nondeterministic, so Spark shares no copy of an
+    # expression over it: the raw tail is selected once per row as __tail
     parts = F.split(F.input_file_name(), "/")
-    return F.concat_ws("/", F.element_at(parts, -2), F.element_at(parts, -1))
+    raw = F.concat_ws("/", F.element_at(parts, -2), F.element_at(parts, -1))
+    t = F.col("__tail")
+    tail = F.when(
+        t.contains("%"), F.url_decode(F.replace(t, F.lit("+"), F.lit("%2B")))
+    ).otherwise(t)
+
+    def lit(v):
+        return F.array(*map(F.lit, v)) if isinstance(v, list) else F.lit(v)
+
+    frames = []
+    for lo in range(0, len(files), _LABEL_CHUNK):
+        chunk = slice(lo, lo + _LABEL_CHUNK)
+        cols = [
+            F.element_at(
+                F.create_map(
+                    *[x for t, v in zip(tails[chunk], vs[chunk]) for x in (F.lit(t), lit(v))]
+                ),
+                tail,
+            ).alias(c)
+            for c, vs in labels.items()
+        ]
+        frames.append(
+            reader.parquet(*files[chunk])
+            .select("*", raw.alias("__tail"))
+            .select("*", *cols)
+            .drop("__tail")
+        )
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _data_fields(df: DataFrame, partition_col: str | None) -> list[dict]:
@@ -478,22 +520,18 @@ class IceliteTable:
     # commits persist only their delta (Iceberg: manifest list + manifests)
     CHECKPOINT_EVERY = 64
 
-    # per-file column statistics (snapshot fmt 2): min/max recorded for at
-    # most this many columns per table (schema order), strings longer than
+    # per-file column statistics (snapshot fmt 2): min/max recorded for the
+    # first this many orderable primitive columns (schema order; readers
+    # treat a missing stat as "never skip"), strings longer than
     # STATS_MAX_STR get no stat (parquet truncation bounds stay conservative
     # through the footer, but unbounded blobs would bloat the manifest)
     STATS_MAX_COLS = 16
     STATS_MAX_STR = 64
 
-    def __init__(self, root: str, lock: str | None = None, stats_cols: list[str] | None = None):
+    def __init__(self, root: str, lock: str | None = None):
         self.root = root
         self.meta_dir = os.path.join(root, "metadata")
         self.data_dir = os.path.join(root, "data")
-        # which columns get per-file min/max in the manifest: None = auto
-        # (every orderable primitive column, first STATS_MAX_COLS in schema
-        # order).  Like Iceberg's write.metadata.metrics config, this is a
-        # WRITER property; readers treat a missing stat as "never skip".
-        self.stats_cols = stats_cols
         # commit-lock mode: "flock" (POSIX fast path), "token" (portable
         # O_EXCL lease — the only protocol an object store can emulate), or
         # "auto" (flock when the platform has it).  Per-catalog config: all
@@ -1012,14 +1050,6 @@ class IceliteTable:
 
     # ------------------------------------------------------------- write
 
-    def _resolve_stats_cols(self, pf) -> list[str]:
-        """The columns this writer records per-file min/max for: explicit
-        ``stats_cols`` if configured, else auto (orderable primitives in
-        schema order, capped)."""
-        if self.stats_cols is not None:
-            return list(self.stats_cols)
-        return _auto_stats_cols(pf, self.STATS_MAX_COLS)
-
     def _precheck_schema(self, df: DataFrame, partition_col: str | None, op: str) -> list[dict]:
         """Fail an incompatible write BEFORE the (expensive) Spark file
         write; the authoritative schema merge re-runs inside _commit_delta's
@@ -1083,7 +1113,7 @@ class IceliteTable:
             # scan of fresh data (the partitioned path below already proved
             # footers suffice)
             pfs = [pq.ParquetFile(p) for p in paths]
-            scols = self._resolve_stats_cols(pfs[0]) if pfs else []
+            scols = _auto_stats_cols(pfs[0], self.STATS_MAX_COLS) if pfs else []
             rows = int(sum(pf.metadata.num_rows for pf in pfs))
             files = [os.path.relpath(p, self.root) for p in paths]
             stats = [_file_stats(pf, scols, self.STATS_MAX_STR) for pf in pfs]
@@ -1140,7 +1170,7 @@ class IceliteTable:
             pf = pq.ParquetFile(p)
             with scols_lock:
                 if scols_box[0] is None:
-                    scols_box[0] = self._resolve_stats_cols(pf)
+                    scols_box[0] = _auto_stats_cols(pf, self.STATS_MAX_COLS)
             return (
                 pf.metadata.num_rows,
                 _file_stats(pf, scols_box[0], self.STATS_MAX_STR),
@@ -1435,7 +1465,7 @@ class IceliteTable:
                 # TARGET SCHEMA
                 return self._apply_where(self._empty(spark, snap), where)
             raise ValueError("no files match the partition filter")
-        df = self._union_delete_classes(spark, snap, classes, dentries)
+        df = self._masked_scan(spark, snap, classes, dentries)
         return self._apply_where(df, where) if where else df
 
     def _plan_scan(
@@ -1507,9 +1537,7 @@ class IceliteTable:
                 key = tuple(d["file"] for d in dels if d["seq"] > fs)
                 for d in dels:
                     dentries.setdefault(d["file"], d)
-                classes.setdefault(key, []).append(
-                    f if os.path.isabs(f) else os.path.join(self.root, f)
-                )
+                classes.setdefault(key, []).append(self._abs(f))
         n_read = sum(len(fs) for fs in classes.values())
         self.last_scan = {
             "files_considered": considered,
@@ -1518,156 +1546,54 @@ class IceliteTable:
         }
         return snap, classes, dentries, where
 
-    def _fused_delete_scan(
+    def _masked_scan(
         self,
         spark: SparkSession,
         snap: Snapshot,
         classes: dict[tuple, list[str]],
         dentries: dict[str, dict],
-        fmap: dict[str, str] | None = None,
-    ) -> DataFrame | None:
-        """ONE reader for ALL delete-equivalence classes (plus one key
-        reader per key-column set), replacing the one-reader-per-class
-        loop: each ~30 ms driver-side ``DataFrameReader.parquet()`` call
-        is the dominant cost of planning a MOR read, and a snapshot a few
-        upserts deep has one class per distinct pending-delete
-        combination.  Files carry a per-file class id attributed from
-        ``input_file_name()`` (the fused-insert-reader trick), and each
-        key-column set masks with a SINGLE broadcast anti join ON
-        (key cols + class id): a key row is exploded to exactly the class
-        ids its delete file is attached to, so the join is row-for-row the
-        per-class anti join — a key can only eliminate rows of classes its
-        delete file applies to.  ``fmap`` (tail2 → partition value)
-        additionally attaches the changelog's ``_partition`` column.
-
-        Returns None when per-file attribution is infeasible (tail
-        collisions, URL-unsafe tails, >64 files per reader — the same
-        conditions as every other fused-attribution path); callers fall
-        back to the exact per-class loop."""
+        partition_of: dict[str, str] | None = None,
+    ) -> DataFrame:
+        """ONE scan of every file in ``classes`` with its pending equality
+        deletes applied as one BROADCAST left-anti join per key-column set
+        (delete key files are tiny — O(changed keys) — next to the data they
+        mask; at 100 TB the anti join is a map-side hash probe, no shuffle
+        of the data side), so a long upsert run adds one anti join, not one
+        per commit or per delete-equivalence class.  Each data file is
+        labelled with its class id and each key row is exploded to exactly
+        the class ids its delete file applies to (``_labelled_scan``), so
+        the join ON (key cols + class id) is row-for-row the per-class anti
+        join — a key only masks rows of classes its delete file is attached
+        to.  ``partition_of`` (file → partition value) adds a
+        ``_partition`` column.  With no pending deletes and no
+        ``partition_of`` this is the plain multi-file scan."""
         from pyspark.sql import functions as F
 
-        all_files = [p for fs in classes.values() for p in fs]
-        tails = {_path_tail2(p) for p in all_files}
-        if (
-            len(tails) != len(all_files)
-            or len(all_files) > 64
-            or not _tail2_mappable(tails)
-        ):
-            return None
-        # cols-set -> abs delete path -> [class ids it masks]
+        files = [p for fs in classes.values() for p in fs]
+        # key cols -> delete file -> ids of the classes it masks
         by_cols: dict[tuple, dict[str, list[int]]] = {}
         for ci, key in enumerate(classes):
             for p in key:
-                cols = tuple(dentries[p]["keys"])
-                ap = p if os.path.isabs(p) else os.path.join(self.root, p)
-                by_cols.setdefault(cols, {}).setdefault(ap, []).append(ci)
+                by_cols.setdefault(tuple(dentries[p]["keys"]), {}).setdefault(
+                    self._abs(p), []
+                ).append(ci)
+        labels: dict[str, list] = {}
+        if by_cols:
+            labels["__cls"] = [ci for ci, fs in enumerate(classes.values()) for _ in fs]
+        if partition_of is not None:
+            labels["_partition"] = [partition_of[p] for p in files]
+        if not labels:
+            return self._reader(spark, snap).parquet(*files)
+        df = _labelled_scan(self._reader(spark, snap), files, labels)
         for cols, dmap in by_cols.items():
-            dtails = {_path_tail2(p) for p in dmap}
-            if (
-                len(dtails) != len(dmap)
-                or len(dmap) > 64
-                or not _tail2_mappable(dtails)
-                or "__cls" in cols
-                or "__dtail" in cols
-            ):
-                return None
-        cls_map = F.create_map(
-            *[
-                F.lit(x)
-                for ci, fs in enumerate(classes.values())
-                for p in fs
-                for x in (_path_tail2(p), ci)
-            ]
-        )
-        df = self._reader(spark, snap).parquet(*all_files)
-        if "__cls" in df.columns or "__dtail" in df.columns:
-            return None
-        df = df.withColumn("__cls", F.element_at(cls_map, _file_tail2_col()))
-        if fmap is not None:
-            pmap = F.create_map(
-                *[F.lit(x) for t, v in fmap.items() for x in (t, v)]
-            )
-            df = df.withColumn(
-                "_partition", F.element_at(pmap, _file_tail2_col())
-            )
-        for cols, dmap in by_cols.items():
-            amap = F.create_map(
-                *[
-                    x
-                    for p, cids in dmap.items()
-                    for x in (
-                        F.lit(_path_tail2(p)),
-                        F.array(*[F.lit(ci) for ci in cids]),
-                    )
-                ]
-            )
             keys = (
-                spark.read.parquet(*dmap)
-                .select(*cols, _file_tail2_col().alias("__dtail"))
+                _labelled_scan(spark.read, list(dmap), {"__cls": list(dmap.values())})
+                .select(*cols, "__cls")
                 .distinct()
-                .select(
-                    *cols,
-                    F.explode(F.element_at(amap, F.col("__dtail"))).alias(
-                        "__cls"
-                    ),
-                )
+                .select(*cols, F.explode("__cls").alias("__cls"))
             )
-            df = df.join(
-                F.broadcast(keys), on=[*cols, "__cls"], how="left_anti"
-            )
-        return df.select(*[c for c in df.columns if c != "__cls"])
-
-    def _union_delete_classes(
-        self,
-        spark: SparkSession,
-        snap: Snapshot,
-        classes: dict[tuple, list[str]],
-        dentries: dict[str, dict],
-    ) -> DataFrame:
-        """One scan per delete-equivalence class, pending equality deletes
-        applied as BROADCAST left-anti joins (delete key files are tiny —
-        O(changed keys) — next to the data they mask; at 100 TB the anti
-        join is a map-side hash probe, no shuffle of the data side).  Delete
-        files sharing a key-column set are unioned into one key frame, so a
-        long upsert run adds one anti join, not one per commit.
-
-        With more than one class the classes are fused into a single
-        reader + one anti join per key-column set (``_fused_delete_scan``);
-        the per-class loop below is the exact fallback (and the one-class
-        fast path, where fusion would only add attribution overhead)."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if len(classes) > 1:
-            fused = self._fused_delete_scan(spark, snap, classes, dentries)
-            if fused is not None:
-                return fused
-        frames = []
-        # memoize key frames per (cols, files): an unscoped delete attaches
-        # ONE key file to every partition, so sibling classes would each
-        # pay a ~30 ms driver-side DataFrameReader.parquet() for the same
-        # bytes (the broadcast itself is deduped at runtime by ReuseExchange
-        # once the plans are identical, which this also guarantees)
-        kdf_memo: dict[tuple, DataFrame] = {}
-        for key, cls_files in classes.items():
-            dfc = self._reader(spark, snap).parquet(*cls_files)
-            if key:
-                by_cols: dict[tuple, list[str]] = {}
-                for p in key:
-                    cols = tuple(dentries[p]["keys"])
-                    by_cols.setdefault(cols, []).append(
-                        p if os.path.isabs(p) else os.path.join(self.root, p)
-                    )
-                for cols, paths in by_cols.items():
-                    ck = (cols, tuple(sorted(paths)))
-                    keys_df = kdf_memo.get(ck)
-                    if keys_df is None:
-                        keys_df = spark.read.parquet(*paths).select(*cols).distinct()
-                        kdf_memo[ck] = keys_df
-                    dfc = dfc.join(F.broadcast(keys_df), on=list(cols), how="left_anti")
-            frames.append(dfc)
-        return reduce(DataFrame.unionByName, frames)
+            df = df.join(F.broadcast(keys), on=[*cols, "__cls"], how="left_anti")
+        return df.drop("__cls")
 
     def _empty(self, spark: SparkSession, snap: Snapshot) -> DataFrame:
         """A zero-row frame under ``snap``'s pinned schema: a LIMIT 0 scan of
@@ -1803,89 +1729,20 @@ class IceliteTable:
         partitions: list[str] | None = None,
     ) -> DataFrame | None:
         """``read`` plus a ``_partition`` column carrying each row's
-        manifest partition value — ONE reader per delete-equivalence class
-        instead of one full ``read`` per partition (the changelog's live
-        sides paid ~30 ms of driver-side reader setup per partition per
-        commit).  Attribution is by data-file basename (uuid-unique) via a
-        literal map over ``input_file_name()``; falls back to the exact
-        per-partition loop beyond 64 files per class, where a literal map
-        expression would bloat the plan.  Returns None when nothing
-        matches the partition filter (callers treat it as "no live
-        rows")."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
+        manifest partition value — one ``_masked_scan`` with the partition
+        as a per-file label instead of one full ``read`` per partition (the
+        changelog's live sides paid ~30 ms of driver-side reader setup per
+        partition per commit).  Returns None when nothing matches the
+        partition filter (callers treat it as "no live rows")."""
         snap, classes, dentries, _ = self._plan_scan(snapshot_id, partitions)
         if not classes:
             return None
-        fmap: dict[str, str] = {}
-        for value, m in snap.partitions.items():
-            if partitions is not None and value not in partitions:
-                continue
-            for f in m["files"]:
-                tail = _path_tail2(f)
-                if fmap.setdefault(tail, value) != value:
-                    # tail collision across partitions — cannot attribute
-                    # by name; exact fallback
-                    return self._read_with_partition_slow(spark, snapshot_id, partitions)
-        if any(len(fs) > 64 for fs in classes.values()) or not _tail2_mappable(fmap):
-            return self._read_with_partition_slow(spark, snapshot_id, partitions)
-        # fuse every class into one reader + one anti join per key-column
-        # set (same row-for-row masking — see _fused_delete_scan); the
-        # per-class loop below remains the exact fallback
-        fused = self._fused_delete_scan(spark, snap, classes, dentries, fmap=fmap)
-        if fused is not None:
-            return fused
-        kdf_memo: dict[tuple, DataFrame] = {}
-        frames = []
-        for key, cls_files in classes.items():
-            entries = [(_path_tail2(p), fmap[_path_tail2(p)]) for p in cls_files]
-            mapping = F.create_map(
-                *[F.lit(x) for b, v in entries for x in (b, v)]
-            )
-            dfc = self._reader(spark, snap).parquet(*cls_files).withColumn(
-                "_partition", F.element_at(mapping, _file_tail2_col())
-            )
-            if key:
-                by_cols: dict[tuple, list[str]] = {}
-                for p in key:
-                    cols = tuple(dentries[p]["keys"])
-                    by_cols.setdefault(cols, []).append(
-                        p if os.path.isabs(p) else os.path.join(self.root, p)
-                    )
-                for cols, paths in by_cols.items():
-                    ck = (cols, tuple(sorted(paths)))
-                    keys_df = kdf_memo.get(ck)
-                    if keys_df is None:
-                        keys_df = spark.read.parquet(*paths).select(*cols).distinct()
-                        kdf_memo[ck] = keys_df
-                    dfc = dfc.join(F.broadcast(keys_df), on=list(cols), how="left_anti")
-            frames.append(dfc)
-        return reduce(DataFrame.unionByName, frames)
-
-    def _read_with_partition_slow(
-        self, spark, snapshot_id, partitions
-    ) -> DataFrame | None:
-        """Exact per-partition fallback for read_with_partition."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        snap = self.snapshot(snapshot_id)
-        values = [
-            v
-            for v, m in snap.partitions.items()
-            if m["files"] and (partitions is None or v in partitions)
-        ]
-        if not values:
-            return None
-        frames = [
-            self.read(spark, snapshot_id=snap.snapshot_id, partitions=[v])
-            .withColumn("_partition", F.lit(v))
-            for v in values
-        ]
-        return reduce(DataFrame.unionByName, frames)
+        partition_of = {
+            self._abs(f): value
+            for value, m in snap.partitions.items()
+            for f in m["files"]
+        }
+        return self._masked_scan(spark, snap, classes, dentries, partition_of)
 
     def _conform(
         self, df: DataFrame, end: Snapshot, keep: tuple = ()
@@ -1969,8 +1826,8 @@ class IceliteTable:
             df: DataFrame, ctype: str, value: str | None, snap: Snapshot
         ) -> DataFrame:
             # value=None: df is a multi-partition frame already carrying a
-            # correct per-row _partition column (the per-commit fused
-            # frames below); a single select keeps the output column order
+            # correct per-row _partition column (the append branch's
+            # labelled scans below); a single select keeps the column order
             # identical to the historical per-partition stamping
             if value is not None:
                 df = self._conform(df, end).withColumn("_partition", F.lit(value))
@@ -1995,137 +1852,56 @@ class IceliteTable:
             pparts = parent.partitions if parent is not None else {}
             if d["mode"] == "append":
                 # ONE insert frame and ONE delete frame per (commit,
-                # key-column set) instead of one PER PARTITION: the old
-                # shape built 3 frames per touched partition — a 15-subtree
-                # union with ~10 independent broadcast-build jobs for the
-                # cdc bench commit pair.  Inserts union with a per-branch
-                # _partition literal; delete keys are tagged with the
-                # partition whose manifest entry references them and
-                # semi-joined ON (keys + _partition), which is row-for-row
-                # the same masking as the per-partition joins (a key only
-                # ever matches rows of the partition it was attached to).
-                ins_entries: list[tuple[str, list[str]]] = []
-                del_groups: dict[tuple, list] = {}
+                # key-column set) instead of one PER PARTITION: the commit's
+                # new files and its delete key files are each read by one
+                # scan that tags every row with its file's partition
+                # (``_labelled_scan``), and the keys are semi-joined ON
+                # (keys + _partition), which is row-for-row the same masking
+                # as per-partition joins (a key only ever matches rows of
+                # the partitions whose manifest entries reference its file;
+                # an unscoped delete's one key file is referenced by all).
+                ins_part: dict[str, str] = {}
+                # key cols -> key file -> partitions it is attached to
+                del_groups: dict[tuple, dict[str, list[str]]] = {}
                 for value, m in d["parts"].items():
-                    if m["files"]:
-                        ins_entries.append(
-                            (value, [self._abs(f) for f in m["files"]])
-                        )
+                    for f in m["files"]:
+                        ins_part[self._abs(f)] = value
                     for de in m.get("deletes") or ():
                         if value not in pparts or not pparts[value]["files"]:
                             continue  # nothing pre-existing to mask
-                        del_groups.setdefault(tuple(de["keys"]), []).append(
-                            (value, de["file"])
-                        )
-                if ins_entries:
-                    # ONE reader for the commit's new files, partition
-                    # attributed per file path tail (the part-file basename
-                    # alone collides across a job's partition dirs — same
-                    # job uuid + task index — so key on the last TWO path
-                    # components); each extra DataFrameReader.parquet()
-                    # costs ~30 ms driver-side
-                    fmap = {
-                        _path_tail2(p): v for v, ps in ins_entries for p in ps
-                    }
-                    all_paths = [p for _, ps in ins_entries for p in ps]
-                    if (
-                        len(fmap) == len(all_paths)
-                        and len(all_paths) <= 64
-                        and _tail2_mappable(fmap)
-                    ):
-                        mapping = F.create_map(
-                            *[F.lit(x) for b, v in fmap.items() for x in (b, v)]
-                        )
-                        ins = self._reader(spark, end).parquet(*all_paths).withColumn(
-                            "_partition", F.element_at(mapping, _file_tail2_col())
-                        )
-                        ins = self._conform(ins, end, keep=("_partition",))
-                    else:  # basename collision or huge commit: exact loop
-                        ins = reduce(
-                            DataFrame.unionByName,
-                            [
-                                self._conform(
-                                    self._reader(spark, end).parquet(*ps), end
-                                ).withColumn("_partition", F.lit(v))
-                                for v, ps in ins_entries
-                            ],
-                        )
+                        del_groups.setdefault(tuple(de["keys"]), {}).setdefault(
+                            self._abs(de["file"]), []
+                        ).append(value)
+                if ins_part:
+                    ins = _labelled_scan(
+                        self._reader(spark, end),
+                        list(ins_part),
+                        {"_partition": list(ins_part.values())},
+                    )
+                    ins = self._conform(ins, end, keep=("_partition",))
                     frames.append(stamp(ins, "insert", None, snap))
-                for keycols, entries in del_groups.items():
-                    # ONE reader for all the group's UNIQUE key files
-                    # (each DataFrameReader.parquet() call costs ~30 ms of
-                    # driver-side listing/resolution): per-file keys are
-                    # deduped with the file tail in the distinct, then
-                    # exploded to the partitions whose manifest entries
-                    # reference that file — the same (key, partition) rows
-                    # as the old per-file read+stamp+union.  Falls back to
-                    # the per-file loop when tails collide / are
-                    # URL-unsafe / the commit exceeds 64 key files.
-                    uniq = list(dict.fromkeys(f for _, f in entries))
-                    utails = {_path_tail2(self._abs(f)) for f in uniq}
-                    parts_by_tail: dict[str, list] = {}
-                    for v, f in entries:
-                        parts_by_tail.setdefault(
-                            _path_tail2(self._abs(f)), []
-                        ).append(v)
-                    if (
-                        len(utails) == len(uniq)
-                        and len(uniq) <= 64
-                        and _tail2_mappable(utails)
-                        and "_partition" not in keycols
-                        and "__dtail" not in keycols
-                    ):
-                        amap = F.create_map(
-                            *[
-                                x
-                                for tl, vs in parts_by_tail.items()
-                                for x in (
-                                    F.lit(tl),
-                                    F.array(*[F.lit(v) for v in vs]),
-                                )
-                            ]
-                        )
-                        keys = (
-                            spark.read.parquet(*[self._abs(f) for f in uniq])
-                            .select(
-                                *keycols, _file_tail2_col().alias("__dtail")
-                            )
-                            .distinct()
-                            .select(
-                                *keycols,
-                                F.explode(
-                                    F.element_at(amap, F.col("__dtail"))
-                                ).alias("_partition"),
-                            )
-                        )
-                    else:
-                        kdfs: dict[str, DataFrame] = {}
-                        for _, f in entries:
-                            if f not in kdfs:
-                                kdfs[f] = (
-                                    spark.read.parquet(self._abs(f))
-                                    .select(*keycols).distinct()
-                                )
-                        keys = reduce(
-                            DataFrame.unionByName,
-                            [
-                                kdfs[f].withColumn("_partition", F.lit(v))
-                                for v, f in entries
-                            ],
-                        )
-                    live_all = self.read_with_partition(
+                for keycols, kparts in del_groups.items():
+                    live = self.read_with_partition(
                         spark,
                         snapshot_id=parent.snapshot_id,
-                        partitions=[v for v, _ in entries],
+                        partitions=[v for vs in kparts.values() for v in vs],
                     )
-                    if live_all is None:
+                    if live is None:
                         continue
-                    live = self._conform(live_all, end, keep=("_partition",))
+                    keys = (
+                        _labelled_scan(
+                            spark.read, list(kparts), {"_partition": list(kparts.values())}
+                        )
+                        .select(*keycols, "_partition")
+                        .distinct()
+                        .select(*keycols, F.explode("_partition").alias("_partition"))
+                    )
+                    live = self._conform(live, end, keep=("_partition",))
                     frames.append(
                         stamp(
                             live.join(
                                 F.broadcast(keys),
-                                on=list(keycols) + ["_partition"],
+                                on=[*keycols, "_partition"],
                                 how="left_semi",
                             ),
                             "delete", None, snap,
@@ -2227,7 +2003,7 @@ class IceliteTable:
             # check below is the conflict guard there.
             shutil.rmtree(commit_dir, ignore_errors=True)
             return None
-        scols = self._resolve_stats_cols(pfs[0]) if pfs else []
+        scols = _auto_stats_cols(pfs[0], self.STATS_MAX_COLS) if pfs else []
         new_manifest = {
             "files": [os.path.relpath(p, self.root) for p in paths],
             "rows": rows,

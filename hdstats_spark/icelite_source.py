@@ -154,7 +154,7 @@ def _read_slice(part: _FileSlice, spark_schema: StructType) -> Iterator:
     """Executor-side scan of one slice: read the parquet file with pyarrow,
     apply pending equality deletes (anti-join against the tiny key files —
     the Arrow twin of the JVM broadcast left-anti in
-    ``IceliteTable._union_delete_classes``), then align to the pinned
+    ``IceliteTable._masked_scan``), then align to the pinned
     snapshot schema.  Yields Arrow record batches (zero-copy into Spark's
     Arrow ingest)."""
     if part.path is None:

@@ -9,9 +9,13 @@ faster than per-group loops at equal results).
 
 Series of unequal length are right-padded with all-NaN observations — under
 the reference's NaN semantics (NaN weight → skipped by nansum accumulators,
-geomedian.pyx:323-342) an all-NaN observation contributes nothing, so padding
-is exactly neutral; tests/test_kernels_batched.py proves bit-level agreement
-with the per-pixel oracle.
+geomedian.pyx:323-342) an all-NaN observation adds no term, so padding is
+neutral in exact arithmetic but not always bit for bit: ``np.nansum`` groups
+its pairwise float64 summation by the padded length, so a padded series can
+round differently from the per-pixel oracle (seen: up to 6.8e-7 on a
+near-zero channel of a piecewise-constant series stacked with longer ones).
+tests/test_kernels_batched.py checks bit-level agreement on random
+mixed-length stacks and on the unpadded series of a padded pair.
 
 Float discipline identical to hdstats_oracle: float32 storage, float64
 accumulation, float32 rounding of products/differences where the reference's

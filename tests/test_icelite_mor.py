@@ -141,7 +141,7 @@ def test_compact_materializes_deletes(spark, tmp_path):
 
 
 def test_read_where_skips_files_under_pending_deletes(spark, tmp_path):
-    t = IceliteTable(str(tmp_path / "m6"), stats_cols=["k"])
+    t = IceliteTable(str(tmp_path / "m6"))
     t.append(
         _mk(spark, [(i, "lo", "d1") for i in range(5)]),
         partition_col="day",

@@ -1,9 +1,9 @@
 """Focused tests for the round-7 second-pass optimization internals:
 
-* the fused MOR delete-class scan (one reader + one anti join per key
-  set) must be row-for-row identical to the exact per-class loop it
-  replaced, and must refuse (fall back) when per-file attribution is
-  infeasible;
+* the one scan that tags rows with their file (delete class, partition)
+  must give the same rows as the data source's per-file anti join and
+  the per-partition reads, past one label map's file count and for a
+  partition value that URI encoding changes;
 * kmeans_codebook's footer-bounded count skip must produce a
   bit-identical codebook;
 * _parquet_col_max must equal the Spark aggregate it replaces, and
@@ -26,68 +26,85 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def _mk_mor_table(spark, tmp_path):
-    """Partitioned table with two pending-delete commits using DIFFERENT
-    key-column sets, so the scan plan has several delete-equivalence
-    classes and more than one anti-join group."""
-    from hdstats_spark.icelite import IceliteTable
+# '+', ' ' and '%' each read differently once input_file_name()'s URI is
+# decoded naively
+_ODD_VALUE = "a+b c%d"
 
-    rows = [
-        (i, f"p{i % 3}", i % 7, float(i))
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "id long, pt string, k2 long, v double")
-    t = IceliteTable(str(tmp_path / "fused"))
-    t.overwrite_partitions(df, "pt", cluster="bypart")
-    up = df.filter(F.col("id") % 4 == 0).withColumn("v", -F.col("v"))
-    t.upsert(up, key_cols=["id"], partition_col="pt", cluster="bypart")
-    t.delete_by_keys(
+
+def test_labelled_scan_paths_agree(spark, tmp_path):
+    """One merge-on-read table through every path that tags rows with their
+    file: more data files in one read than one label map holds, a
+    partition value that URI encoding changes, and pending deletes with
+    two delete classes and two key-column sets.  ``read`` must equal the
+    data source's independent per-file Arrow anti join,
+    ``read_with_partition`` the per-partition reads tagged by hand, and
+    ``changes_between`` the change stream derived from the rows."""
+    from collections import Counter
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from hdstats_spark.icelite import _LABEL_CHUNK, IceliteTable
+    from hdstats_spark.icelite_source import register
+
+    schema = "id long, ptc string, k2 long, v double"
+    parts = ["p0", "p1", _ODD_VALUE]
+    rows = [(i, parts[i % 3], i % 7, float(i)) for i in range(840)]
+    up_rows = [(i, p, k, -v) for i, p, k, v in rows if i % 4 == 0]
+
+    def frame(rs):  # ptc is a data-column copy of the partition value
+        return spark.createDataFrame(rs, schema).withColumn("pt", F.col("ptc"))
+
+    t = IceliteTable(str(tmp_path / "labelled"))
+    s1 = t.append(frame(rows).repartition(70), "pt", cluster="asis")
+    assert sum(len(m["files"]) for m in s1.partitions.values()) > _LABEL_CHUNK
+    assert _ODD_VALUE in s1.partitions
+    s2 = t.upsert(frame(up_rows), key_cols=["id"], partition_col="pt", cluster="bypart")
+    s3 = t.delete_by_keys(
         spark.createDataFrame([(2,), (5,)], "k2 long"), key_cols=["k2"]
     )
-    return t
+    _, classes, dentries, _ = t._plan_scan()
+    assert len(classes) > 1
+    assert len({tuple(dentries[p]["keys"]) for key in classes for p in key}) > 1
 
+    first = {r[0]: r for r in rows}
+    merged = {**first, **{r[0]: r for r in up_rows}}
+    live = sorted(r for r in merged.values() if r[2] not in (2, 5))
 
-def _collect_sorted(df):
-    return sorted(tuple(r) for r in df.collect())
+    cols = ["id", "ptc", "k2", "v"]
 
+    def collect(df, extra=()):
+        return sorted(tuple(r) for r in df.select(*cols, *extra).collect())
 
-def test_fused_scan_equals_per_class_loop(spark, tmp_path):
-    from hdstats_spark.icelite import IceliteTable
+    register(spark)
+    assert collect(spark.read.format("icelite").load(t.root)) == live
+    assert collect(t.read(spark)) == live
 
-    t = _mk_mor_table(spark, tmp_path)
-    snap, classes, dentries, _ = t._plan_scan()
-    assert len(classes) > 1, "scenario must produce multiple classes"
-    keysets = {tuple(dentries[p]["keys"]) for key in classes for p in key}
-    assert len(keysets) > 1, "scenario must produce multiple key-column sets"
+    by_hand = reduce(
+        DataFrame.unionByName,
+        [
+            t.read(spark, partitions=[p]).withColumn("_partition", F.lit(p))
+            for p in parts
+        ],
+    )
+    got = collect(t.read_with_partition(spark), ["_partition"])
+    assert got == collect(by_hand, ["_partition"])
+    assert all(r[1] == r[-1] for r in got)
 
-    fused = t._fused_delete_scan(spark, snap, classes, dentries)
-    assert fused is not None, "attribution must be feasible here"
-
-    # exact per-class ground truth: force the fused path off and read
-    orig = IceliteTable._fused_delete_scan
-    try:
-        IceliteTable._fused_delete_scan = lambda self, *a, **kw: None
-        loop_rows = _collect_sorted(t.read(spark))
-    finally:
-        IceliteTable._fused_delete_scan = orig
-    assert _collect_sorted(fused) == loop_rows
-    assert _collect_sorted(t.read(spark)) == loop_rows
-
-    # read_with_partition: fused _partition attribution vs the slow loop
-    rwp = t.read_with_partition(spark)
-    slow = t._read_with_partition_slow(spark, None, None)
-    assert _collect_sorted(rwp) == _collect_sorted(slow)
-
-
-def test_fused_scan_refuses_infeasible_attribution(spark, tmp_path):
-    t = _mk_mor_table(spark, tmp_path)
-    snap, classes, dentries, _ = t._plan_scan()
-    # >64 files in one reader
-    many = {(): [f"d/p{i}.parquet" for i in range(65)]}
-    assert t._fused_delete_scan(spark, snap, many, {}) is None
-    # tail-2 collision across partitions
-    coll = {(): ["a/dup.parquet"], ("x",): ["b/../a/dup.parquet"]}
-    assert t._fused_delete_scan(spark, snap, coll, {"x": {"keys": ["id"]}}) is None
+    want = Counter()
+    for r in rows:
+        want[("insert", s1.seq, *r)] += 1
+    for r in up_rows:
+        want[("delete", s2.seq, *first[r[0]])] += 1
+        want[("insert", s2.seq, *r)] += 1
+    for r in merged.values():
+        if r[2] in (2, 5):
+            want[("delete", s3.seq, *r)] += 1
+    changes = t.changes_between(spark).collect()
+    assert all(r._partition == r.ptc for r in changes)
+    assert Counter(
+        (r._change_type, r._commit_seq, r.id, r.ptc, r.k2, r.v) for r in changes
+    ) == want
 
 
 def test_codebook_n_upper_bit_identical(spark):
