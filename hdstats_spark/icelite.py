@@ -50,9 +50,10 @@ import json
 import os
 import threading
 import time
+import unicodedata
 import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote
+from urllib.parse import quote, unquote
 
 try:  # POSIX fast path; object-store deployments have no flock(2)
     import fcntl
@@ -218,43 +219,49 @@ def _stamp_seq(parts: dict, prev_parts: dict | None, mode: str, seq: int) -> dic
 _LABEL_CHUNK = 64
 
 
-def _path_tail2(p: str) -> str:
-    """Last two path components — the per-file identity used for label
-    attribution: a part-file BASENAME alone repeats across the partition
-    dirs of one write job (same job uuid, same task index), but
+def _uri_tail2(p: str) -> str:
+    """Last two path components of ``p`` as Spark's scanned-file name
+    spells them: Hadoop's ``Path.toUri()``, i.e. java.net.URI's path quoting —
+    an ASCII character outside URI path characters becomes %XX, and a
+    non-ASCII one stays as it is unless it is a space or control
+    character (then its UTF-8 bytes become %XX).  Spark's own escapes in
+    partition directory names ('%3A', ...) are quoted again ('%253A').
+    A part-file basename alone repeats across the partition dirs of one
+    write job (same job uuid, same task index), but
     '<partition dir>/<basename>' is unique within a table."""
-    return "/".join(p.replace(os.sep, "/").rstrip("/").split("/")[-2:])
+    tail = "/".join(p.replace(os.sep, "/").rstrip("/").split("/")[-2:])
+    return "".join(
+        quote(c, safe="/;:@&=+$,!~*'()")
+        if c < "\x80" or unicodedata.category(c) in ("Zs", "Zl", "Zp", "Cc")
+        else c
+        for c in tail
+    )
 
 
 def _labelled_scan(reader, files: list[str], labels: dict[str, list]) -> DataFrame:
     """``reader.parquet(*files)`` plus one column per ``labels`` entry
     carrying the label of each row's own file (``labels[c][i]`` labels
     ``files[i]``; a list label becomes an array).  The one place rows are
-    tied to their files: a literal map from each file's ``_path_tail2`` to
-    its label, looked up by the tail of ``input_file_name()``.  That is a
-    URI, so a tail holding an escape is percent-decoded, with ``+``
-    protected because ``url_decode`` is form decoding — any file name maps,
-    and a plain one costs no decode per row.  Past
-    ``_LABEL_CHUNK`` files the scan is a union of one reader per chunk,
-    each with its own map.  Tails are unique by construction (every data
-    and key file sits under a uuid-named ``commit-``/``compact-``/
-    ``deletes-`` dir, and part names carry the write job's uuid), so a
-    repeat is an error."""
+    tied to their files: per label, a literal map from each file's
+    ``_uri_tail2`` to its label, looked up by the tail of
+    ``input_file_name()``, all in one projection.  That projection is
+    nondeterministic, so Spark keeps a join's inferred not-null filter on
+    a label above it and each row looks each label up once.  (A map to a
+    struct of all labels would look up once per row, but on 10 files its
+    literal costs ~45 ms more driver time than the second lookup costs on
+    110k rows.)  Past ``_LABEL_CHUNK`` files the scan is a union of one
+    reader per chunk, each with its own maps.  Tails are unique by
+    construction (every data and key file sits under a uuid-named
+    ``commit-``/``compact-``/``deletes-`` dir, and part names carry the
+    write job's uuid), so a repeat is an error."""
     from functools import reduce
 
     from pyspark.sql import functions as F
 
-    tails = [_path_tail2(p) for p in files]
+    tails = [_uri_tail2(p) for p in files]
     if len(set(tails)) != len(tails):
         raise ValueError(f"files with the same last two path components: {files}")
-    # input_file_name() is nondeterministic, so Spark shares no copy of an
-    # expression over it: the raw tail is selected once per row as __tail
-    parts = F.split(F.input_file_name(), "/")
-    raw = F.concat_ws("/", F.element_at(parts, -2), F.element_at(parts, -1))
-    t = F.col("__tail")
-    tail = F.when(
-        t.contains("%"), F.url_decode(F.replace(t, F.lit("+"), F.lit("%2B")))
-    ).otherwise(t)
+    tail = F.substring_index(F.input_file_name(), "/", -2)
 
     def lit(v):
         return F.array(*map(F.lit, v)) if isinstance(v, list) else F.lit(v)
@@ -271,12 +278,7 @@ def _labelled_scan(reader, files: list[str], labels: dict[str, list]) -> DataFra
             ).alias(c)
             for c, vs in labels.items()
         ]
-        frames.append(
-            reader.parquet(*files[chunk])
-            .select("*", raw.alias("__tail"))
-            .select("*", *cols)
-            .drop("__tail")
-        )
+        frames.append(reader.parquet(*files[chunk]).select("*", *cols))
     return reduce(DataFrame.unionByName, frames)
 
 
@@ -1559,14 +1561,16 @@ class IceliteTable:
         (delete key files are tiny — O(changed keys) — next to the data they
         mask; at 100 TB the anti join is a map-side hash probe, no shuffle
         of the data side), so a long upsert run adds one anti join, not one
-        per commit or per delete-equivalence class.  Each data file is
-        labelled with its class id and each key row is exploded to exactly
-        the class ids its delete file applies to (``_labelled_scan``), so
-        the join ON (key cols + class id) is row-for-row the per-class anti
-        join — a key only masks rows of classes its delete file is attached
-        to.  ``partition_of`` (file → partition value) adds a
-        ``_partition`` column.  With no pending deletes and no
-        ``partition_of`` this is the plain multi-file scan."""
+        per commit or per delete-equivalence class.  With more than one
+        class, each data file is labelled with its class id and each key
+        row is exploded to exactly the class ids its delete file applies to
+        (``_labelled_scan``), so the join ON (key cols + class id) is
+        row-for-row the per-class anti join — a key only masks rows of
+        classes its delete file is attached to.  With one class every key
+        masks every file, and the join is ON the key cols alone.
+        ``partition_of`` (file → partition value) adds a ``_partition``
+        column.  With no pending deletes and no ``partition_of`` this is
+        the plain multi-file scan."""
         from pyspark.sql import functions as F
 
         files = [p for fs in classes.values() for p in fs]
@@ -1577,23 +1581,28 @@ class IceliteTable:
                 by_cols.setdefault(tuple(dentries[p]["keys"]), {}).setdefault(
                     self._abs(p), []
                 ).append(ci)
+        cls = ["__cls"] if by_cols and len(classes) > 1 else []
         labels: dict[str, list] = {}
-        if by_cols:
+        if cls:
             labels["__cls"] = [ci for ci, fs in enumerate(classes.values()) for _ in fs]
         if partition_of is not None:
             labels["_partition"] = [partition_of[p] for p in files]
         if not labels:
-            return self._reader(spark, snap).parquet(*files)
-        df = _labelled_scan(self._reader(spark, snap), files, labels)
+            df = self._reader(spark, snap).parquet(*files)
+        else:
+            df = _labelled_scan(self._reader(spark, snap), files, labels)
         for cols, dmap in by_cols.items():
-            keys = (
-                _labelled_scan(spark.read, list(dmap), {"__cls": list(dmap.values())})
-                .select(*cols, "__cls")
-                .distinct()
-                .select(*cols, F.explode("__cls").alias("__cls"))
-            )
-            df = df.join(F.broadcast(keys), on=[*cols, "__cls"], how="left_anti")
-        return df.drop("__cls")
+            if cls:
+                keys = (
+                    _labelled_scan(spark.read, list(dmap), {"__cls": list(dmap.values())})
+                    .select(*cols, "__cls")
+                    .distinct()
+                    .select(*cols, F.explode("__cls").alias("__cls"))
+                )
+            else:
+                keys = spark.read.parquet(*dmap).select(*cols).distinct()
+            df = df.join(F.broadcast(keys), on=[*cols, *cls], how="left_anti")
+        return df.drop(*cls)
 
     def _empty(self, spark: SparkSession, snap: Snapshot) -> DataFrame:
         """A zero-row frame under ``snap``'s pinned schema: a LIMIT 0 scan of

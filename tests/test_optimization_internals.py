@@ -26,9 +26,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-# '+', ' ' and '%' each read differently once input_file_name()'s URI is
-# decoded naively
+# ' ' and '%' are spelled differently in input_file_name()'s URI than on
+# disk, and '+' is spelled the same but means a space to form decoding
 _ODD_VALUE = "a+b c%d"
+
+
+def test_uri_tail2_matches_hadoop_path(spark):
+    """The label map's keys must be spelled as input_file_name() spells
+    the file: Hadoop's Path.toUri(), for every printable ASCII character,
+    tab, and non-ASCII letters, spaces, controls and a surrogate pair."""
+    from hdstats_spark.icelite import _uri_tail2
+
+    chars = [chr(c) for c in range(0x20, 0x7F) if chr(c) != "/"]
+    chars += ["\t", "ü", "é", "\xa0", "\x85", " ", "　", "\U0001F600"]
+    for c in chars:
+        p = f"/data/pt=a{c}b%3A/part-0{c}.parquet"
+        uri = spark._jvm.org.apache.hadoop.fs.Path(p).toUri().toString()
+        assert _uri_tail2(p) == "/".join(uri.split("/")[-2:]), repr(c)
 
 
 def test_labelled_scan_paths_agree(spark, tmp_path):
